@@ -1,7 +1,5 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -70,19 +68,13 @@ object Generations {
     versionedPointers(fs, root) match {
       case gs if gs.nonEmpty => gs.max
       case _ =>
-        val legacy = new Path(s"$root/_current.json")
-        require(fs.exists(legacy),
-          s"no generation pointer under $root — not a generational layout " +
-            "(or a cutover crashed before its first commit); refusing to guess")
-        val in = fs.open(legacy)
-        val body =
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            StandardCharsets.UTF_8)
-          finally in.close()
-        body.trim match {
-          case LegacyPointerPattern(g) => g.toInt
-          case other => throw new IllegalArgumentException(
+        VersionedLayout.readFile(fs, new Path(s"$root/_current.json")) match {
+          case Some(LegacyPointerPattern(g)) => g.toInt
+          case Some(other) => throw new IllegalArgumentException(
             s"corrupt generation pointer under $root: $other")
+          case None => throw new IllegalArgumentException(
+            s"no generation pointer under $root — not a generational layout " +
+              "(or a cutover crashed before its first commit); refusing to guess")
         }
     }
   }
@@ -112,15 +104,9 @@ object Generations {
       s"non-monotonic generation commit under $root: pointer v$g would " +
         s"silently lose to existing v${existing.max} — cutovers only move " +
         "the pointer forward")
-    val tmp = new Path(s"$root/._current.v$g.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"generation":$g}""".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
     // a file of this name can only be a prior attempt at this same
     // commit (content is determined by the name) — safe to replace
-    if (fs.exists(p)) fs.delete(p, false)
-    require(fs.rename(tmp, p),
-      s"could not commit generation pointer under $root")
+    VersionedLayout.commitFile(spark, p, s"""{"generation":$g}""")
     versionedPointers(fs, root).filter(_ < g).foreach(o =>
       fs.delete(new Path(s"$root/_current.v$o.json"), false))
     val legacy = new Path(s"$root/_current.json")
@@ -168,10 +154,7 @@ object Generations {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new Path(genPath(root, g))),
       s"generation $g does not exist under $root")
-    val out = fs.create(p, true)
-    try out.write(s"""{"retired":$g}"""
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    VersionedLayout.commitFile(spark, p, s"""{"retired":$g}""")
   }
 
   /** Phase 2 of SAFE retirement: physically delete every tombstoned

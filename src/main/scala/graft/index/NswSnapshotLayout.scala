@@ -3,190 +3,95 @@ package graft.index
 import graft.core.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Versioned NSW graph layout — [[SnapshotLayout]]'s append-only
-  * batch discipline applied to the graph family, so BOTH persisted
-  * index families carry the as-of/rollback operational story:
+/** Versioned NSW graph layout: [[VersionedLayout]]'s append-only
+  * batch log applied to the graph family. The family's payload:
   *
-  *  - `vectors/batch_id=B/` — (vec_id, embedding) appended per batch
-  *    (batch 0 = the base corpus slice under the base graph build);
-  *  - `edges/batch_id=B/` — (src, dst): batch 0 is the full kNN
-  *    graph; batch B > 0 holds the beam-linked FORWARD edges of that
-  *    batch's upserts against the then-current head graph (the
-  *    addDelta contract — reverse reachability comes from the
-  *    traversal's undirected expansion, so appending forward edges
-  *    suffices);
-  *  - `tombstones/batch_id=B/` — deleted ids; SHARED manifest /
-  *    rollback machinery ([[SnapshotLayout]]'s helpers — the manifest
-  *    written last is the applied marker, replays skip whole).
+  *  - `vectors/batch_id=B/` — (vec_id, embedding, metadata…) per batch,
+  *    with no placement level;
+  *  - `edges/batch_id=B/` — (src, dst): the base batch holds the full
+  *    kNN graph; a later batch holds the beam-linked FORWARD edges of
+  *    its upserts against the then-current head graph (reverse
+  *    reachability comes from the traversal's undirected expansion).
   *
-  * AS-OF B: vectors reconstruct by the latest-event-wins window
-  * (tombstones hide until a later upsert revives); edges are every
-  * row with `batch_id ≤ B` whose BOTH endpoints are live at B (two
-  * semi-joins against the live set — a tombstoned node's edges
-  * disappear from survivors' adjacency without any file rewrite,
-  * the removeDelta semantics expressed as reconstruction instead of
-  * mutation). Append-only honesty note: a RE-ADDED id's pre-move
-  * edges remain in older batches and reappear at reconstruction —
-  * they reference live endpoints at stale positions, a bounded
-  * navigability (recall) effect identical in kind to the delta-drift
-  * the [[IndexMeta]] envelope already meters, never a correctness
-  * one (every visited node exact-rescored). Self-links from re-adds
-  * are filtered at link time.
-  *
-  * ROLLBACK = delete `batch_id > B` directories + restore the
-  * sidecar from B's manifest, exactly as the IVF twin — byte-
-  * identical serves afterwards (spec-pinned). */
-object NswSnapshotLayout {
+  * As of B the edges are every row with `batch_id ≤ B` whose BOTH
+  * endpoints are live at B, so a tombstoned node drops out of its
+  * survivors' adjacency without a file rewrite. A RE-ADDED id's
+  * pre-delete edges reappear at reconstruction: they reference live
+  * endpoints at stale positions, a bounded navigability effect (every
+  * visited node is exact-rescored), healed by compaction and by a
+  * cutover's clean graph rebuild.
+  */
+object NswSnapshotLayout extends VersionedLayout {
 
-  /** Initialize: base vectors + the base graph as batch `baseBatch`
-    * (0 for a standalone layout; a generation cutover passes the
-    * predecessor's head batch id — the IVF twin's contract). Metadata
-    * columns of `emb` (anything beyond vec_id/embedding) ride the
-    * stored rows — the filtered as-of serving shape; batches must
-    * then carry the same columns ([[applyBatch]] fails fast). */
+  protected def placement: Option[String] = None
+
+  protected def payloadRoots: Seq[String] = Seq("vectors", "edges")
+
+  protected def codeStage(sub: String): String = s"$sub/codes"
+
+  /** Initialize: base vectors + the base graph as batch `baseBatch`.
+    * Metadata columns of `emb` ride the stored rows, and batches must
+    * then carry them ([[applyBatch]] fails fast). */
   def init(emb: DataFrame, edges: DataFrame, path: String,
-      baseBatch: Long = 0L): Unit = {
-    val spark = emb.sparkSession
-    val metaCols = emb.columns.toSeq
-      .filterNot(Set("vec_id", "embedding", "batch_id"))
-    emb.select(col("vec_id") +: col("embedding") +: metaCols.map(col): _*)
-      .withColumn("batch_id", lit(baseBatch))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(s"$path/vectors")
-    edges.select(col("src"), col("dst"))
-      .withColumn("batch_id", lit(baseBatch))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(s"$path/edges")
-    val n = spark.read.parquet(s"$path/vectors").count()
-    IndexMeta.write(spark, path, IndexMeta.Meta(n, 0L))
-    SnapshotLayout.writeManifest(spark, path, baseBatch, IndexMeta.Meta(n, 0L))
+      baseBatch: Long = 0L): Unit =
+    initLayout(emb.sparkSession, path, baseBatch) {
+      val metaCols = emb.columns.toSeq
+        .filterNot(Set("vec_id", "embedding", "batch_id"))
+      emb.select(col("vec_id") +: col("embedding") +: metaCols.map(col): _*)
+        .withColumn("batch_id", lit(baseBatch))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(s"$path/vectors")
+      edges.select(col("src"), col("dst"))
+        .withColumn("batch_id", lit(baseBatch))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(s"$path/edges")
+    }
+
+  /** Beam-link the upserts against the current HEAD graph (the
+    * batch's tombstones already landed, so links never target
+    * just-deleted nodes), then append forward edges and vectors. */
+  protected def appendUpserts(spark: SparkSession, path: String, batchId: Long,
+      rows: DataFrame): Unit = {
+    val (headVecs, headEdges) = asOfGraph(spark, path, Long.MaxValue)
+    val linked = NswIndex.beamSearch(
+        headVecs.select(col("vec_id"), col("embedding")), headEdges,
+        rows.select(col("vec_id").as("q_id"), col("embedding").as("q_vec")),
+        k = NswIndex.degreeFor(spark, headVecs.count()))
+      .select(col("q_id").as("src"), col("neighbor_id").as("dst"))
+      // a re-added id finds its own still-live old row — never self-link
+      .filter(col("src") =!= col("dst"))
+      .localCheckpoint(true)
+    // the walk checkpointed its own hops and `linked` is pinned — the
+    // head reconstruction checkpoint is garbage now
+    graft.core.Checkpoints.free(headVecs)
+    linked.withColumn("batch_id", lit(batchId))
+      .write.mode("append").partitionBy("batch_id").parquet(s"$path/edges")
+    appendRows(spark, path, rows.withColumn("batch_id", lit(batchId)))
+    graft.core.Checkpoints.free(linked)
   }
 
-  /** Apply one batch append-only: tombstones, then beam-link the
-    * upserts against the current HEAD graph (deletes-before-upserts:
-    * the tombstones land first, so links never target just-deleted
-    * nodes), then vectors + forward edges under `batch_id`, sidecar
-    * bump, manifest LAST. Idempotent per batch id via the manifest
-    * marker. */
-  def applyBatch(spark: SparkSession, path: String, batchId: Long,
-      upserts: DataFrame, deletes: DataFrame): Unit = {
-    repairCompaction(spark, path)
-    // manifest marker + compaction-floor guard, exactly as the IVF
-    // twin: an id at or below the oldest surviving manifest was
-    // applied before compaction and must skip, or its re-appended
-    // rows would sit below the consolidated base with their
-    // tombstones gone (ghost resurrection at head)
-    if (SnapshotLayout.readManifest(spark, path, batchId).isDefined ||
-        SnapshotLayout.manifestIds(spark, path).headOption.exists(batchId <= _))
-      return
-    // a meta-bearing layout's batches must carry its metadata — the
-    // IVF twin's fail-fast discipline (meta-less rows would be
-    // invisible to every filtered as-of serve). Validation runs
-    // BEFORE the tombstone write so a rejected batch is
-    // side-effect-free (its deletes must not apply at head)
-    val storedCols = spark.read.parquet(s"$path/vectors").columns.toSeq
-    val keep = storedCols.filterNot(Set("batch_id"))
-    // one counting pass per side serves emptiness checks AND the
-    // drift gauge below — the IVF twin's round-17 job-count trim
-    val nUps = upserts.count()
-    val nDels = deletes.count()
-    val hasUpserts = nUps > 0
-    if (hasUpserts) {
-      val missing = keep.filterNot(upserts.columns.contains)
-      require(missing.isEmpty,
-        s"versioned batch missing layout columns ${missing.mkString(", ")}: " +
-          "a meta-bearing layout's batches must carry its metadata")
-    }
-    if (nDels > 0)
-      deletes.select(col("vec_id")).withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id")
-        .parquet(s"$path/tombstones")
-    if (hasUpserts) {
-      val (headVecs, headEdges) = asOfGraph(spark, path, Long.MaxValue)
-      val queries = upserts
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val linked = NswIndex.beamSearch(
-          headVecs.select(col("vec_id"), col("embedding")), headEdges, queries,
-          k = NswIndex.degreeFor(spark, headVecs.count()))
-        .select(col("q_id").as("src"), col("neighbor_id").as("dst"))
-        // a re-added id finds its own still-live old row — never
-        // self-link
-        .filter(col("src") =!= col("dst"))
-        .localCheckpoint(true)
-      // the walk materialized its own hop checkpoints and `linked` is
-      // pinned — the head reconstruction checkpoint is now garbage
-      // (the sample_kcenter free discipline)
-      graft.core.Checkpoints.free(headVecs)
-      linked.withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id").parquet(s"$path/edges")
-      val rows = upserts.select(keep.map(col): _*)
-        .withColumn("batch_id", lit(batchId))
-      val subs = IvfIndex.pqSubdirs(spark, path)
-      if (subs.isEmpty)
-        rows.write.mode("append").partitionBy("batch_id")
-          .parquet(s"$path/vectors")
-      else {
-        // a graph layout carrying PQ sidecars ([[initPq]]) encodes
-        // every batch with the FROZEN codebooks in the same versioned
-        // batch scheme — the IVF twin's discipline: a delta row with
-        // no code is invisible to the ADC walk's scoring scan
-        val mat = rows.localCheckpoint(true)
-        try {
-          mat.write.mode("append").partitionBy("batch_id")
-            .parquet(s"$path/vectors")
-          IvfIndex.encodeDeltaPq(spark, path, mat,
-            partitionCols = Seq("batch_id"))
-        } finally graft.core.Checkpoints.free(mat)
-      }
-      graft.core.Checkpoints.free(linked)
-    }
-    val drift = nUps + nDels
-    IndexMeta.bumpDelta(spark, path, drift)
-    val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(0L, 0L))
-    SnapshotLayout.writeManifest(spark, path, batchId, meta)
-    // the IVF twin's discipline: an applied batch invalidates every
-    // memo keyed under this layout (head-addressed fine alphabets
-    // would otherwise survive the append with a constant key)
-    graft.store.IndexVersions.bump(path)
+  /** The live vectors and live edges as of `upTo`: the edge restriction
+    * is idempotent, so serves at ≥ `upTo` stay identical — except that
+    * an id dead at `upTo` and re-added later loses its stale pre-delete
+    * edges (the healed direction; SnapshotSpec pins both cases). */
+  protected def stagePayload(spark: SparkSession, path: String, upTo: Long)(
+      stage: (String, DataFrame) => Unit): Unit = {
+    val (live, edges) = asOfGraph(spark, path, upTo)
+    stage("vectors", live)
+    stage("edges", edges)
+    graft.core.Checkpoints.free(live)
   }
 
-  /** Live (vec_id, embedding) as of `batchId` — the latest-event
-    * window over upsert rows and tombstones. */
-  def asOfVectors(spark: SparkSession, path: String, batchId: Long): DataFrame = {
-    // read path self-heals a crashed compaction commit (one FS check)
-    repairCompaction(spark, path)
-    val stored = spark.read.parquet(s"$path/vectors")
-    // a meta-bearing layout's metadata rides the reconstruction — the
-    // filtered as-of serve evaluates its predicate on these rows
-    val metaFields = stored.schema.fields.toSeq
-      .filterNot(f => Set("vec_id", "embedding", "batch_id")(f.name))
-    val ups = stored
-      .filter(col("batch_id") <= batchId)
-      .select(Seq(col("vec_id"), col("embedding")) ++
-        metaFields.map(f => col(f.name)) ++
-        Seq(col("batch_id"), lit(1).as("is_upsert")): _*)
-    val tombRoot = new Path(s"$path/tombstones")
-    val fs = tombRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasTombs = fs.exists(tombRoot) &&
-      fs.listStatus(tombRoot).exists(d =>
-        d.isDirectory && SnapshotLayout.batchDirId(d.getPath.getName).isDefined)
-    val tombs =
-      if (!hasTombs) ups.limit(0)
-      else spark.read.parquet(s"$path/tombstones")
-        .filter(col("batch_id") <= batchId)
-        .select(Seq(col("vec_id"),
-          lit(null).cast("array<float>").as("embedding")) ++
-          metaFields.map(f => lit(null).cast(f.dataType).as(f.name)) ++
-          Seq(col("batch_id"), lit(0).as("is_upsert")): _*)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("batch_id").desc, col("is_upsert").desc)
-    ups.unionByName(tombs)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1 && col("is_upsert") === 1)
-      .select(Seq(col("vec_id"), col("embedding")) ++
-        metaFields.map(f => col(f.name)): _*)
-  }
+  /** A cutover rebuilds the graph from the live set, which heals every
+    * append-only wart at once. */
+  protected def refit(spark: SparkSession, live: DataFrame, next: String,
+      baseBatch: Long): Unit =
+    init(live, NswIndex.buildEdgesLsh(live.select(col("vec_id"), col("embedding"))),
+      next, baseBatch)
+
+  /** Live (vec_id, embedding, metadata…) as of `batchId`. */
+  def asOfVectors(spark: SparkSession, path: String, batchId: Long): DataFrame =
+    asOfLive(spark, path, batchId)
 
   /** (live vectors, live edges) as of `batchId`: edges of batches
     * ≤ B restricted to live endpoints on both sides. The live set is
@@ -217,24 +122,11 @@ object NswSnapshotLayout {
 
   // ---- versioned compressed tier (PQ sidecar over the graph log) -------
 
-  /** Add a PQ sidecar to the versioned GRAPH layout: codebooks
-    * trained once (frozen — the centroid discipline on the compressed
-    * tier) and every stored row encoded under the same `batch_id=`
-    * scheme as the raw rows. Batches applied AFTER this call are
-    * encoded by [[applyBatch]] automatically; calling at [[init]]
-    * time gives full-history coverage, calling later back-fills
-    * everything present (the encode pass reads all batches). */
-  def initPq(spark: SparkSession, path: String,
-      m: Int = PqCodebooks.defaultM, codes: Int = PqCodebooks.defaultCodes,
-      seed: Long = 42L, rotate: Boolean = false, sub: String = "pq"): Unit =
-    IvfIndex.persistPq(spark, path, m, codes, seed, rotate, sub,
-      partitionCols = Seq("batch_id"))
-
   /** ADC beam walk served AS OF `batchId` from the versioned code
     * sidecar — the graph family's compressed tier composed with time
-    * travel. CHEAPER than the raw [[searchAsOf]] in exactly the IVF
-    * twin's two ways, plus the walk's own: the merge-on-read argmax
-    * runs over KEYS ([[SnapshotLayout.asOfWinners]]), the live-edge
+    * travel. CHEAPER than the raw [[searchAsOf]] in the same two ways
+    * as the IVF ADC serve, plus the walk's own: the merge-on-read argmax
+    * runs over KEYS ([[asOfWinners]]), the live-edge
     * restriction semi-joins those keys (no embedding reconstruction
     * at all before the rerank), every superstep scores m-byte codes
     * instead of full-width floats, and the exact rerank
@@ -247,7 +139,7 @@ object NswSnapshotLayout {
       pred: Option[org.apache.spark.sql.Column], k: Int, rerank: Int,
       beamW: Int, sub: String): DataFrame = {
     repairCompaction(spark, path)
-    val winners = SnapshotLayout.asOfWinners(spark, path, batchId)
+    val winners = asOfWinners(spark, path, batchId)
       .localCheckpoint(true)
     // live code set, re-read per superstep → checkpointed once; the
     // mirrored metadata rides it so a filtered walk's predicate
@@ -318,55 +210,21 @@ object NswSnapshotLayout {
     searchAsOfPqImpl(spark, path, batchId, queries, None, k, rerank, beamW,
       sub)
 
-  /** ADC beam walk routed across generations — the graph twin of
-    * [[SnapshotLayout.searchAsOfPqGen]]: the compressed tier survives
-    * a cutover ([[newGeneration]] re-inits each sidecar at its
-    * configured geometry on the successor). */
+  /** The cutover carries each code sidecar, so the ADC walk survives it. */
   def searchAsOfPqGen(spark: SparkSession, root: String, batchId: Long,
       queries: DataFrame, k: Int = 5, rerank: Int = NswIndex.pqRerank,
       beamW: Int = NswIndex.pqBeamWidth, sub: String = "pq"): DataFrame =
-    searchAsOfPq(spark, Generations.route(spark, root, batchId), batchId,
-      queries, k, rerank, beamW, sub)
+    routed(spark, root, batchId)(
+      searchAsOfPq(spark, _, batchId, queries, k, rerank, beamW, sub))
 
-  /** The filtered ADC walk routed across generations — metadata rides
-    * the cutover re-fit and the carried sidecar's fresh encode, so
-    * the filtered-quantized mode survives a cutover too. */
+  /** Metadata rides the cutover's rebuild and the carried sidecar's
+    * fresh encode, so the filtered ADC walk survives it too. */
   def searchAsOfPqFilteredGen(spark: SparkSession, root: String,
       batchId: Long, queries: DataFrame, pred: org.apache.spark.sql.Column,
       k: Int = 10, rerank: Int = NswIndex.pqRerank,
       beamW: Int = NswIndex.pqBeamWidth, sub: String = "pq"): DataFrame =
-    searchAsOfPqFiltered(spark, Generations.route(spark, root, batchId),
-      batchId, queries, pred, k, rerank, beamW, sub)
-
-  /** Public CDC read over a versioned GRAPH layout — the NSW twin of
-    * [[SnapshotLayout.asOfDiff]]: the change feed is a function of
-    * the event log, so the shared differ runs over this family's
-    * vector reconstructions (edges are derived state and never part
-    * of the payload a consumer diffs). Endpoints below the compaction
-    * floor are refused — the truncated log cannot reconstruct them. */
-  def asOfDiff(spark: SparkSession, path: String, fromBatch: Long,
-      toBatch: Long): DataFrame = {
-    repairCompaction(spark, path)
-    SnapshotLayout.requireAnswerable(spark, path, fromBatch)
-    SnapshotLayout.requireAnswerable(spark, path, toBatch)
-    SnapshotLayout.diffFingerprints(
-      SnapshotLayout.asOfFingerprints(spark, path, fromBatch, nswNonPayload, "b_fp"),
-      SnapshotLayout.asOfFingerprints(spark, path, toBatch, nswNonPayload, "a_fp"))
-  }
-
-  /** This family has no physical cluster_id, so only vec_id is
-    * structural — a user metadata column named cluster_id is payload
-    * here and its changes must ride the feed. */
-  private[index] val nswNonPayload = Set("vec_id")
-
-  /** Merge-on-read debt of a versioned GRAPH layout — the NSW twin of
-    * [[SnapshotLayout.layoutDebt]]: this family's crash repair first
-    * (the two compaction plan formats differ), then the shared
-    * family-neutral key-only scan. */
-  def layoutDebt(spark: SparkSession, path: String): DataFrame = {
-    repairCompaction(spark, path)
-    SnapshotLayout.debtScan(spark, path)
-  }
+    routed(spark, root, batchId)(
+      searchAsOfPqFiltered(spark, _, batchId, queries, pred, k, rerank, beamW, sub))
 
   /** Filtered beam serve from the as-of graph — the graph twin of
     * [[SnapshotLayout.searchAsOfFiltered]]: the metadata a
@@ -383,168 +241,6 @@ object NswSnapshotLayout {
     val out = NswIndex.searchFiltered(vecs, edges, queries, pred, metaCols, k)
     graft.core.Checkpoints.free(vecs)
     out
-  }
-
-  /** Compact history ≤ `upTo` into one consolidated base — the IVF
-    * twin's contract on the graph: the as-of live VECTORS and live
-    * EDGES (both endpoints alive) are materialized once and rewritten
-    * under `batch_id = upTo`; older vector/edge/tombstone directories
-    * and manifests below the point are removed. Serves and rollbacks
-    * at ≥ upTo are identical before/after (the edge restriction is
-    * idempotent: re-restricting the already-live edge set changes
-    * nothing) — EXCEPT for an id dead at `upTo` that a LATER batch
-    * re-adds: pre-compaction its pre-delete edges reappear at
-    * reconstruction once the re-add revives the id (the documented
-    * append-only wart), post-compaction they are physically gone, so
-    * an as-of serve past the re-add batch can navigate differently.
-    * That divergence is the HEALED direction — stale-position edges
-    * removed, every visited node still exact-rescored, a bounded
-    * recall effect and never a score error — but it does mean the
-    * identical-serve claim holds unconditionally only for histories
-    * with no post-upTo re-add of an id tombstoned at ≤ upTo
-    * (SnapshotSpec pins both the identity and the healed re-add
-    * case). */
-  /** Crash-safe via [[SnapshotLayout]]'s stage-then-commit protocol
-    * applied to this layout's two roots: the consolidated live
-    * vectors AND live edges stage under `_compact_tmp` while the
-    * layout is untouched, the plan marker is the commit point, and
-    * the commit swaps each root's `batch_id ≤ upTo` dirs for its
-    * staged consolidated dir with an atomic rename gated on the
-    * stage dir's existence — so a crash anywhere is finished
-    * idempotently by [[repairCompaction]], which every mutation and
-    * reconstruction entry point runs first. */
-  def compact(spark: SparkSession, path: String, upTo: Long): Unit = {
-    repairCompaction(spark, path)
-    // the IVF twin's guard: an unmanifested compaction point would
-    // truncate every manifest below it and strand rollback, crash
-    // repair, and the replay floor
-    require(SnapshotLayout.readManifest(spark, path, upTo).isDefined,
-      s"compaction point batch $upTo has no manifest under $path/_snapshots " +
-        "(never applied, or crashed mid-apply) — refusing to truncate " +
-        "history below an unrestorable batch")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (live, liveEdges) = asOfGraph(spark, path, upTo)
-    val liveV = live.withColumn("batch_id", lit(upTo)).localCheckpoint(true)
-    val liveE = liveEdges.withColumn("batch_id", lit(upTo)).localCheckpoint(true)
-    graft.core.Checkpoints.free(live)
-    fs.delete(new Path(s"$path/_compact_tmp"), true)
-    liveV.write.mode("overwrite").partitionBy("batch_id")
-      .parquet(s"$path/_compact_tmp/vectors")
-    liveE.write.mode("overwrite").partitionBy("batch_id")
-      .parquet(s"$path/_compact_tmp/edges")
-    graft.core.Checkpoints.free(liveV)
-    graft.core.Checkpoints.free(liveE)
-    // code sidecars fold with the raw rows (the IVF twin's rule: a
-    // compacted layout whose ADC tier still pays — or mis-resolves —
-    // the folded history would be wrong); live code rows stage under
-    // the same uniform path scheme as the two base roots
-    IvfIndex.pqSubdirs(spark, path).foreach { sub =>
-      SnapshotLayout.asOfCodes(spark, path, upTo, sub)
-        .withColumn("batch_id", lit(upTo))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$path/_compact_tmp/$sub/codes")
-    }
-    // the plan's slot records WHICH roots actually staged a
-    // consolidated dir (0=vectors, 1=edges, 2+=code sidecars in
-    // pqSubdirs' sorted order — stable across crashes because
-    // compaction never touches codebooks): a root whose live set at
-    // upTo is EMPTY writes no batch_id dir, and the commit must still
-    // drop its old dirs — without the record, "stage dir absent"
-    // would be ambiguous between already-swapped and staged-empty
-    val staged = allRoots(spark, path).zipWithIndex.collect {
-      case (sub, i) if fs.exists(
-        new Path(s"$path/_compact_tmp/$sub/batch_id=$upTo")) => i
-    }
-    SnapshotLayout.writeCompactPlan(fs, path, upTo, staged)
-    commitCompaction(spark, path, upTo, staged)
-  }
-
-  /** This layout's batch-partitioned roots: the two base tables plus
-    * every code sidecar, in a deterministic order the compaction
-    * plan's slots index into. */
-  private def allRoots(spark: SparkSession, path: String): Seq[String] =
-    Seq("vectors", "edges") ++
-      IvfIndex.pqSubdirs(spark, path).map(sub => s"$sub/codes")
-
-  /** Finish (or abandon) an in-flight compaction commit — the IVF
-    * twin's repair contract on this layout's roots. */
-  private[graft] def repairCompaction(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$path/_compact_tmp"))) return
-    SnapshotLayout.readCompactPlan(fs, path) match {
-      case None => fs.delete(new Path(s"$path/_compact_tmp"), true)
-      case Some((upTo, staged)) => commitCompaction(spark, path, upTo, staged)
-    }
-  }
-
-  private def commitCompaction(spark: SparkSession, path: String,
-      upTo: Long, staged: Seq[Int]): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    allRoots(spark, path).zipWithIndex.foreach { case (sub, i) =>
-      val root = new Path(s"$path/$sub")
-      def dropLe(): Unit =
-        if (fs.exists(root))
-          fs.listStatus(root).filter(_.isDirectory)
-            .filter(d => SnapshotLayout.batchDirId(d.getPath.getName).exists(_ <= upTo))
-            .foreach(d => fs.delete(d.getPath, true))
-      val stage = new Path(s"$path/_compact_tmp/$sub/batch_id=$upTo")
-      if (!staged.contains(i)) dropLe() // staged-empty root: old rows all dead
-      else if (fs.exists(stage)) {      // not yet swapped (re-runs skip)
-        dropLe()
-        if (!fs.exists(root)) fs.mkdirs(root)
-        fs.rename(stage, new Path(s"$path/$sub/batch_id=$upTo"))
-      }
-    }
-    val tombRoot = new Path(s"$path/tombstones")
-    if (fs.exists(tombRoot)) {
-      fs.listStatus(tombRoot).filter(_.isDirectory)
-        .filter(d => SnapshotLayout.batchDirId(d.getPath.getName).exists(_ <= upTo))
-        .foreach(d => fs.delete(d.getPath, true))
-      if (!fs.listStatus(tombRoot).exists(_.isDirectory))
-        fs.delete(tombRoot, true)
-    }
-    SnapshotLayout.manifestIds(spark, path).filter(_ < upTo).foreach { id =>
-      fs.delete(new Path(s"$path/_snapshots/batch-$id.json"), false)
-    }
-    fs.delete(new Path(s"$path/_compact_tmp"), true)
-    graft.store.IndexVersions.bump(path)
-  }
-
-  /** Roll back to `batchId` — the IVF twin's contract: later batch
-    * directories deleted (vectors, edges, tombstones), sidecar
-    * restored from the target's manifest. */
-  def rollback(spark: SparkSession, path: String, batchId: Long): Unit = {
-    repairCompaction(spark, path)
-    // same guard as the IVF twin: no manifest → nothing restorable →
-    // deleting later batches would destroy the index, not roll it back
-    require(SnapshotLayout.readManifest(spark, path, batchId).isDefined,
-      s"rollback target batch $batchId has no manifest under $path/_snapshots " +
-        "(compacted away, never applied, or crashed mid-apply) — refusing to " +
-        "delete newer batches with no restorable target")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a rolled-back batch's CODES die with its raw rows — the IVF
-    // twin's rule (a surviving stale code row would keep feeding the
-    // ADC walk candidates whose raw rows are gone)
-    (Seq("vectors", "edges", "tombstones") ++
-        IvfIndex.pqSubdirs(spark, path).map(sub => s"$sub/codes"))
-      .foreach { sub =>
-      val root = new Path(s"$path/$sub")
-      if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory)
-          .filter(d => SnapshotLayout.batchDirId(d.getPath.getName).exists(_ > batchId))
-          .foreach(d => fs.delete(d.getPath, true))
-    }
-    SnapshotLayout.manifestIds(spark, path).filter(_ > batchId).foreach { id =>
-      fs.delete(new Path(s"$path/_snapshots/batch-$id.json"), false)
-    }
-    SnapshotLayout.readManifest(spark, path, batchId).foreach(m =>
-      IndexMeta.write(spark, path, m))
-    SnapshotLayout.writeRollbackMarker(spark, path, batchId)
-    graft.store.IndexVersions.bump(path)
   }
 
   /** `nsw_search_asof`: the graph layout's as-of/rollback contract as
@@ -626,7 +322,7 @@ object NswSnapshotLayout {
     val headAfter = searchAsOf(spark, path, Long.MaxValue, queries)
     val identical = SnapshotLayout.serveDiffCount(asof2, headAfter, "n_diff")
     val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(-1L, -1L))
-    val manifest = SnapshotLayout.readManifest(spark, path, 2L)
+    val manifest = readManifest(spark, path, 2L)
       .getOrElse(IndexMeta.Meta(-2L, -2L))
     val globals = tombOk.crossJoin(asof1Ok).crossJoin(identical)
       .select(
@@ -679,8 +375,7 @@ object NswSnapshotLayout {
     * the walks' inputs is strictly stronger and pays no walk. */
   private def graphStateAt(spark: SparkSession, path: String,
       batchId: Long): (DataFrame, DataFrame) = {
-    val fps = SnapshotLayout.asOfFingerprints(spark, path, batchId,
-      nswNonPayload, "fp").localCheckpoint(true)
+    val fps = asOfFingerprints(spark, path, batchId, "fp").localCheckpoint(true)
     val (live, edges) = asOfGraph(spark, path, batchId)
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     graft.core.Checkpoints.free(live)
@@ -726,9 +421,9 @@ object NswSnapshotLayout {
       val root = new Path(s"$path/$sub")
       if (!fs.exists(root)) Set.empty
       else fs.listStatus(root).filter(_.isDirectory)
-        .flatMap(d => SnapshotLayout.batchDirId(d.getPath.getName)).toSet
+        .flatMap(d => batchDirId(d.getPath.getName)).toSet
     }
-    val manifests = SnapshotLayout.manifestIds(spark, path)
+    val manifests = manifestIds(spark, path)
     val guardOk =
       try { rollback(spark, path, 1L); false }
       catch { case _: IllegalArgumentException => true }
@@ -872,7 +567,7 @@ object NswSnapshotLayout {
       .agg((count(when(!$"ok", 1)) === 0L &&
         count(lit(1)) === queries.count()).as("filtered_k_legal"))
       .localCheckpoint(true)
-    val liveCodes2 = SnapshotLayout.asOfCodes(spark, path, 2L)
+    val liveCodes2 = asOfCodes(spark, path, 2L)
       .localCheckpoint(true)
     val nLive2 = asOfVectors(spark, path, 2L).count()
     val coverOk = liveCodes2.count() == nLive2 &&
@@ -888,7 +583,7 @@ object NswSnapshotLayout {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def codeBatchDirs(): Set[Long] =
       fs.listStatus(new Path(s"$path/pq/codes")).filter(_.isDirectory)
-        .flatMap(d => SnapshotLayout.batchDirId(d.getPath.getName)).toSet
+        .flatMap(d => batchDirId(d.getPath.getName)).toSet
     val boundedOk = codeBatchDirs().forall(_ >= 2L)
     rollback(spark, path, 2L)
     val prunedOk = codeBatchDirs().forall(_ <= 2L)
@@ -916,126 +611,25 @@ object NswSnapshotLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  // ---- generation lifecycle (the IVF twin's contract on the graph) ----
+  // ---- generation lifecycle: routed serves (the cutover is the core's) --
 
   /** Initialize a GENERATIONAL graph root: base graph as generation 1. */
-  def initGen(emb: DataFrame, edges: DataFrame, root: String): Unit = {
-    init(emb, edges, Generations.genPath(root, 1))
-    Generations.writePointer(emb.sparkSession, root, 1)
-  }
+  def initGen(emb: DataFrame, edges: DataFrame, root: String): Unit =
+    initGenWith(emb.sparkSession, root)(init(emb, edges, _))
 
-  /** Cut over to a fresh generation: rebuild the GRAPH from the
-    * current generation's head reconstruction into `generation=N+1`
-    * (base batch = the predecessor's head batch id), atomic pointer
-    * swap, old generation readable for as-of — the drift-envelope
-    * action on the graph family. The rebuild also heals every
-    * append-only wart at once: stale-position edges of re-added ids
-    * and beam-link drift both vanish, because the successor's edges
-    * come from a clean [[NswIndex.buildEdgesLsh]] over the live set. */
-  def newGeneration(spark: SparkSession, root: String): Int = {
-    val g = Generations.current(spark, root)
-    val cur = Generations.genPath(root, g)
-    repairCompaction(spark, cur)
-    val headId = SnapshotLayout.manifestIds(spark, cur).last
-    val live = asOfVectors(spark, cur, Long.MaxValue).localCheckpoint(true)
-    // the IVF twin's guard: an all-deleted head has nothing to rebuild
-    if (live.isEmpty) {
-      graft.core.Checkpoints.free(live)
-      throw new IllegalArgumentException(
-        s"generation $g's head live set under $root is empty — nothing to " +
-          "re-fit; a cutover of an emptied index is an operator decision " +
-          "(drop the root), not a rebuild")
-    }
-    val next = Generations.genPath(root, g + 1)
-    val fs = new Path(next)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(next), true) // a crashed prior cutover's garbage
-    init(live,
-      NswIndex.buildEdgesLsh(live.select(col("vec_id"), col("embedding"))),
-      next, baseBatch = headId)
-    graft.core.Checkpoints.free(live)
-    // PQ sidecars carry over at their configured geometry (the IVF
-    // twin's refreshPqSidecars discipline: recovered from the stored
-    // codebooks, re-fit on the successor at the default seed)
-    IvfIndex.pqSubdirs(spark, cur).foreach { sub =>
-      val books = IvfIndex.readCodebooks(spark, cur, sub)
-      require(books.nonEmpty && books.head.nonEmpty,
-        s"sidecar $sub has no codebooks under $cur — cannot carry its " +
-          "geometry across the generation cutover")
-      initPq(spark, next, m = books.length, codes = books.head.length,
-        rotate = IvfIndex.readRotation(spark, cur, sub).isDefined, sub = sub)
-    }
-    Generations.writePointer(spark, root, g + 1)
-    g + 1
-  }
+  def asOfVectorsGen(spark: SparkSession, root: String, batchId: Long): DataFrame =
+    routed(spark, root, batchId)(asOfVectors(spark, _, batchId))
 
-  /** Apply a maintenance batch to the CURRENT generation (ids at or
-    * below its base are replays and skip — the floor discipline). */
-  def applyBatchGen(spark: SparkSession, root: String, batchId: Long,
-      upserts: DataFrame, deletes: DataFrame): Unit =
-    applyBatch(spark,
-      Generations.genPath(root, Generations.current(spark, root)),
-      batchId, upserts, deletes)
-
-  /** As-of vector reconstruction routed across generations. */
-  def asOfVectorsGen(spark: SparkSession, root: String,
-      batchId: Long): DataFrame =
-    asOfVectors(spark, Generations.route(spark, root, batchId), batchId)
-
-  /** Beam serve routed across generations. */
   def searchAsOfGen(spark: SparkSession, root: String, batchId: Long,
       queries: DataFrame, k: Int = 5): DataFrame =
-    searchAsOf(spark, Generations.route(spark, root, batchId), batchId,
-      queries, k)
+    routed(spark, root, batchId)(searchAsOf(spark, _, batchId, queries, k))
 
-  /** PRE-filter beam serve routed across generations — the graph
-    * family's filtered mode survives a cutover (metadata rides the
-    * successor's vectors; the rebuilt edge set is label-independent,
-    * exactly like every graph layout). */
+  /** Metadata rides the successor's vectors and the rebuilt edge set is
+    * label-independent, so the filtered mode survives a cutover. */
   def searchAsOfFilteredGen(spark: SparkSession, root: String, batchId: Long,
       queries: DataFrame, pred: org.apache.spark.sql.Column,
       k: Int = 10): DataFrame =
-    searchAsOfFiltered(spark, Generations.route(spark, root, batchId),
-      batchId, queries, pred, k)
-
-  /** CDC routed across generations — the IVF twin's contract with
-    * this family's payload set. */
-  def asOfDiffGen(spark: SparkSession, root: String, fromBatch: Long,
-      toBatch: Long): DataFrame = {
-    def side(batchId: Long, as: String): DataFrame = {
-      val p = Generations.route(spark, root, batchId)
-      repairCompaction(spark, p)
-      SnapshotLayout.requireAnswerable(spark, p, batchId)
-      SnapshotLayout.asOfFingerprints(spark, p, batchId, nswNonPayload, as)
-    }
-    SnapshotLayout.diffFingerprints(side(fromBatch, "b_fp"),
-      side(toBatch, "a_fp"))
-  }
-
-  /** Rollback within the CURRENT generation only — the IVF twin's
-    * cross-generation refusal. */
-  def rollbackGen(spark: SparkSession, root: String, batchId: Long): Unit = {
-    val g = Generations.current(spark, root)
-    val p = Generations.genPath(root, g)
-    val floor = SnapshotLayout.manifestIds(spark, p).headOption
-    require(floor.exists(batchId >= _),
-      s"rollback across a generation boundary refused: batch $batchId " +
-        s"predates generation $g's base/floor ${floor.getOrElse(-1L)} under " +
-        s"$root — a cutover is not reversible by rollback (older " +
-        "generations stay readable via as-of)")
-    rollback(spark, p, batchId)
-  }
-
-  /** Per-generation debt gauge — this family's repair per generation,
-    * then the shared scan ([[SnapshotLayout.layoutDebtGen]]'s shape). */
-  def layoutDebtGen(spark: SparkSession, root: String): DataFrame = {
-    val cur = Generations.current(spark, root)
-    Generations.list(spark, root).map { g =>
-      layoutDebt(spark, Generations.genPath(root, g))
-        .withColumn("generation", lit(g.toLong))
-        .withColumn("is_current", lit(g == cur))
-    }.reduce(_ unionByName _)
-  }
+    routed(spark, root, batchId)(searchAsOfFiltered(spark, _, batchId, queries, pred, k))
 
   /** `nsw_generation`: the graph family's cutover contract —
     * `ivf_generation`'s grid (including `retired_refuses`: drop
@@ -1093,8 +687,7 @@ object NswSnapshotLayout {
       initPq(spark, gen1, m = 4, codes = 8)
       // pre-cutover as-of-1 state, CAPTURED (checkpoint) so the
       // post-cutover comparison cannot silently read post-cutover files
-      val asof1Before = SnapshotLayout
-        .asOfFingerprints(spark, gen1, 1L, nswNonPayload, "fp")
+      val asof1Before = asOfFingerprints(spark, gen1, 1L, "fp")
         .localCheckpoint(true)
       // fresh-build identity on the successor's base: vectors are the
       // head live set (the boundary fingerprint diff below) and edges a
@@ -1129,9 +722,9 @@ object NswSnapshotLayout {
       val matchesFresh = SnapshotLayout.rowSetDiffCount(
         freshEdges.select($"src", $"dst"), storedEdges, "n_edges_diff")
         .collect()(0).getLong(0) == 0L
-      val boundaryIdentical = SnapshotLayout.diffFingerprints(
-          SnapshotLayout.asOfFingerprints(spark, gen1, 2L, nswNonPayload, "b_fp"),
-          SnapshotLayout.asOfFingerprints(spark, gen2, 2L, nswNonPayload, "a_fp"))
+      val boundaryIdentical = VersionedLayout.diffFingerprints(
+          asOfFingerprints(spark, gen1, 2L, "b_fp"),
+          asOfFingerprints(spark, gen2, 2L, "a_fp"))
         .count() == 0L
       // old as-ofs answerable through the root: the route must resolve
       // to generation 1 AND its batch-1 reconstruction must be intact
@@ -1139,10 +732,9 @@ object NswSnapshotLayout {
       // identity implies the old serve-level identity — two beam walks
       // saved; the serve key's per-probe head walk still proves the
       // machinery end-to-end through the generational route)
-      val routed = Generations.route(spark, root, 1L)
-      val asof1After = SnapshotLayout
-        .asOfFingerprints(spark, routed, 1L, nswNonPayload, "fp")
-      val oldAsofServed = routed == gen1 &&
+      val gen1Route = Generations.route(spark, root, 1L)
+      val asof1After = asOfFingerprints(spark, gen1Route, 1L, "fp")
+      val oldAsofServed = gen1Route == gen1 &&
         SnapshotLayout.rowSetDiffCount(asof1Before, asof1After, "n_old_diff")
           .collect()(0).getLong(0) == 0L
       val debts = layoutDebtGen(spark, root).collect()
@@ -1172,7 +764,7 @@ object NswSnapshotLayout {
         deletes = all.limit(0).select($"vec_id"))
       val postCutoverApplies = asOfVectorsGen(spark, root, Long.MaxValue)
         .filter($"vec_id" === 14 || $"vec_id" === 21).count() == 2L &&
-        SnapshotLayout.manifestIds(spark, gen2) == Seq(2L, 3L)
+        manifestIds(spark, gen2) == Seq(2L, 3L)
       // retirement (the IVF grid's contract on the graph): every
       // generation-1-reading verdict is already collected above, so
       // the drop is safe — then pin the loud refusal at routing

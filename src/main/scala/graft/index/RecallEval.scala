@@ -653,37 +653,18 @@ object RecallEval {
 
   private val TauSidecarPattern = """\{"tau_e2":(\d+)\}""".r
 
+  /** None when absent or unreadable: the next serve retunes and rewrites. */
   private[graft] def readTauSidecar(spark: SparkSession,
-      path: String): Option[Double] = {
-    val p = tauSidecarPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      body.trim match {
-        case TauSidecarPattern(e2) => Some(e2.toLong / 100.0)
-        case _ => None // unreadable sidecar → retune and rewrite
-      }
-    }
-  }
+      path: String): Option[Double] =
+    VersionedLayout.readFile(VersionedLayout.fsOf(spark, path), tauSidecarPath(path))
+      .collect { case TauSidecarPattern(e2) => e2.toLong / 100.0 }
 
+  /** Concurrent tuners of one layout each commit atomically under
+    * their own tmp name ([[VersionedLayout.commitFile]]). */
   private[graft] def writeTauSidecar(spark: SparkSession, path: String,
-      tau: Double): Unit = {
-    val p = tauSidecarPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/._graft_autotau.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"tau_e2":${math.round(tau * 100)}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not commit tuning sidecar $p")
-    }
-  }
+      tau: Double): Unit =
+    VersionedLayout.commitFile(spark, tauSidecarPath(path),
+      s"""{"tau_e2":${math.round(tau * 100)}}""")
 
   private[graft] def clearTauSidecar(spark: SparkSession, path: String): Unit = {
     val p = tauSidecarPath(path)

@@ -1,202 +1,58 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
-
 import graft.core.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Versioned IVF posting layout: `crud_asof`'s change-log discipline
-  * composed with [[IvfIndex.persist]]'s partitioned layout — the
-  * operational story a 100 TB index needs. The plain persisted layout
-  * applies deltas IN PLACE, so a bad maintenance batch (corrupt
-  * embeddings, a runaway delete) is unrecoverable short of a full
-  * rebuild. Here every maintenance batch is APPEND-ONLY and versioned:
-  *
-  *  - upserts append under `vectors/cluster_id=C/batch_id=B/` — the
-  *    batch id is a second PARTITION level, so "as of B" prunes at the
-  *    directory listing and rollback is a directory delete, never a
-  *    rewrite;
-  *  - deletes append tombstone id-lists under `tombstones/batch_id=B/`
-  *    (no posting file is ever rewritten);
-  *  - a per-batch snapshot manifest `_snapshots/batch-<B>.json`
-  *    records the drift sidecar state after the batch — the audit
-  *    trail, and what rollback restores.
-  *
-  * SERVE AS OF B is exactly the `crud_asof` reconstruction keyed on
-  * batch id instead of timestamp: per vec_id the latest event with
-  * batch_id ≤ B wins — live iff that event is an upsert (a tombstone
-  * hides the id until a later upsert revives it; within one batch
-  * deletes apply before upserts, the IndexStream convention, so an
-  * upsert wins the tie). The reconstruction is one window over the
-  * pruned partitions — linear in the live+delta rows ≤ B, with the
-  * same probe search on top ([[IvfIndex.search]], centroids fixed at
-  * the base fit, the incremental-add contract).
-  *
-  * ROLLBACK TO B deletes every `batch_id>B` directory (vectors and
-  * tombstones) and restores the sidecar from B's manifest. Files of
-  * batches ≤ B were never touched by later batches (append-only), so
-  * the post-rollback layout is BYTE-identical to the as-of-B layout —
-  * SnapshotSpec drives apply → snapshot → corrupt → rollback and
-  * asserts serve identity.
-  *
-  * Scale notes: an applied batch touches only the directories its
-  * rows land in; serving latest pays one argmax window over the
-  * posting rows (the standard merge-on-read cost — periodic compaction
-  * into a new BASE batch folds it away, exactly like any log-
-  * structured table format); the batch_id partition level adds one
-  * directory per (touched cluster, batch) — bounded by maintenance
-  * cadence, compacted with the same policy as the small-file channel.
+/** Versioned IVF posting layout: [[VersionedLayout]]'s append-only
+  * batch log over [[IvfIndex.persist]]'s partitioned layout, so a bad
+  * maintenance batch rolls back instead of forcing a full rebuild.
+  * The family's payload: posting rows carry a `cluster_id` placement
+  * level above `batch_id` (an applied batch touches only the clusters
+  * its rows land in), assigned to the FROZEN centroids of the base fit
+  * — the incremental-add contract — and a cutover re-fits KMeans. As
+  * of B the same probe search ([[IvfIndex.search]]) runs over the
+  * as-of posting set.
   */
-object SnapshotLayout {
+object SnapshotLayout extends VersionedLayout {
 
-  /** Initialize the layout: the base fit persisted as batch
-    * `baseBatch` (0 for a standalone layout; a generation cutover
-    * passes the predecessor's head batch id so the global batch-id
-    * axis stays monotonic across generations and as-of routing can
-    * address the boundary). */
-  def init(built: IvfIndex.Built, path: String, baseBatch: Long = 0L): Unit = {
-    val spark = built.assigned.sparkSession
-    built.assigned.withColumn("batch_id", lit(baseBatch))
-      .write.mode("overwrite").partitionBy("cluster_id", "batch_id")
-      .parquet(s"$path/vectors")
-    built.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val n = spark.read.parquet(s"$path/vectors").count()
-    IndexMeta.write(spark, path, IndexMeta.Meta(n, 0L))
-    writeManifest(spark, path, baseBatch, IndexMeta.Meta(n, 0L))
-  }
+  protected def placement: Option[String] = Some("cluster_id")
 
-  /** Apply one maintenance batch append-only: tombstones for the
-    * deletes, centroid-assigned posting rows for the upserts, then
-    * the drift sidecar bump and the batch's snapshot manifest (the
-    * manifest write is LAST — the IndexStream crash-window
-    * discipline: a batch with no manifest is incomplete and the next
-    * rollback target is the previous batch). */
-  def applyBatch(spark: SparkSession, path: String, batchId: Long,
-      upserts: DataFrame, deletes: DataFrame): Unit = {
-    repairCompaction(spark, path)
-    // the manifest is the applied marker (written last): a batch id
-    // that already carries one is complete, and re-appending it would
-    // duplicate its partition rows and double-bump the drift sidecar.
-    // A batch id AT OR BELOW the compaction floor (the oldest
-    // surviving manifest) is also a replay — it was applied before
-    // compaction folded its manifest away — and must skip even though
-    // its own manifest is gone: re-appending it would land rows under
-    // a batch_id below the consolidated base whose tombstones no
-    // longer exist, resurrecting deleted ids at head (the
-    // fresh-checkpoint restart-at-0 hazard)
-    if (readManifest(spark, path, batchId).isDefined ||
-        manifestIds(spark, path).headOption.exists(batchId <= _)) return
-    // a meta-bearing layout (init from a metaCols build — the
-    // filtered as-of serving shape) requires its deltas to carry
-    // the same metadata; the addDeltaRows discipline: fail fast
-    // rather than append rows invisible to every filtered serve.
-    // Validation runs BEFORE any write: a rejected batch must be
-    // side-effect-free, or its tombstones would apply at head with
-    // no manifest and re-append on the corrected retry
-    val storedCols = spark.read.parquet(s"$path/vectors").columns.toSeq
-    val keep = storedCols.filterNot(Set("cluster_id", "batch_id"))
-    // one counting pass per side serves emptiness checks AND the
-    // drift gauge below (round 17: the old isEmpty + count pairs cost
-    // two extra jobs per batch — pure scheduler overhead on the
-    // maintenance path)
-    val nUps = upserts.count()
-    val nDels = deletes.count()
-    val hasUpserts = nUps > 0
-    if (hasUpserts) {
-      val missing = keep.filterNot(upserts.columns.contains)
-      require(missing.isEmpty,
-        s"versioned batch missing layout columns ${missing.mkString(", ")}: " +
-          "a meta-bearing layout's batches must carry its metadata")
+  protected def payloadRoots: Seq[String] = Seq("vectors")
+
+  protected def codeStage(sub: String): String = s"codes/$sub"
+
+  /** Initialize the layout: the base fit as batch `baseBatch` (0 for a
+    * standalone layout; a cutover passes the predecessor's head id). */
+  def init(built: IvfIndex.Built, path: String, baseBatch: Long = 0L): Unit =
+    initLayout(built.assigned.sparkSession, path, baseBatch) {
+      built.assigned.withColumn("batch_id", lit(baseBatch))
+        .write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(s"$path/vectors")
+      built.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     }
-    if (nDels > 0)
-      deletes.select(col("vec_id")).withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id")
-        .parquet(s"$path/tombstones")
-    if (hasUpserts) {
-      val centroids = spark.read.parquet(s"$path/centroids")
-      val assigned = IvfIndex.assignToCentroids(
-          upserts.select(keep.map(col): _*), centroids)
-        .withColumn("batch_id", lit(batchId))
-      val subs = IvfIndex.pqSubdirs(spark, path)
-      if (subs.isEmpty)
-        assigned.write.mode("append").partitionBy("cluster_id", "batch_id")
-          .parquet(s"$path/vectors")
-      else {
-        // a layout carrying PQ sidecars ([[initPq]]) encodes every
-        // batch with the FROZEN codebooks in the same versioned
-        // partition scheme — the persisted layout's VERDICT-r9 lesson
-        // (a delta row with no code is invisible to the ADC pre-rank)
-        // applied to the versioned tier; checkpoint so the assignment
-        // is not recomputed per sidecar
-        val mat = assigned.localCheckpoint(true)
-        try {
-          mat.write.mode("append").partitionBy("cluster_id", "batch_id")
-            .parquet(s"$path/vectors")
-          IvfIndex.encodeDeltaPq(spark, path, mat,
-            partitionCols = Seq("cluster_id", "batch_id"))
-        } finally graft.core.Checkpoints.free(mat)
-      }
-    }
-    val drift = nUps + nDels
-    IndexMeta.bumpDelta(spark, path, drift)
-    val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(0L, 0L))
-    writeManifest(spark, path, batchId, meta)
-    // an applied batch is a layout mutation like rollback/compaction:
-    // without this bump a HEAD-addressed memo (batchId=Long.MaxValue —
-    // the fine as-of alphabets key on the label, and the head label is
-    // constant across appends) would keep serving a fit trained on the
-    // pre-append live set. Replays return above and never bump.
-    graft.store.IndexVersions.bump(path)
-  }
 
-  /** The live posting set AS OF `batchId` — the crud_asof argmax
-    * window on (vec_id, batch_id) over upsert and tombstone events,
-    * returning (vec_id, embedding, cluster_id) ready for
-    * [[IvfIndex.search]]. */
-  def asOfAssigned(spark: SparkSession, path: String, batchId: Long): DataFrame = {
-    // the read path self-heals a crashed compaction commit (one FS
-    // existence check when nothing is in flight)
-    repairCompaction(spark, path)
-    val stored = spark.read.parquet(s"$path/vectors")
-    // a meta-bearing layout's metadata rides the reconstruction — the
-    // filtered as-of serves evaluate their predicates on these rows
-    val metaFields = stored.schema.fields.toSeq
-      .filterNot(f => Set("vec_id", "embedding", "cluster_id", "batch_id")(f.name))
-    val ups = stored
-      .filter(col("batch_id") <= batchId)
-      .select(Seq(col("vec_id"), col("embedding"), col("cluster_id")) ++
-        metaFields.map(f => col(f.name)) ++
-        Seq(col("batch_id"), lit(1).as("is_upsert")): _*)
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the tombstone table may be absent OR empty (compaction removes
-    // every ≤-upTo list; an empty dir has no readable schema)
-    val tombRoot = new Path(s"$path/tombstones")
-    val hasTombs = fs.exists(tombRoot) &&
-      fs.listStatus(tombRoot).exists(d =>
-        d.isDirectory && batchDirId(d.getPath.getName).isDefined)
-    val tombs =
-      if (!hasTombs) ups.limit(0)
-      else spark.read.parquet(s"$path/tombstones")
-        .filter(col("batch_id") <= batchId)
-        .select(Seq(col("vec_id"),
-          lit(null).cast("array<float>").as("embedding"),
-          lit(-1).as("cluster_id")) ++
-          metaFields.map(f => lit(null).cast(f.dataType).as(f.name)) ++
-          Seq(col("batch_id"), lit(0).as("is_upsert")): _*)
-    val w = Window.partitionBy(col("vec_id"))
-      // within a batch deletes apply before upserts → upsert wins the
-      // tie (is_upsert desc); across batches the latest batch wins
-      .orderBy(col("batch_id").desc, col("is_upsert").desc)
-    ups.unionByName(tombs)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1 && col("is_upsert") === 1)
-      .select(Seq(col("vec_id"), col("embedding"), col("cluster_id")) ++
-        metaFields.map(f => col(f.name)): _*)
-  }
+  protected def appendUpserts(spark: SparkSession, path: String, batchId: Long,
+      rows: DataFrame): Unit =
+    appendRows(spark, path, IvfIndex.assignToCentroids(rows,
+      spark.read.parquet(s"$path/centroids")).withColumn("batch_id", lit(batchId)))
+
+  protected def stagePayload(spark: SparkSession, path: String, upTo: Long)(
+      stage: (String, DataFrame) => Unit): Unit =
+    stage("vectors", asOfAssigned(spark, path, upTo))
+
+  protected def refit(spark: SparkSession, live: DataFrame, next: String,
+      baseBatch: Long): Unit =
+    init(IvfIndex.build(spark, live,
+      metaCols = live.columns.toSeq.filterNot(Set("vec_id", "embedding"))),
+      next, baseBatch)
+
+  /** The live posting set AS OF `batchId`: (vec_id, embedding,
+    * cluster_id, metadata…), ready for [[IvfIndex.search]]. */
+  def asOfAssigned(spark: SparkSession, path: String, batchId: Long): DataFrame =
+    asOfLive(spark, path, batchId)
 
   /** Memoized per-cell LIVE masses as of `batchId` — the
     * coverage-adaptive policy's input on the versioned tier. Keyed
@@ -299,62 +155,6 @@ object SnapshotLayout {
   }
 
   // ---- versioned compressed tier (PQ sidecar over the batch log) ------
-
-  /** Add a PQ sidecar to the VERSIONED layout: codebooks trained once
-    * (frozen thereafter — the centroid discipline applied to the
-    * compressed tier) and every posting row present at call time
-    * encoded under the same `cluster_id=/batch_id=` scheme as the raw
-    * rows. Batches applied AFTER this call are encoded by
-    * [[applyBatch]] automatically, so as-of code coverage is complete
-    * from this call onward (call it at [[init]] time for full-history
-    * coverage). The codebook fit samples the stored rows as they are
-    * — superseded versions and tombstoned ids included — which only
-    * blurs the fit marginally; codes themselves are per-row exact. */
-  def initPq(spark: SparkSession, path: String,
-      m: Int = PqCodebooks.defaultM, codes: Int = PqCodebooks.defaultCodes,
-      seed: Long = 42L, rotate: Boolean = false, sub: String = "pq"): Unit =
-    IvfIndex.persistPq(spark, path, m, codes, seed, rotate, sub,
-      partitionCols = Seq("cluster_id", "batch_id"))
-
-  /** (vec_id, batch_id) of each id's WINNING upsert as of `batchId` —
-    * the [[asOfAssigned]] argmax window over KEYS ONLY (a
-    * column-pruned scan of the posting tree: 16 bytes a row through
-    * the shuffle instead of the embedding payload). The winner pairs
-    * key both the live CODE set and the direct-address exact rerank:
-    * a code row is live iff its (vec_id, batch_id) won, and the
-    * winning raw row lives at exactly that partition pair. */
-  private[index] def asOfWinners(spark: SparkSession, path: String,
-      batchId: Long): DataFrame = {
-    val ups = spark.read.parquet(s"$path/vectors")
-      .filter(col("batch_id") <= batchId)
-      .select(col("vec_id"), col("batch_id"), lit(1).as("is_upsert"))
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombRoot = new Path(s"$path/tombstones")
-    val hasTombs = fs.exists(tombRoot) &&
-      fs.listStatus(tombRoot).exists(d =>
-        d.isDirectory && batchDirId(d.getPath.getName).isDefined)
-    val tombs =
-      if (!hasTombs) ups.limit(0)
-      else spark.read.parquet(s"$path/tombstones")
-        .filter(col("batch_id") <= batchId)
-        .select(col("vec_id"), col("batch_id"), lit(0).as("is_upsert"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("batch_id").desc, col("is_upsert").desc)
-    ups.unionByName(tombs)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1 && col("is_upsert") === 1)
-      .select(col("vec_id"), col("batch_id"))
-  }
-
-  /** The live CODE set as of `batchId`: code rows whose
-    * (vec_id, batch_id) pair is the winning upsert. Output keeps
-    * `batch_id` — it addresses the winning raw row directly. */
-  private[graft] def asOfCodes(spark: SparkSession, path: String,
-      batchId: Long, sub: String = "pq"): DataFrame =
-    spark.read.parquet(s"$path/$sub/codes")
-      .filter(col("batch_id") <= batchId)
-      .join(asOfWinners(spark, path, batchId), Seq("vec_id", "batch_id"))
 
   /** ADC probe search served AS OF `batchId` from the versioned code
     * sidecar: probe the centroid ranking, ADC-score only the live
@@ -573,347 +373,6 @@ object SnapshotLayout {
       .select(col("q_id"), col("cluster_id"), col("vec_id"), col("batch_id"))
   }
 
-  /** Roll back to `batchId`: delete every later batch's directories
-    * (vectors and tombstones) and restore the sidecar from the
-    * target's manifest. No rebuild, no rewrite of surviving files. */
-  def rollback(spark: SparkSession, path: String, batchId: Long): Unit = {
-    repairCompaction(spark, path)
-    // the target must be restorable BEFORE anything is deleted: after
-    // compact(upTo) the manifests below upTo are gone, so a rollback
-    // to a pre-compaction id would otherwise silently delete the
-    // consolidated base and every later batch — the whole index
-    require(readManifest(spark, path, batchId).isDefined,
-      s"rollback target batch $batchId has no manifest under $path/_snapshots " +
-        "(compacted away, never applied, or crashed mid-apply) — refusing to " +
-        "delete newer batches with no restorable target")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // vectors/cluster_id=C/batch_id=B — and the code sidecars, which
-    // mirror the scheme: a rolled-back batch's codes must go with its
-    // raw rows or the ADC pre-rank would keep serving dead versions
-    (Seq(s"$path/vectors") ++
-        IvfIndex.pqSubdirs(spark, path).map(sub => s"$path/$sub/codes"))
-      .map(new Path(_)).filter(fs.exists).foreach { root =>
-      fs.listStatus(root).filter(_.isDirectory)
-        .filter(c => clusterDirId(c.getPath.getName).isDefined)
-        .foreach { c =>
-        fs.listStatus(c.getPath).filter(_.isDirectory)
-          .filter(d => batchDirId(d.getPath.getName).exists(_ > batchId))
-          .foreach(d => fs.delete(d.getPath, true))
-        // a cluster dir emptied of every batch dir disappears too
-        if (fs.listStatus(c.getPath).isEmpty) fs.delete(c.getPath, true)
-      }
-    }
-    val tombRoot = new Path(s"$path/tombstones")
-    if (fs.exists(tombRoot))
-      fs.listStatus(tombRoot).filter(_.isDirectory)
-        .filter(d => batchDirId(d.getPath.getName).exists(_ > batchId))
-        .foreach(d => fs.delete(d.getPath, true))
-    // drop later manifests; restore the sidecar from the target's
-    manifestIds(spark, path).filter(_ > batchId).foreach { id =>
-      fs.delete(new Path(s"$path/_snapshots/batch-$id.json"), false)
-    }
-    readManifest(spark, path, batchId).foreach(m =>
-      IndexMeta.write(spark, path, m))
-    writeRollbackMarker(spark, path, batchId)
-    graft.store.IndexVersions.bump(path)
-  }
-
-  /** Compact history ≤ `upTo` into one consolidated base batch — the
-    * periodic maintenance job that folds the merge-on-read argmax cost
-    * away (every log-structured table format's compaction): the live
-    * set AS OF `upTo` is materialized once, every `batch_id ≤ upTo`
-    * vector directory and `≤ upTo` tombstone list is deleted, and the
-    * consolidated rows are rewritten under `batch_id = upTo` (one file
-    * set per cluster). Batches AFTER `upTo` are untouched, so every
-    * serve at `B ≥ upTo` is IDENTICAL before/after (spec-pinned) and
-    * rollback to any `B ≥ upTo` keeps working; history BELOW `upTo` is
-    * deliberately truncated (its manifests are removed — as-of serves
-    * below the compaction point are no longer answerable, the standard
-    * retention trade). Cost: one reconstruction + one partitioned
-    * write of the live set, bounded by live rows ≤ upTo — never the
-    * full batch history. */
-  /** Crash-safe: the naive order (delete old dirs, THEN write the
-    * consolidated rows) loses the live set if the job dies in
-    * between — and the streaming sinks run compaction inline, so that
-    * window is real. The protocol is stage-then-commit:
-    *
-    *  1. STAGE — the consolidated live set is written under
-    *     `_compact_tmp/vectors` while the layout is untouched; the
-    *     plan marker (`_compact_tmp/plan.json`, recording upTo and
-    *     the staged cluster list) is written LAST and is the commit
-    *     point. A crash before the plan leaves a garbage tmp dir and
-    *     an intact layout (repair abandons the tmp).
-    *  2. COMMIT — per staged cluster: delete its `batch_id ≤ upTo`
-    *     dirs, then atomically RENAME the staged consolidated dir in
-    *     (the stage dir's existence gates the step, so a re-run skips
-    *     already-swapped clusters and never deletes consolidated
-    *     data); clusters with no staged data just drop their old
-    *     dirs. Tombstone/manifest removal and the tmp cleanup are
-    *     idempotent deletes. A crash ANYWHERE inside commit is
-    *     finished by [[repairCompaction]] re-running the same
-    *     idempotent sequence — every mutation entry point calls it
-    *     first.
-    */
-  def compact(spark: SparkSession, path: String, upTo: Long): Unit = {
-    repairCompaction(spark, path)
-    // the compaction point must be a manifested batch — the rollback
-    // guard's discipline: compacting to an unmanifested id would
-    // delete EVERY manifest below it (possibly all of them), leaving
-    // no rollback target, no crash-repair anchor, and no replay
-    // floor — the ghost-resurrection hazard the floor guard exists for
-    require(readManifest(spark, path, upTo).isDefined,
-      s"compaction point batch $upTo has no manifest under $path/_snapshots " +
-        "(never applied, or crashed mid-apply) — refusing to truncate " +
-        "history below an unrestorable batch")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // materialize the live set BEFORE touching anything the plan reads
-    val live = asOfAssigned(spark, path, upTo)
-      .withColumn("batch_id", lit(upTo))
-      .localCheckpoint(true)
-    val tmpRoot = new Path(s"$path/_compact_tmp")
-    fs.delete(tmpRoot, true)
-    live.write.mode("overwrite").partitionBy("cluster_id", "batch_id")
-      .parquet(s"$path/_compact_tmp/vectors")
-    graft.core.Checkpoints.free(live)
-    // the code sidecars stage their live sets under the same scheme —
-    // compaction must fold BOTH tables or the ADC serve would keep
-    // paying (and eventually mis-resolving) the folded history. The
-    // staged cluster set is the raw one: live code rows mirror live
-    // raw rows id-for-id wherever the sidecar has coverage.
-    IvfIndex.pqSubdirs(spark, path).foreach { sub =>
-      asOfCodes(spark, path, upTo, sub)
-        .withColumn("batch_id", lit(upTo))
-        .write.mode("overwrite").partitionBy("cluster_id", "batch_id")
-        .parquet(s"$path/_compact_tmp/codes/$sub")
-    }
-    val clusters = fs.listStatus(new Path(s"$path/_compact_tmp/vectors"))
-      .filter(_.isDirectory)
-      .flatMap(d => clusterDirId(d.getPath.getName)).toSeq.sorted
-    writeCompactPlan(fs, path, upTo, clusters)
-    commitCompaction(spark, path, upTo, clusters)
-  }
-
-  /** Finish (or abandon) an in-flight compaction commit. No plan + a
-    * tmp dir = a stage that crashed before its commit point: the
-    * layout is intact, the tmp is garbage. A plan = the commit ran at
-    * least partially: re-run the idempotent commit sequence. Called
-    * by every entry point that mutates or reconstructs the layout. */
-  private[graft] def repairCompaction(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = new Path(s"$path/_compact_tmp")
-    if (!fs.exists(tmpRoot)) return
-    readCompactPlan(fs, path) match {
-      case None => fs.delete(tmpRoot, true)
-      case Some((upTo, clusters)) => commitCompaction(spark, path, upTo, clusters)
-    }
-  }
-
-  private def commitCompaction(spark: SparkSession, path: String, upTo: Long,
-      clusters: Seq[Int]): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dropLe(clusterDir: Path): Unit =
-      fs.listStatus(clusterDir).filter(_.isDirectory)
-        .filter(d => batchDirId(d.getPath.getName).exists(_ <= upTo))
-        .foreach(d => fs.delete(d.getPath, true))
-    // every batch-partitioned table commits with the same idempotent
-    // per-cluster swap: the raw posting rows plus each code sidecar
-    // (whose live rows mirror the raw live set, so the plan's cluster
-    // list gates both). A sidecar cluster with no staged dir either
-    // already swapped or stages nothing — its old ≤-upTo dirs just go.
-    val roots: Seq[(Path, String)] =
-      Seq((new Path(s"$path/vectors"), s"$path/_compact_tmp/vectors")) ++
-        IvfIndex.pqSubdirs(spark, path).map(sub =>
-          (new Path(s"$path/$sub/codes"), s"$path/_compact_tmp/codes/$sub"))
-    roots.foreach { case (root, stageRoot) =>
-      // clusters with NO staged data: every ≤-upTo row in them is
-      // dead — their old dirs just go (idempotent)
-      if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory)
-          .filter(c => clusterDirId(c.getPath.getName)
-            .exists(cid => !clusters.contains(cid)))
-          .foreach(c => dropLe(c.getPath))
-      // clusters WITH staged data: swap, gated on the stage dir so a
-      // re-run cannot delete already-committed consolidated rows
-      clusters.foreach { cid =>
-        val stage = new Path(s"$stageRoot/cluster_id=$cid/batch_id=$upTo")
-        if (fs.exists(stage)) {
-          val clusterDir = new Path(s"$root/cluster_id=$cid")
-          if (fs.exists(clusterDir)) dropLe(clusterDir) else fs.mkdirs(clusterDir)
-          fs.rename(stage, new Path(s"$root/cluster_id=$cid/batch_id=$upTo"))
-        }
-      }
-    }
-    val tombRoot = new Path(s"$path/tombstones")
-    if (fs.exists(tombRoot)) {
-      fs.listStatus(tombRoot).filter(_.isDirectory)
-        .filter(d => batchDirId(d.getPath.getName).exists(_ <= upTo))
-        .foreach(d => fs.delete(d.getPath, true))
-      if (!fs.listStatus(tombRoot).exists(_.isDirectory))
-        fs.delete(tombRoot, true)
-    }
-    // empty cluster dirs left by the deletes disappear (only the
-    // layout's own cluster_id= dirs — never a stray someone parked)
-    roots.map(_._1).filter(fs.exists).foreach { root =>
-      fs.listStatus(root).filter(_.isDirectory)
-        .filter(c => clusterDirId(c.getPath.getName).isDefined &&
-          fs.listStatus(c.getPath).isEmpty)
-        .foreach(c => fs.delete(c.getPath, true))
-    }
-    // history below the compaction point is gone — so are its manifests
-    manifestIds(spark, path).filter(_ < upTo).foreach { id =>
-      fs.delete(new Path(s"$path/_snapshots/batch-$id.json"), false)
-    }
-    fs.delete(new Path(s"$path/_compact_tmp"), true)
-    graft.store.IndexVersions.bump(path)
-  }
-
-  private val PlanPattern = """\{"up_to":(\d+),"clusters":\[([0-9,]*)\]\}""".r
-
-  private[graft] def writeCompactPlan(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, upTo: Long, clusters: Seq[Int]): Unit = {
-    val out = fs.create(new Path(s"$path/_compact_tmp/plan.json"), true)
-    try out.write(
-      s"""{"up_to":$upTo,"clusters":[${clusters.mkString(",")}]}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private[graft] def readCompactPlan(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[(Long, Seq[Int])] = {
-    val p = new Path(s"$path/_compact_tmp/plan.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      body.trim match {
-        case PlanPattern(u, cs) => Some((u.toLong,
-          cs.split(",").filter(_.nonEmpty).map(_.toInt).toSeq))
-        case _ => None
-      }
-    }
-  }
-
-  /** Snapshot ids present under `_snapshots/`, ascending. */
-  def manifestIds(spark: SparkSession, path: String): Seq[Long] = {
-    val dir = new Path(s"$path/_snapshots")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case s if s.startsWith("batch-") && s.endsWith(".json") =>
-        s.stripPrefix("batch-").stripSuffix(".json").toLong }
-      .toSeq.sorted
-  }
-
-  private[index] def writeManifest(spark: SparkSession, path: String, batchId: Long,
-      meta: IndexMeta.Meta): Unit = {
-    val p = new Path(s"$path/_snapshots/batch-$batchId.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stage under a DOT name, then rename: the manifest is tailed by
-    // live change-feed readers (IndexStream.changes) whose file source
-    // consumes each path exactly once — a reader listing a manifest
-    // between create and close would read a truncated line, drop the
-    // batch silently, and never be redelivered. Dot-files are hidden
-    // from both the file source and manifestIds, and rename makes the
-    // full content appear atomically.
-    val tmp = new Path(s"$path/_snapshots/.batch-$batchId.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"batch_id":$batchId,"fitted_n":${meta.fittedN},"delta_since_fit":${meta.deltaSinceFit}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not commit manifest $p")
-    }
-  }
-
-  /** Record a rollback as a monotonic `rollback-<seq>.json` marker in
-    * `_snapshots/` — a FRESH file path, which is the one thing a live
-    * change-feed reader's file-source checkpoint is guaranteed to
-    * deliver. Rollback deletes manifests and re-applied batches
-    * recreate the same `batch-N.json` paths (never redelivered), so
-    * without the marker a tailed reader whose anchor the rollback
-    * undercut would silently diverge; with it, the reader refuses
-    * loudly ([[graft.streaming.IndexStream]]'s rollback guard).
-    * Invisible to [[manifestIds]]/[[readManifest]] (the `batch-`
-    * prefix filter) and to every as-of reconstruction. Same dot-tmp +
-    * rename discipline as [[writeManifest]] — a tailing reader must
-    * never see a truncated marker. */
-  private val RollbackMarkerPattern = """rollback-(\d+)\.json""".r
-
-  private[index] def writeRollbackMarker(spark: SparkSession, path: String,
-      target: Long): Unit = {
-    val dir = new Path(s"$path/_snapshots")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pattern-match and SKIP non-conforming names (a stray
-    // rollback-backup.json must not brick every subsequent rollback) —
-    // the VersionedPointer/ManifestPattern readers' discipline
-    val seq = (if (!fs.exists(dir)) Seq.empty[Long]
-      else fs.listStatus(dir).map(_.getPath.getName).toSeq
-        .collect { case RollbackMarkerPattern(n) => n.toLong })
-      .foldLeft(0L)(math.max) + 1L
-    val p = new Path(s"$path/_snapshots/rollback-$seq.json")
-    val tmp = new Path(s"$path/_snapshots/.rollback-$seq.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"rolled_back_to":$target}"""
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not commit rollback marker $p")
-    }
-  }
-
-  /** Partition-directory name parses — the ManifestPattern /
-    * RollbackMarkerPattern discipline applied to the layout's own
-    * `batch_id=N` / `cluster_id=N` dirs: pattern-match and SKIP
-    * non-conforming names, so a stray file or backup directory dropped
-    * under a layout cannot throw NumberFormatException mid-rollback or
-    * mid-compaction (the destructive paths walk these listings to
-    * decide what to DELETE — they must refuse to touch anything they
-    * did not write, not crash halfway through deleting). */
-  private val BatchDirPattern = """batch_id=(\d+)""".r
-
-  private[index] def batchDirId(name: String): Option[Long] = name match {
-    case BatchDirPattern(n) => Some(n.toLong)
-    case _ => None
-  }
-
-  private val ClusterDirPattern = """cluster_id=(\d+)""".r
-
-  private[index] def clusterDirId(name: String): Option[Int] = name match {
-    case ClusterDirPattern(n) => Some(n.toInt)
-    case _ => None
-  }
-
-  private val ManifestPattern =
-    """\{"batch_id":(\d+),"fitted_n":(\d+),"delta_since_fit":(\d+)\}""".r
-
-  def readManifest(spark: SparkSession, path: String,
-      batchId: Long): Option[IndexMeta.Meta] = {
-    val p = new Path(s"$path/_snapshots/batch-$batchId.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      body.trim match {
-        case ManifestPattern(_, n, d) => Some(IndexMeta.Meta(n.toLong, d.toLong))
-        case _ => None
-      }
-    }
-  }
-
   /** Serve-identity comparator shared by every grid: the count of
     * (q_id, rank, neighbor_id, score_e6) rows NOT present in both
     * serves — 0 iff the two serves are row-identical. One definition
@@ -1080,7 +539,7 @@ object SnapshotLayout {
     * strictly stronger and pays one key-only scan each. */
   private def postingStateAt(spark: SparkSession, path: String,
       batchId: Long): DataFrame =
-    asOfFingerprints(spark, path, batchId, Set("vec_id"), "fp")
+    asOfFingerprints(spark, path, batchId, "fp", exclude = Set("vec_id"))
       .localCheckpoint(true)
 
   private def postingStateDiff(a: DataFrame, b: DataFrame): Long =
@@ -1285,8 +744,7 @@ object SnapshotLayout {
   def knnJoinPqGen(spark: SparkSession, root: String, batchId: Long,
       nProbe: Int = 0, k: Int = 5, rerank: Int = 200,
       sub: String = "pq"): DataFrame =
-    knnJoinPqAsOf(spark, Generations.route(spark, root, batchId), batchId,
-      nProbe, k, rerank, sub)
+    routed(spark, root, batchId)(knnJoinPqAsOf(spark, _, batchId, nProbe, k, rerank, sub))
 
   /** `knn_join_pq_gen`: [[knnJoinPqGen]] at HEAD over a generational
     * wrap of [[pristineScenario]] (copied → generation 1, rolled back
@@ -1422,117 +880,9 @@ object SnapshotLayout {
         s"${before.columns.mkString(",")} vs ${after.columns.mkString(",")}")
     val payload = before.columns.toSeq.filterNot(nonPayload)
     def fingerprinted(df: DataFrame, as: String) =
-      df.select(col("vec_id"), payloadFp(payload).as(as))
-    diffFingerprints(fingerprinted(before, "b_fp"),
+      df.select(col("vec_id"), VersionedLayout.payloadFp(payload).as(as))
+    VersionedLayout.diffFingerprints(fingerprinted(before, "b_fp"),
       fingerprinted(after, "a_fp"))
-  }
-
-  /** Map-side 8-byte payload fingerprint — the change classification
-    * only needs payload EQUALITY, so the CDC exchanges carry this
-    * hash, never the embedding array (the asOfWinners discipline:
-    * keys + 8 bytes a row through the shuffle instead of the corpus
-    * width). Each field hashes under its own name prefix — a NULL
-    * field reads as the name-keyed sentinel hash, so flipping a
-    * metadata field to/from NULL still classifies `updated` (the
-    * null-safe contract of the struct comparison this replaced) and
-    * nulls in different positions cannot alias each other. 64-bit
-    * fingerprint equality stands in for payload equality, the
-    * standard CDC trade. The fold sorts the column NAMES first: each
-    * side of a cross-generation diff derives its payload order from
-    * its own parquet schema, and the combining hash is
-    * order-sensitive — an unsorted fold would classify every live row
-    * `updated` if a successor generation ever listed the metadata
-    * columns in a different order (the name-keyed per-field hashes
-    * already prevent positional aliasing, so sorting loses nothing). */
-  private def payloadFp(payload: Seq[String]): org.apache.spark.sql.Column = {
-    val fieldFps = payload.sorted.map(c => xxhash64(lit(c), col(c)))
-    if (fieldFps.isEmpty) lit(0L) else xxhash64(fieldFps: _*)
-  }
-
-  /** Classify changes between two (vec_id, fingerprint) live sets. A
-    * computed fingerprint is never NULL, so a NULL side marks absence
-    * under the full-outer join. */
-  private[index] def diffFingerprints(before: DataFrame, after: DataFrame): DataFrame =
-    before.join(after, Seq("vec_id"), "full_outer")
-      .withColumn("change",
-        when(col("b_fp").isNull, lit("added"))
-          .when(col("a_fp").isNull, lit("deleted"))
-          .when(col("a_fp") =!= col("b_fp"), lit("updated")))
-      .filter(col("change").isNotNull)
-      .select(col("vec_id"), col("change"))
-
-  /** The live (vec_id, payload-fingerprint) set as of `batchId` — the
-    * [[asOfAssigned]] argmax window with the payload hashed MAP-SIDE
-    * before the exchange, so the whole reconstruction (not just the
-    * diff join) moves keys + 8 bytes a row. Family-neutral like
-    * [[debtScan]]: both versioned layouts store `vectors/` +
-    * `tombstones/` event trees with the same batch_id semantics, so
-    * one scan serves both — and therefore runs NO crash repair itself
-    * (the plan formats differ); each family's entry point repairs
-    * first. `nonPayload` is the family's structural column set. */
-  private[index] def asOfFingerprints(spark: SparkSession, path: String,
-      batchId: Long, nonPayload: Set[String], as: String): DataFrame = {
-    val stored = spark.read.parquet(s"$path/vectors")
-    val payload = stored.columns.toSeq.filterNot(nonPayload + "batch_id")
-    val ups = stored.filter(col("batch_id") <= batchId)
-      .select(col("vec_id"), payloadFp(payload).as(as),
-        col("batch_id"), lit(1).as("is_upsert"))
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombRoot = new Path(s"$path/tombstones")
-    val hasTombs = fs.exists(tombRoot) &&
-      fs.listStatus(tombRoot).exists(d =>
-        d.isDirectory && batchDirId(d.getPath.getName).isDefined)
-    val tombs =
-      if (!hasTombs) ups.limit(0)
-      else spark.read.parquet(s"$path/tombstones")
-        .filter(col("batch_id") <= batchId)
-        .select(col("vec_id"), lit(0L).as(as),
-          col("batch_id"), lit(0).as("is_upsert"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("batch_id").desc, col("is_upsert").desc)
-    ups.unionByName(tombs)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1 && col("is_upsert") === 1)
-      .select(col("vec_id"), col(as))
-  }
-
-  /** Public CDC read over a versioned IVF layout: [[diffLiveSets]]
-    * between the `fromBatch` and `toBatch` reconstructions (each
-    * reconstruction runs its own crash repair). Endpoints below the
-    * compaction floor are REFUSED (the rollback-guard precedent): the
-    * truncated log would reconstruct an empty/partial live set there
-    * and the feed would silently report every live id as `added`. */
-  def asOfDiff(spark: SparkSession, path: String, fromBatch: Long,
-      toBatch: Long): DataFrame = {
-    repairCompaction(spark, path)
-    requireAnswerable(spark, path, fromBatch)
-    requireAnswerable(spark, path, toBatch)
-    diffFingerprints(
-      asOfFingerprints(spark, path, fromBatch, ivfNonPayload, "b_fp"),
-      asOfFingerprints(spark, path, toBatch, ivfNonPayload, "a_fp"))
-  }
-
-  /** This family's structural (non-payload) columns: the physical
-    * cluster assignment is placement, not content. */
-  private[index] val ivfNonPayload = Set("vec_id", "cluster_id")
-
-  /** An as-of point is answerable iff the log still covers it: at or
-    * above the oldest surviving manifest (compaction truncates both
-    * history and its manifests together) and at or below the newest —
-    * a typo'd FUTURE batch id would silently alias head, so only the
-    * explicit `Long.MaxValue` head alias is admitted above the top. */
-  private[index] def requireAnswerable(spark: SparkSession, path: String,
-      batchId: Long): Unit = {
-    val ids = manifestIds(spark, path)
-    require(ids.nonEmpty && batchId >= ids.head,
-      s"as-of $batchId is below the compaction floor " +
-        s"${ids.headOption.getOrElse(-1L)} under $path — the truncated log " +
-        "cannot reconstruct it (refusing to emit a silently-wrong feed)")
-    require(batchId == Long.MaxValue || batchId <= ids.last,
-      s"as-of $batchId is above the newest manifested batch ${ids.last} " +
-        s"under $path — a mistyped endpoint must fail loudly instead of " +
-        "silently aliasing head (use Long.MaxValue to address head explicitly)")
   }
 
   /** `index_asof_diff`: the versioned layouts' change-data feed,
@@ -1550,95 +900,17 @@ object SnapshotLayout {
   def indexAsofDiff(spark: SparkSession, dir: String): DataFrame = {
     val ivfPath = pristineScenario(spark, dir)
     val nswPath = NswSnapshotLayout.pristineScenario(spark, dir)
-    def feed(family: String, path: String, nonPayload: Set[String]): DataFrame =
+    def feed(family: String, layout: VersionedLayout, path: String): DataFrame =
       Seq((1L, 2L), (2L, 3L)).map { case (b1, b2) =>
-        diffFingerprints(
-          asOfFingerprints(spark, path, b1, nonPayload, "b_fp"),
-          asOfFingerprints(spark, path, b2, nonPayload, "a_fp"))
+        VersionedLayout.diffFingerprints(
+          layout.asOfFingerprints(spark, path, b1, "b_fp"),
+          layout.asOfFingerprints(spark, path, b2, "a_fp"))
           .select(lit(family).as("family"), lit(b1).as("from_b"),
             lit(b2).as("to_b"), col("vec_id"), col("change"))
       }.reduce(_ unionByName _)
-    feed("ivf", ivfPath, ivfNonPayload)
-      .unionByName(feed("nsw", nswPath, NswSnapshotLayout.nswNonPayload))
+    feed("ivf", this, ivfPath)
+      .unionByName(feed("nsw", NswSnapshotLayout, nswPath))
       .orderBy(col("family"), col("from_b"), col("vec_id"))
-  }
-
-  /** One row of merge-on-read DEBT for a versioned layout at head:
-    * how many manifested batches, how many physical upsert rows the
-    * posting tree holds vs how many are live, how many are superseded
-    * (a later upsert or tombstone won), how many ids are currently
-    * dead, and how many tombstone rows the log carries. Everything a
-    * compaction scheduler needs to decide "is the argmax window worth
-    * folding" — the gauge behind the sinks' manifest-count cadence.
-    * One key-only scan + one argmax window over keys (the
-    * [[asOfWinners]] discipline: 16 bytes/row through the shuffle),
-    * no embedding payload, no driver loop. */
-  def layoutDebt(spark: SparkSession, path: String): DataFrame = {
-    repairCompaction(spark, path)
-    debtScan(spark, path)
-  }
-
-  /** The debt scan shared by both families — family-NEUTRAL: it must
-    * not run a crash repair itself, because each family's compaction
-    * plan format differs and the IVF repair misparses an NSW plan
-    * (the entry points [[layoutDebt]] /
-    * [[NswSnapshotLayout.layoutDebt]] run their OWN repair first). */
-  private[index] def debtScan(spark: SparkSession, path: String): DataFrame = {
-    // the refit signal rides the gauge: the versioned layouts freeze
-    // their fit (stable cluster/graph addresses are what as-of
-    // serving is built on), so unlike the persisted path nothing
-    // auto-rebuilds on drift — the operator reads fitted_n /
-    // delta_since_fit here and decides when a new layout generation
-    // is due (one sidecar JSON read, no job)
-    val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(0L, 0L))
-    // consistency on a LIVE layout: n_batches and the drift columns
-    // read eagerly here, the row counts lazily at collect time — so
-    // the scans are bounded to the last batch manifested NOW, or a
-    // micro-batch landing in between would tear the snapshot (counts
-    // including a batch the manifest columns don't)
-    val ids = manifestIds(spark, path)
-    // no manifests = not a layout (init always manifests batch 0):
-    // defaulting the bound would silently count unmanifested rows as
-    // debt with n_batches = 0 — fail loudly, the requireAnswerable
-    // stance
-    require(ids.nonEmpty,
-      s"no snapshot manifests under $path/_snapshots — not a versioned " +
-        "layout (or its history was destroyed); refusing to report a " +
-        "zero-batch debt gauge over unmanifested rows")
-    val last = ids.last
-    val ups = spark.read.parquet(s"$path/vectors")
-      .filter(col("batch_id") <= last)
-      .select(col("vec_id"), col("batch_id"), lit(1).as("is_upsert"))
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombRoot = new Path(s"$path/tombstones")
-    val hasTombs = fs.exists(tombRoot) &&
-      fs.listStatus(tombRoot).exists(d =>
-        d.isDirectory && batchDirId(d.getPath.getName).isDefined)
-    val tombs =
-      if (!hasTombs) ups.limit(0)
-      else spark.read.parquet(s"$path/tombstones")
-        .filter(col("batch_id") <= last)
-        .select(col("vec_id"), col("batch_id"), lit(0).as("is_upsert"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("batch_id").desc, col("is_upsert").desc)
-    val events = ups.unionByName(tombs)
-      .withColumn("rk", row_number().over(w))
-    events.agg(
-        // coalesce: an event log with zero rows must gauge 0, not NULL
-        coalesce(sum(col("is_upsert")), lit(0)).cast("long").as("total_rows"),
-        count(when(col("rk") === 1 && col("is_upsert") === 1, 1))
-          .as("live_rows"),
-        count(when(col("rk") === 1 && col("is_upsert") === 0, 1))
-          .as("dead_ids"),
-        count(when(col("is_upsert") === 0, 1)).as("tombstone_rows"))
-      .select(
-        lit(ids.size.toLong).as("n_batches"),
-        col("total_rows"), col("live_rows"),
-        (col("total_rows") - col("live_rows")).as("superseded_rows"),
-        col("dead_ids"), col("tombstone_rows"),
-        lit(meta.fittedN).as("fitted_n"),
-        lit(meta.deltaSinceFit).as("delta_since_fit"))
   }
 
   /** `index_layout_stats`: [[layoutDebt]] certified for both families
@@ -1653,15 +925,11 @@ object SnapshotLayout {
     val ivfPath = pristineScenario(spark, dir)
     val nswPath = NswSnapshotLayout.pristineScenario(spark, dir)
     layoutDebt(spark, ivfPath)
-      .select(lit("ivf").as("family") +: layoutDebtCols: _*)
+      .select(lit("ivf").as("family") +: VersionedLayout.debtCols: _*)
       .unionByName(NswSnapshotLayout.layoutDebt(spark, nswPath)
-        .select(lit("nsw").as("family") +: layoutDebtCols: _*))
+        .select(lit("nsw").as("family") +: VersionedLayout.debtCols: _*))
       .orderBy(col("family"))
   }
-
-  private val layoutDebtCols = Seq("n_batches", "total_rows", "live_rows",
-    "superseded_rows", "dead_ids", "tombstone_rows", "fitted_n",
-    "delta_since_fit").map(col)
 
   val indexLayoutStatsSql: String =
     """SELECT f.family, CAST(4 AS BIGINT) AS n_batches,
@@ -1675,178 +943,50 @@ object SnapshotLayout {
       |FROM (SELECT 'ivf' AS family UNION ALL SELECT 'nsw') f
       |ORDER BY f.family""".stripMargin
 
-  // ---- generation lifecycle (the drift-envelope ACTION) ---------------
-  // The versioned layout freezes its fit for stable as-of addressing,
-  // so the debt gauge's fitted_n/delta_since_fit envelope had a signal
-  // with nothing to call: these entry points are the missing lifecycle
-  // piece. See [[Generations]] for the root layout and routing rules.
+  // ---- generation lifecycle: routed serves (the cutover is the core's) --
 
   /** Initialize a GENERATIONAL root: the base fit as generation 1. */
-  def initGen(built: IvfIndex.Built, root: String): Unit = {
-    init(built, Generations.genPath(root, 1))
-    Generations.writePointer(built.assigned.sparkSession, root, 1)
-  }
+  def initGen(built: IvfIndex.Built, root: String): Unit =
+    initGenWith(built.assigned.sparkSession, root)(init(built, _))
 
-  /** Cut over to a fresh generation: re-fit KMeans from the CURRENT
-    * generation's head reconstruction into `generation=N+1` (base
-    * batch = the predecessor's head batch id, so the global batch
-    * axis stays monotonic and routing can address the boundary), then
-    * atomically swap the pointer. The old generation is untouched —
-    * every as-of it answered keeps answering through [[Generations
-    * .route]]. The new generation's sidecar starts at fitted_n = head
-    * live count, delta_since_fit = 0: the gauge reset the envelope
-    * trip asked for. PQ sidecars carry over with their configured
-    * geometry (recovered from the stored codebooks, the
-    * refreshPqSidecars discipline; re-fit at the default seed, which
-    * the recall contract does not depend on). Crash-safe: the pointer
-    * write is the commit point — a crash mid-cutover leaves the old
-    * pointer and a garbage partial directory the next attempt
-    * overwrites. */
-  def newGeneration(spark: SparkSession, root: String): Int = {
-    val g = Generations.current(spark, root)
-    val cur = Generations.genPath(root, g)
-    repairCompaction(spark, cur)
-    val headId = manifestIds(spark, cur).last
-    val live = asOfAssigned(spark, cur, Long.MaxValue).drop("cluster_id")
-    // an all-deleted head has nothing to re-fit: KMeans on zero rows
-    // would die with an opaque MLlib error mid-cutover — fail loudly
-    // before any write
-    require(!live.isEmpty,
-      s"generation $g's head live set under $root is empty — nothing to " +
-        "re-fit; a cutover of an emptied index is an operator decision " +
-        "(drop the root), not a rebuild")
-    val metaCols = live.columns.toSeq.filterNot(Set("vec_id", "embedding"))
-    val next = Generations.genPath(root, g + 1)
-    val fs = new Path(next)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(next), true) // a crashed prior cutover's garbage
-    init(IvfIndex.build(spark, live, metaCols = metaCols), next,
-      baseBatch = headId)
-    IvfIndex.pqSubdirs(spark, cur).foreach { sub =>
-      val books = IvfIndex.readCodebooks(spark, cur, sub)
-      require(books.nonEmpty && books.head.nonEmpty,
-        s"sidecar $sub has no codebooks under $cur — cannot carry its " +
-          "geometry across the generation cutover")
-      initPq(spark, next, m = books.length, codes = books.head.length,
-        rotate = IvfIndex.readRotation(spark, cur, sub).isDefined, sub = sub)
-    }
-    Generations.writePointer(spark, root, g + 1)
-    g + 1
-  }
+  def asOfAssignedGen(spark: SparkSession, root: String, batchId: Long): DataFrame =
+    routed(spark, root, batchId)(asOfAssigned(spark, _, batchId))
 
-  /** Apply a maintenance batch to the CURRENT generation. Batch ids
-    * at or below the generation's base are replays (applied before
-    * the cutover) and skip, exactly like the compaction floor. */
-  def applyBatchGen(spark: SparkSession, root: String, batchId: Long,
-      upserts: DataFrame, deletes: DataFrame): Unit =
-    applyBatch(spark,
-      Generations.genPath(root, Generations.current(spark, root)),
-      batchId, upserts, deletes)
-
-  /** As-of reconstruction routed across generations. */
-  def asOfAssignedGen(spark: SparkSession, root: String,
-      batchId: Long): DataFrame =
-    asOfAssigned(spark, Generations.route(spark, root, batchId), batchId)
-
-  /** Probe serve routed across generations: at or past the cutover
-    * the successor's fresh fit answers; below it the old generation
-    * keeps serving its frozen addresses. */
+  /** At or past a cutover the successor's fresh fit answers; below it
+    * the old generation keeps serving its frozen addresses. */
   def searchAsOfGen(spark: SparkSession, root: String, batchId: Long,
-      queries: DataFrame, nProbe: Int = 0,
-      k: Int = 10): DataFrame =
-    searchAsOf(spark, Generations.route(spark, root, batchId), batchId,
-      queries, nProbe, k)
+      queries: DataFrame, nProbe: Int = 0, k: Int = 10): DataFrame =
+    routed(spark, root, batchId)(searchAsOf(spark, _, batchId, queries, nProbe, k))
 
-  /** Single-query probe serve routed across generations — the
-    * [[searchAsOfSingle]] shape for /query-style serves over a
-    * generational root. */
   def searchAsOfSingleGen(spark: SparkSession, root: String, batchId: Long,
-      query: DataFrame, nProbe: Int = 0,
-      k: Int = 10): DataFrame =
-    searchAsOfSingle(spark, Generations.route(spark, root, batchId), batchId,
-      query, nProbe, k)
+      query: DataFrame, nProbe: Int = 0, k: Int = 10): DataFrame =
+    routed(spark, root, batchId)(searchAsOfSingle(spark, _, batchId, query, nProbe, k))
 
-  /** Single-query PRE-filter probe serve routed across generations —
-    * [[IvfIndex.searchFilteredSingle]] over the routed as-of
-    * reconstruction (the /query-shaped filtered serve). */
+  /** The /query-shaped filtered serve over a generational root. */
   def searchAsOfFilteredSingleGen(spark: SparkSession, root: String,
       batchId: Long, query: DataFrame, pred: org.apache.spark.sql.Column,
-      nProbe: Int = 0, k: Int = 10): DataFrame = {
-    val path = Generations.route(spark, root, batchId)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    IvfIndex.searchFilteredSingle(
-      IvfIndex.Built(asOfAssigned(spark, path, batchId), centroids),
-      query, pred,
-      IvfIndex.resolveNProbeAt(spark, path, nProbe,
-        IvfIndex.filteredNProbeBase), k)
-  }
+      nProbe: Int = 0, k: Int = 10): DataFrame =
+    routed(spark, root, batchId) { path =>
+      IvfIndex.searchFilteredSingle(
+        IvfIndex.Built(asOfAssigned(spark, path, batchId),
+          spark.read.parquet(s"$path/centroids")),
+        query, pred,
+        IvfIndex.resolveNProbeAt(spark, path, nProbe, IvfIndex.filteredNProbeBase), k)
+    }
 
-  /** PRE-filter probe serve routed across generations — the filtered
-    * serving mode survives a cutover (metadata rides the re-fit:
-    * [[newGeneration]] carries every non-structural column into the
-    * successor's build). */
+  /** Metadata rides the cutover's re-fit, so the filtered mode survives it. */
   def searchAsOfFilteredGen(spark: SparkSession, root: String, batchId: Long,
       queries: DataFrame, pred: org.apache.spark.sql.Column,
       nProbe: Int = 0, k: Int = 10): DataFrame =
-    searchAsOfFiltered(spark, Generations.route(spark, root, batchId),
-      batchId, queries, pred, nProbe, k)
+    routed(spark, root, batchId)(
+      searchAsOfFiltered(spark, _, batchId, queries, pred, nProbe, k))
 
-  /** ADC probe serve routed across generations — the compressed tier
-    * survives a cutover ([[newGeneration]] re-inits each sidecar at
-    * its configured geometry on the successor). */
+  /** The cutover carries each code sidecar, so the ADC tier survives it. */
   def searchAsOfPqGen(spark: SparkSession, root: String, batchId: Long,
       queries: DataFrame, nProbe: Int = 0,
       k: Int = 10, rerank: Int = 200, sub: String = "pq"): DataFrame =
-    searchAsOfPq(spark, Generations.route(spark, root, batchId), batchId,
-      queries, nProbe, k, rerank, sub)
-
-  /** CDC routed across generations — a diff whose endpoints STRADDLE
-    * a cutover is well-defined: each endpoint reconstructs from the
-    * generation that answers it, the fingerprints are
-    * content-addressed (cluster placement is not payload), and the
-    * boundary itself is an empty diff by construction (the successor's
-    * base is the predecessor's head live set re-addressed), so the
-    * feed a consumer reads across a cutover contains exactly the real
-    * changes. Each side runs its own answerability guard. */
-  def asOfDiffGen(spark: SparkSession, root: String, fromBatch: Long,
-      toBatch: Long): DataFrame = {
-    def side(batchId: Long, as: String): DataFrame = {
-      val p = Generations.route(spark, root, batchId)
-      repairCompaction(spark, p)
-      requireAnswerable(spark, p, batchId)
-      asOfFingerprints(spark, p, batchId, ivfNonPayload, as)
-    }
-    diffFingerprints(side(fromBatch, "b_fp"), side(toBatch, "a_fp"))
-  }
-
-  /** Rollback within the CURRENT generation only. A target below the
-    * generation's base would have to un-do the cutover itself —
-    * refused, the rollback-guard discipline: older generations stay
-    * readable via as-of, and demoting the pointer is an explicit
-    * operator decision, not a rollback. */
-  def rollbackGen(spark: SparkSession, root: String, batchId: Long): Unit = {
-    val g = Generations.current(spark, root)
-    val p = Generations.genPath(root, g)
-    val floor = manifestIds(spark, p).headOption
-    require(floor.exists(batchId >= _),
-      s"rollback across a generation boundary refused: batch $batchId " +
-        s"predates generation $g's base/floor ${floor.getOrElse(-1L)} under " +
-        s"$root — a cutover is not reversible by rollback (older " +
-        "generations stay readable via as-of)")
-    rollback(spark, p, batchId)
-  }
-
-  /** The debt gauge per generation — one row per generation on disk,
-    * flagged with the pointer, so the envelope that triggers the NEXT
-    * cutover reads from the same table that certified the last one. */
-  def layoutDebtGen(spark: SparkSession, root: String): DataFrame = {
-    val cur = Generations.current(spark, root)
-    Generations.list(spark, root).map { g =>
-      layoutDebt(spark, Generations.genPath(root, g))
-        .select(lit(g.toLong).as("generation") +:
-          lit(g == cur).as("is_current") +: layoutDebtCols: _*)
-    }.reduce(_ unionByName _)
-  }
+    routed(spark, root, batchId)(
+      searchAsOfPq(spark, _, batchId, queries, nProbe, k, rerank, sub))
 
   /** Count of full rows NOT present in both frames (0 iff the two
     * frames are multiset-identical) — the set-level identity check
@@ -1956,9 +1096,9 @@ object SnapshotLayout {
     val centDiff = rowSetDiffCount(spark.read.parquet(s"$gen1/centroids"),
       gen2Cent, "n_cent_same_comp")
       .select(($"n_cent_same_comp" === 0L).cast("long").as("n_cent_diff"))
-    val boundary = diffFingerprints(
-        asOfFingerprints(spark, gen1, 2L, ivfNonPayload, "b_fp"),
-        asOfFingerprints(spark, gen2, 2L, ivfNonPayload, "a_fp"))
+    val boundary = VersionedLayout.diffFingerprints(
+        asOfFingerprints(spark, gen1, 2L, "b_fp"),
+        asOfFingerprints(spark, gen2, 2L, "a_fp"))
       .agg(count(lit(1)).as("n_boundary_diff"))
     val asof1After = searchAsOfGen(spark, root, 1L, queries)
     val oldServed = serveDiffCount(asof1Before, asof1After, "n_old_diff")

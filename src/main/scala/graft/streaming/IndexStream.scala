@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.index.{IvfIndex, NswIndex}
+import graft.index.{IvfIndex, NswIndex, NswSnapshotLayout, SnapshotLayout, VersionedLayout}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -136,12 +136,8 @@ object IndexStream {
   private[graft] def applyVersionedBatch(batch: DataFrame, streamBatchId: Long,
       path: String, maxBatches: Int = versionedCompactMaxBatches,
       retain: Int = versionedCompactRetain): Unit =
-    versionedSink(batch, streamBatchId, path,
-      (spark, id, ups, dels) =>
-        graft.index.SnapshotLayout.applyBatch(spark, path, id, ups, dels),
-      (spark, last) => graft.index.SnapshotLayout.rollback(spark, path, last),
-      (spark, upTo) => graft.index.SnapshotLayout.compact(spark, path, upTo),
-      maxBatches, retain)
+    if (!batch.isEmpty)
+      versionedSink(SnapshotLayout, batch, streamBatchId, path, maxBatches, retain)
 
   /** The NSW twin: mutation stream → the versioned GRAPH layout
     * ([[graft.index.NswSnapshotLayout]]'s contract) — same manifest-
@@ -157,46 +153,36 @@ object IndexStream {
   private[graft] def applyNswVersionedBatch(batch: DataFrame, streamBatchId: Long,
       path: String, maxBatches: Int = versionedCompactMaxBatches,
       retain: Int = versionedCompactRetain): Unit =
-    versionedSink(batch, streamBatchId, path,
-      (spark, id, ups, dels) =>
-        graft.index.NswSnapshotLayout.applyBatch(spark, path, id, ups, dels),
-      (spark, last) => graft.index.NswSnapshotLayout.rollback(spark, path, last),
-      (spark, upTo) => graft.index.NswSnapshotLayout.compact(spark, path, upTo),
-      maxBatches, retain)
+    if (!batch.isEmpty)
+      versionedSink(NswSnapshotLayout, batch, streamBatchId, path, maxBatches, retain)
 
-  private def versionedSink(batch: DataFrame, streamBatchId: Long, path: String,
-      apply: (org.apache.spark.sql.SparkSession, Long, DataFrame, DataFrame) => Unit,
-      repair: (org.apache.spark.sql.SparkSession, Long) => Unit,
-      compact: (org.apache.spark.sql.SparkSession, Long) => Unit,
-      maxBatches: Int, retain: Int): Unit = {
-    if (batch.isEmpty) return
+  /** One non-empty micro-batch into the versioned layout at `path` as
+    * layout batch `streamBatchId + 1`. */
+  private def versionedSink(layout: VersionedLayout, batch: DataFrame,
+      streamBatchId: Long, path: String, maxBatches: Int, retain: Int): Unit = {
     val spark = batch.sparkSession
     val layoutId = streamBatchId + 1
-    val applied = graft.index.SnapshotLayout.manifestIds(spark, path)
-    if (applied.contains(layoutId)) return // replay of a completed batch
+    val applied = layout.manifestIds(spark, path)
+    // replays skip whole: a manifested id, or one at/below the floor
+    // (applied before a compaction or a cutover)
+    if (applied.contains(layoutId) || applied.headOption.exists(layoutId <= _)) return
     // crash repair: anything on disk beyond the last manifested batch
     // is a partial apply — purge it before re-applying
-    applied.lastOption.filter(_ < layoutId).foreach(last => repair(spark, last))
+    applied.lastOption.filter(_ < layoutId).foreach(layout.rollback(spark, path, _))
+    // applyBatch persists everything it derives from the batch, so the
+    // pinned micro-batch is garbage the moment it returns. The upsert
+    // side keeps every mutation column except `op`: a meta-bearing
+    // layout's applyBatch requires its metadata columns
     val b = batch.localCheckpoint(true)
-    // apply() persists everything it derives from the batch (parquet
-    // writes + the manifest), so the pinned micro-batch is garbage the
-    // moment it returns — a long-running stream must not accumulate
-    // one pinned checkpoint per trigger (the free-after-supersede
-    // discipline)
-    // the upsert side keeps EVERY mutation column except `op`: a
-    // meta-bearing layout's applyBatch requires its metadata columns
-    // (and drops extras), so projecting down to (vec_id, embedding)
-    // here would fail every meta-bearing stream even when the
-    // mutations carry the labels the layout needs
     val upCols = b.columns.toSeq.filterNot(_ == "op").map(col)
-    try apply(spark, layoutId,
+    try layout.applyBatch(spark, path, layoutId,
       b.filter(col("op") === "upsert").select(upCols: _*),
       b.filter(col("op") === "delete").select(col("vec_id")))
     finally graft.core.Checkpoints.free(b)
     // scheduled compaction: bound the un-compacted batch count
-    val after = graft.index.SnapshotLayout.manifestIds(spark, path)
+    val after = layout.manifestIds(spark, path)
     if (after.size > maxBatches && retain >= 0 && retain < after.size - 1)
-      compact(spark, after(after.size - 1 - retain))
+      layout.compact(spark, path, after(after.size - 1 - retain))
   }
 
   // ---- generational sinks: the full lifecycle under ingestion ---------
@@ -255,12 +241,7 @@ object IndexStream {
       maxBatches: Int = versionedCompactMaxBatches,
       retain: Int = versionedCompactRetain,
       retainGens: Int = generationRetain): Unit =
-    generationalSink(batch, streamBatchId, root,
-      (spark, cur, id, ups, dels) =>
-        graft.index.SnapshotLayout.applyBatch(spark, cur, id, ups, dels),
-      (spark, cur, last) => graft.index.SnapshotLayout.rollback(spark, cur, last),
-      (spark, cur, upTo) => graft.index.SnapshotLayout.compact(spark, cur, upTo),
-      spark => graft.index.SnapshotLayout.newGeneration(spark, root): Unit,
+    generationalSink(SnapshotLayout, batch, streamBatchId, root,
       threshold, maxBatches, retain, retainGens)
 
   /** The NSW twin: generational graph root with automatic cutover —
@@ -281,40 +262,27 @@ object IndexStream {
       maxBatches: Int = versionedCompactMaxBatches,
       retain: Int = versionedCompactRetain,
       retainGens: Int = generationRetain): Unit =
-    generationalSink(batch, streamBatchId, root,
-      (spark, cur, id, ups, dels) =>
-        graft.index.NswSnapshotLayout.applyBatch(spark, cur, id, ups, dels),
-      (spark, cur, last) =>
-        graft.index.NswSnapshotLayout.rollback(spark, cur, last),
-      (spark, cur, upTo) =>
-        graft.index.NswSnapshotLayout.compact(spark, cur, upTo),
-      spark => graft.index.NswSnapshotLayout.newGeneration(spark, root): Unit,
+    generationalSink(NswSnapshotLayout, batch, streamBatchId, root,
       threshold, maxBatches, retain, retainGens)
 
-  private def generationalSink(batch: DataFrame, streamBatchId: Long,
-      root: String,
-      apply: (org.apache.spark.sql.SparkSession, String, Long, DataFrame, DataFrame) => Unit,
-      repair: (org.apache.spark.sql.SparkSession, String, Long) => Unit,
-      compact: (org.apache.spark.sql.SparkSession, String, Long) => Unit,
-      cutover: org.apache.spark.sql.SparkSession => Unit,
-      threshold: Double, maxBatches: Int, retain: Int,
-      retainGens: Int): Unit = {
+  private def generationalSink(layout: VersionedLayout, batch: DataFrame,
+      streamBatchId: Long, root: String, threshold: Double, maxBatches: Int,
+      retain: Int, retainGens: Int): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     def curPath = graft.index.Generations.genPath(root,
       graft.index.Generations.current(spark, root))
     // the envelope: past the threshold, the gauge's signal becomes
     // the action (one sidecar JSON read on the batches that don't).
-    // Checked BEFORE the replay early-return as well as after the
-    // apply: a crash between a batch's apply (manifest written) and
-    // its cutover replays as a skip, and deferring the pending
-    // cutover to "the next non-replay batch" starves it forever on a
-    // stream that then goes quiet — the replayed trigger itself must
-    // complete the crashed cutover.
+    // Checked BEFORE the replay skip as well as after the apply: a
+    // crash between a batch's apply (manifest written) and its
+    // cutover replays as a skip, and deferring the pending cutover to
+    // "the next non-replay batch" starves it forever on a stream that
+    // then goes quiet — the replayed trigger itself must complete it.
     def envelopeCutover(): Unit =
       graft.index.IndexMeta.read(spark, curPath).foreach { m =>
         if (m.fittedN > 0 && m.deltaSinceFit.toDouble / m.fittedN > threshold) {
-          cutover(spark)
+          layout.newGeneration(spark, root)
           // retention, on the cutover trigger only, in TWO PHASES so a
           // live change-feed trigger never reads a vanished file:
           // purge the PREVIOUS cycle's tombstones first (they have
@@ -334,26 +302,8 @@ object IndexStream {
         }
       }
     envelopeCutover()
-    val cur = curPath // re-resolved: a completed pending cutover moved it
-    val layoutId = streamBatchId + 1
-    val applied = graft.index.SnapshotLayout.manifestIds(spark, cur)
-    // replays skip whole: a manifested id, or one at/below the current
-    // generation's floor (applied before a cutover or compaction)
-    if (applied.contains(layoutId) ||
-        applied.headOption.exists(layoutId <= _)) return
-    // crash repair within the current generation: anything on disk
-    // beyond its last manifested batch is a partial apply
-    applied.lastOption.filter(_ < layoutId).foreach(last =>
-      repair(spark, cur, last))
-    val b = batch.localCheckpoint(true)
-    val upCols = b.columns.toSeq.filterNot(_ == "op").map(col)
-    try apply(spark, cur, layoutId,
-      b.filter(col("op") === "upsert").select(upCols: _*),
-      b.filter(col("op") === "delete").select(col("vec_id")))
-    finally graft.core.Checkpoints.free(b)
-    val after = graft.index.SnapshotLayout.manifestIds(spark, cur)
-    if (after.size > maxBatches && retain >= 0 && retain < after.size - 1)
-      compact(spark, cur, after(after.size - 1 - retain))
+    // re-resolved: a completed pending cutover moved the pointer
+    versionedSink(layout, batch, streamBatchId, curPath, maxBatches, retain)
     envelopeCutover()
   }
 
@@ -521,17 +471,17 @@ object IndexStream {
     * goes quiet at the next cutover. */
   def changesIvf(spark: org.apache.spark.sql.SparkSession, path: String,
       outPath: String): DataStreamWriter[Row] =
-    changes(spark, s"$path/_snapshots", outPath,
-      (from, to) => graft.index.SnapshotLayout.asOfDiff(spark, path, from, to),
-      () => graft.index.SnapshotLayout.manifestIds(spark, path))
+    changesOf(spark, SnapshotLayout, path, outPath)
 
   /** The NSW twin: change feed over a versioned GRAPH layout. */
   def changesNsw(spark: org.apache.spark.sql.SparkSession, path: String,
       outPath: String): DataStreamWriter[Row] =
+    changesOf(spark, NswSnapshotLayout, path, outPath)
+
+  private def changesOf(spark: org.apache.spark.sql.SparkSession,
+      layout: VersionedLayout, path: String, outPath: String): DataStreamWriter[Row] =
     changes(spark, s"$path/_snapshots", outPath,
-      (from, to) =>
-        graft.index.NswSnapshotLayout.asOfDiff(spark, path, from, to),
-      () => graft.index.SnapshotLayout.manifestIds(spark, path))
+      layout.asOfDiff(spark, path, _, _), () => layout.manifestIds(spark, path))
 
   /** Continuous change feed over a GENERATIONAL versioned root — the
     * streaming twin of [[graft.index.SnapshotLayout.asOfDiffGen]],
@@ -566,18 +516,18 @@ object IndexStream {
     * vanished file. */
   def changesIvfGen(spark: org.apache.spark.sql.SparkSession, root: String,
       outPath: String): DataStreamWriter[Row] =
-    changes(spark, s"$root/generation=*/_snapshots", outPath,
-      (from, to) =>
-        graft.index.SnapshotLayout.asOfDiffGen(spark, root, from, to),
-      () => genManifestIds(spark, root), filterToLive = true)
+    changesGenOf(spark, SnapshotLayout, root, outPath)
 
   /** The NSW twin: generational change feed over a graph root. */
   def changesNswGen(spark: org.apache.spark.sql.SparkSession, root: String,
       outPath: String): DataStreamWriter[Row] =
+    changesGenOf(spark, NswSnapshotLayout, root, outPath)
+
+  private def changesGenOf(spark: org.apache.spark.sql.SparkSession,
+      layout: VersionedLayout, root: String, outPath: String): DataStreamWriter[Row] =
     changes(spark, s"$root/generation=*/_snapshots", outPath,
-      (from, to) =>
-        graft.index.NswSnapshotLayout.asOfDiffGen(spark, root, from, to),
-      () => genManifestIds(spark, root), filterToLive = true)
+      layout.asOfDiffGen(spark, root, _, _), () => genManifestIds(spark, root),
+      filterToLive = true)
 
   /** All manifest ids visible under a generational root (the
     * head-regression guard's view): per generation bounded by the
@@ -585,7 +535,7 @@ object IndexStream {
   private def genManifestIds(spark: org.apache.spark.sql.SparkSession,
       root: String): Seq[Long] =
     graft.index.Generations.list(spark, root)
-      .flatMap(g => graft.index.SnapshotLayout.manifestIds(spark,
+      .flatMap(g => SnapshotLayout.manifestIds(spark,
         graft.index.Generations.genPath(root, g)))
       .distinct.sorted
 
@@ -680,42 +630,23 @@ object IndexStream {
   private[graft] def readAnchor(spark: org.apache.spark.sql.SparkSession,
       outPath: String): Option[Long] = {
     val p = anchorPath(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      body.trim match {
-        case AnchorPattern(n) => Some(n.toLong)
-        // a corrupt anchor must NOT read as "never anchored" — that
-        // would silently re-anchor at the next manifest and drop every
-        // change since the real anchor from a feed whose contract is
-        // fail-loud. (The tmp+rename writer below makes this state
-        // unreachable by crash; refusing covers external damage too.)
-        case other => throw new IllegalStateException(
-          s"corrupt change-feed anchor at $p: '$other' — refusing to " +
-            "re-anchor over lost history; restore or delete the consumer dir")
-      }
+    VersionedLayout.readFile(VersionedLayout.fsOf(spark, outPath), p).map {
+      case AnchorPattern(n) => n.toLong
+      // a corrupt anchor must NOT read as "never anchored" — that
+      // would silently re-anchor at the next manifest and drop every
+      // change since the real anchor from a feed whose contract is
+      // fail-loud. (The atomic writer below makes this state
+      // unreachable by crash; refusing covers external damage too.)
+      case other => throw new IllegalStateException(
+        s"corrupt change-feed anchor at $p: '$other' — refusing to " +
+          "re-anchor over lost history; restore or delete the consumer dir")
     }
   }
 
   private[graft] def writeAnchor(spark: org.apache.spark.sql.SparkSession,
-      outPath: String, batchId: Long): Unit = {
-    val p = anchorPath(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$outPath/._graft_changes_anchor.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"anchor_batch_id":$batchId}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"could not commit change-feed anchor $p")
-    }
-  }
+      outPath: String, batchId: Long): Unit =
+    VersionedLayout.commitFile(spark, anchorPath(outPath),
+      s"""{"anchor_batch_id":$batchId}""")
 
   /** Session memo of the pristine GENERATIONAL CDC scenario: the
     * four-batch history of
