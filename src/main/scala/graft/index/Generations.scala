@@ -63,8 +63,7 @@ object Generations {
     * resolve. Fails loudly on a root with no pointer at all — routing
     * from a guessed directory could serve a half-built cutover. */
   def current(spark: SparkSession, root: String): Int = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     versionedPointers(fs, root) match {
       case gs if gs.nonEmpty => gs.max
       case _ =>
@@ -98,7 +97,7 @@ object Generations {
   private[graft] def writePointer(spark: SparkSession, root: String,
       g: Int): Unit = {
     val p = new Path(s"$root/_current.v$g.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     val existing = versionedPointers(fs, root)
     require(existing.forall(_ <= g),
       s"non-monotonic generation commit under $root: pointer v$g would " +
@@ -120,8 +119,7 @@ object Generations {
     * files await the deferred purge). */
   def list(spark: SparkSession, root: String): Seq[Int] = {
     val cur = current(spark, root)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     (1 to cur).filter { g =>
       fs.exists(new Path(genPath(root, g))) && !isRetired(fs, root, g)
     }
@@ -151,7 +149,7 @@ object Generations {
       s"generation $g is ${if (g == cur) "CURRENT" else "not a predecessor"} " +
         s"under $root (pointer at $cur) — only old generations can be retired")
     val p = tombstone(root, g)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     require(fs.exists(new Path(genPath(root, g))),
       s"generation $g does not exist under $root")
     VersionedLayout.commitFile(spark, p, s"""{"retired":$g}""")
@@ -164,8 +162,7 @@ object Generations {
     * at routing since phase 1). Returns the purged numbers. */
   def purgeRetired(spark: SparkSession, root: String): Seq[Int] = {
     val cur = current(spark, root)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     (1 until cur).filter { g =>
       fs.exists(new Path(genPath(root, g))) && isRetired(fs, root, g)
     }.map { g => fs.delete(new Path(genPath(root, g)), true); g }
@@ -213,7 +210,7 @@ object Generations {
       s"generation $g is ${if (g == cur) "CURRENT" else "not a predecessor"} " +
         s"under $root (pointer at $cur) — only old generations can be retired")
     val p = new Path(genPath(root, g))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = VersionedLayout.fsOf(spark, root)
     require(fs.exists(p), s"generation $g does not exist under $root")
     fs.delete(p, true)
   }

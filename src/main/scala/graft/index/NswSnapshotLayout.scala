@@ -2,7 +2,7 @@ package graft.index
 
 import graft.core.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned NSW graph layout: [[VersionedLayout]]'s append-only
@@ -27,7 +27,7 @@ object NswSnapshotLayout extends VersionedLayout {
 
   protected def placement: Option[String] = None
 
-  protected def payloadRoots: Seq[String] = Seq("vectors", "edges")
+  private[index] def payloadRoots: Seq[String] = Seq("vectors", "edges")
 
   protected def codeStage(sub: String): String = s"$sub/codes"
 
@@ -100,13 +100,17 @@ object NswSnapshotLayout extends VersionedLayout {
   def asOfGraph(spark: SparkSession, path: String,
       batchId: Long): (DataFrame, DataFrame) = {
     val live = asOfVectors(spark, path, batchId).localCheckpoint(true)
-    val edges = spark.read.parquet(s"$path/edges")
+    (live, edgesAmong(spark, path, batchId, live))
+  }
+
+  /** The edges of batches ≤ `batchId` with both endpoints in `ids`. */
+  private def edgesAmong(spark: SparkSession, path: String, batchId: Long,
+      ids: DataFrame): DataFrame =
+    spark.read.parquet(s"$path/edges")
       .filter(col("batch_id") <= batchId)
       .select(col("src"), col("dst"))
-      .join(live.select(col("vec_id").as("src")), Seq("src"), "left_semi")
-      .join(live.select(col("vec_id").as("dst")), Seq("dst"), "left_semi")
-    (live, edges)
-  }
+      .join(ids.select(col("vec_id").as("src")), Seq("src"), "left_semi")
+      .join(ids.select(col("vec_id").as("dst")), Seq("dst"), "left_semi")
 
   /** Beam serve from the as-of graph. The walk runs eagerly (its
     * hops checkpoint as they go) and its result reads only those hop
@@ -153,11 +157,7 @@ object NswSnapshotLayout extends VersionedLayout {
       .select(col("vec_id").as("node") +: col("code") +: col("batch_id") +:
         metaCols.map(col): _*)
       .localCheckpoint(true)
-    val edges = spark.read.parquet(s"$path/edges")
-      .filter(col("batch_id") <= batchId)
-      .select(col("src"), col("dst"))
-      .join(winners.select(col("vec_id").as("src")), Seq("src"), "left_semi")
-      .join(winners.select(col("vec_id").as("dst")), Seq("dst"), "left_semi")
+    val edges = edgesAmong(spark, path, batchId, winners)
     val edgeSel = edges.select(col("src").as("node"), col("dst"))
       .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
       .localCheckpoint(true)
@@ -178,15 +178,7 @@ object NswSnapshotLayout extends VersionedLayout {
     graft.core.Checkpoints.free(winners)
     graft.core.Checkpoints.free(codes)
     graft.core.Checkpoints.free(edgeSel)
-    val raw = spark.read.parquet(s"$path/vectors")
-    val scored = raw
-      .join(broadcast(cand.withColumnRenamed("node", "vec_id")),
-        Seq("vec_id", "batch_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.core.Stab.e6(graft.functions.vectors.cosineSim(
-          col("embedding"), col("q_vec"))).as("score_e6"))
-    graft.operators.KnnSearch.topK(scored, k, asc = false)
+    rerankExact(spark, path, cand.withColumnRenamed("node", "vec_id"), queries, k)
   }
 
   /** PRE-filter ADC beam walk at an as-of point — the graph twin of
@@ -243,98 +235,135 @@ object NswSnapshotLayout extends VersionedLayout {
     out
   }
 
-  /** `nsw_search_asof`: the graph layout's as-of/rollback contract as
-    * the same deterministic four-batch grid as `ivf_search_asof` —
-    * base graph over `vec_id >= 50` (batch 0), upsert `< 25` (batch
-    * 1), delete its `% 7 = 0` ids + upsert `25..49` (batch 2), a
-    * corrupt zero-vector batch 3; serve AS OF batch 2, then roll back
-    * and re-serve head. Columns: `self_found`/`top1_exact` per probe
-    * (the beam-linked delta genuinely serves at the good snapshot),
-    * `tombstone_hides` (deleted ids and their edges are gone at 2 —
-    * including from SURVIVORS' adjacency), `asof1_predates`,
-    * `rollback_identical`, `sidecar_restored`. */
-  /** Session memo of the pristine four-batch graph scenario — the
-    * [[SnapshotLayout.pristineScenario]] twin: built once per
-    * (session, dir), served from per-invocation filesystem copies so
-    * the destructive steps (rollback, compaction) never touch the
-    * original, invalidated by store writes under `dir`. The three
-    * beam-linking applyBatch calls — a 10-hop BSP loop each, the
-    * dominant cost of the old rebuild-per-invocation shape — now run
-    * once per session. */
-  private val scenarioCache = new graft.store.VersionedMemo[String](p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(p).getParentFile))
+  /** The NSW hooks of the lifecycle grids ([[LayoutGrids]]). */
+  private object grids extends LayoutGrids(this, "nsw") {
+    import LayoutGrids.deadAt2
 
-  private[graft] def pristineScenario(spark: SparkSession, dir: String): String =
-    scenarioCache.get(spark, s"nsw_asof_scenario:$dir", dir) {
-      import spark.implicits._
-      // meta-bearing since round 10 (`label` rides the stored rows and
-      // every reconstruction), so the scenario serves the filtered
-      // as-of entry too
-      val all = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding", $"label")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-asof-nsw").toString + "/pristine"
-      val base = all.filter($"vec_id" >= 50).localCheckpoint(true)
-      // the base graph builds directly from the pinned slice; init
-      // persists both, so the checkpoint is garbage once the batches
-      // are applied (everything after reconstructs from the layout) —
-      // free it instead of pinning one copy per scenario build
-      init(base, NswIndex.buildEdgesLsh(base.select($"vec_id", $"embedding")), path)
-      applyBatch(spark, path, 1L,
-        upserts = all.filter($"vec_id" < 25),
-        deletes = all.limit(0).select($"vec_id"))
-      applyBatch(spark, path, 2L,
-        upserts = all.filter($"vec_id" >= 25 && $"vec_id" < 50),
-        deletes = all.filter($"vec_id" < 25 && $"vec_id" % 7 === 0).select($"vec_id"))
-      applyBatch(spark, path, 3L,
-        upserts = all.filter($"vec_id" < 10)
-          .select($"vec_id", transform($"embedding", _ => lit(0.0f)).as("embedding"),
-            $"label"),
-        deletes = all.limit(0).select($"vec_id"))
-      graft.core.Checkpoints.free(base)
-      path
+    /** The base graph builds from the pinned slice; the batches then
+      * beam-link against the layout. No code sidecar: the PQ grid has
+      * its own scenario ([[pqScenario]]). */
+    protected def initScenario(spark: SparkSession, dir: String, base: DataFrame,
+        path: String): Unit = {
+      val pinned = base.localCheckpoint(true)
+      try init(pinned, NswIndex.buildEdgesLsh(pinned.select(col("vec_id"), col("embedding"))),
+        path)
+      finally graft.core.Checkpoints.free(pinned)
     }
 
-  def nswSearchAsof(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/nsw"
-    SnapshotLayout.copyLayout(spark, pristineScenario(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val asof2 = searchAsOf(spark, path, 2L, queries).localCheckpoint(true)
-    val perProbe = asof2.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    val (live2, edges2) = asOfGraph(spark, path, 2L)
-    val deadAt2 = ($"vec_id" < 25 && $"vec_id" % 7 === 0)
-    val tombOk = live2.filter(deadAt2).agg(count(lit(1)).as("n_dead_live"))
-      .crossJoin(edges2
-        .filter(($"src" < 25 && $"src" % 7 === 0) ||
-          ($"dst" < 25 && $"dst" % 7 === 0))
-        .agg(count(lit(1)).as("n_dead_edges")))
-    val live1 = asOfVectors(spark, path, 1L)
-    val asof1Ok = live1.agg(
-      count(when($"vec_id" >= 25 && $"vec_id" < 50, 1)).as("n_future_live"))
-    rollback(spark, path, 2L)
-    val headAfter = searchAsOf(spark, path, Long.MaxValue, queries)
-    val identical = SnapshotLayout.serveDiffCount(asof2, headAfter, "n_diff")
-    val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(-1L, -1L))
-    val manifest = readManifest(spark, path, 2L)
-      .getOrElse(IndexMeta.Meta(-2L, -2L))
-    val globals = tombOk.crossJoin(asof1Ok).crossJoin(identical)
-      .select(
-        ($"n_dead_live" === 0L && $"n_dead_edges" === 0L).as("tombstone_hides"),
-        ($"n_future_live" === 0L).as("asof1_predates"),
-        ($"n_diff" === 0L).as("rollback_identical"),
-        lit(meta == manifest).as("sidecar_restored"))
-    perProbe.crossJoin(broadcast(globals))
-      .select($"q_id", $"self_found", $"top1_exact", $"tombstone_hides",
-        $"asof1_predates", $"rollback_identical", $"sidecar_restored")
-      .orderBy($"q_id")
+    protected def serve(spark: SparkSession, path: String, batchId: Long,
+        queries: DataFrame): DataFrame = searchAsOf(spark, path, batchId, queries)
+
+    /** A deleted node is gone, and so are its edges from its
+      * SURVIVORS' adjacency. */
+    override protected def tombstoneHides(spark: SparkSession, path: String,
+        batchId: Long, dead: Column => Column): Boolean = {
+      val (live, edges) = asOfGraph(spark, path, batchId)
+      try live.filter(dead(col("vec_id"))).isEmpty &&
+        edges.filter(dead(col("src")) || dead(col("dst"))).isEmpty
+      finally graft.core.Checkpoints.free(live)
+    }
+
+    /** The walk's other input: the live edge set. */
+    override protected def extraState(spark: SparkSession, path: String,
+        batchId: Long): Seq[DataFrame] = {
+      val (live, edges) = asOfGraph(spark, path, batchId)
+      val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+      graft.core.Checkpoints.free(live)
+      Seq(e)
+    }
+
+    /** The scenario CONTAINS the append-only re-add wart: ids 0 and 7
+      * die at batch 2 and batch 3 re-adds them, so both sides of the
+      * narrowed [[compact]] contract show:
+      *  - `stale_healed`: after compaction every edge touching them
+      *    comes from batch 3 — the stale-position edges that head
+      *    reconstruction would have revived are physically gone;
+      *  - `heal_nonvacuous`: those stale edges existed before. */
+    protected def compactExtras(spark: SparkSession,
+        path: String): () => Seq[(String, Boolean)] = {
+      val reAdded = (c: Column) => c < 10 && c % 7 === 0
+      def stale(batches: Column) = spark.read.parquet(s"$path/edges")
+        .filter(batches && (reAdded(col("src")) || reAdded(col("dst")))).count()
+      val before = stale(col("batch_id") <= 2)
+      () => Seq("stale_healed" -> (stale(col("batch_id") =!= 3) == 0L),
+        "heal_nonvacuous" -> (before > 0L))
+    }
+
+    override protected def pqScenario(spark: SparkSession, dir: String): String =
+      pristineScenarioPq(spark, dir)
+
+    protected def pqServe(spark: SparkSession, path: String, queries: DataFrame,
+        rerank: Option[Int]): DataFrame =
+      rerank.fold(searchAsOfPq(spark, path, 2L, queries))(r =>
+        searchAsOfPq(spark, path, 2L, queries, rerank = r))
+
+    /** `matches_raw` does NOT transfer (the quantized walk visits a
+      * different node set than the raw walk); instead:
+      *  - `codes_cover_live`: every live row as of 2 owns exactly one
+      *    live code row (a row without one is invisible to the walk);
+      *  - `filtered_k_legal`: the filtered ADC serve returns a full k
+      *    per probe, each satisfying the predicate re-derived from the
+      *    TABLE (a stale sidecar label or a post-filter shortfall). */
+    protected def pqExtras(spark: SparkSession, dir: String, path: String,
+        queries: DataFrame, liveCodes: DataFrame,
+        identity: DataFrame): Seq[(String, Boolean)] = {
+      import spark.implicits._
+      val qf = LayoutGrids.probeSet(spark, dir, $"label".as("q_label"))
+      val hits = searchAsOfPqFiltered(spark, path, 2L, qf, $"label" === $"q_label")
+      val legal = hits
+        .join(broadcast(qf.select($"q_id", $"q_label")), Seq("q_id"))
+        .join(Tables.embeddings(spark, dir)
+          .select($"vec_id".as("neighbor_id"), $"label".as("true_label")), Seq("neighbor_id"))
+        .groupBy($"q_id").agg((count(lit(1)) === 10L &&
+          count(when($"true_label" =!= $"q_label", 1)) === 0L).as("ok"))
+        .agg((count(when(!$"ok", 1)) === 0L &&
+          count(lit(1)) === queries.count()).as("legal"))
+        .head().getBoolean(0)
+      val nLive = asOfVectors(spark, path, 2L).count()
+      val cover = liveCodes.count() == nLive &&
+        liveCodes.select($"vec_id").distinct().count() == nLive
+      Seq("codes_cover_live" -> cover, "filtered_k_legal" -> legal)
+    }
+
+    protected def pqColumns: Seq[String] = Seq("codes_cover_live", "tombstone_hides",
+      "compact_identical", "dirs_bounded", "rollback_prunes", "filtered_k_legal")
+
+    protected def filteredServe(spark: SparkSession, path: String,
+        queries: DataFrame, pred: Column): DataFrame =
+      searchAsOfFiltered(spark, path, 2L, queries, pred)
+
+    /** A deliberately NON-default 4×8 sidecar: the carry must keep the
+      * stored geometry, where a carry that re-defaulted to 8×16 would
+      * still pass an exists-check. */
+    override protected def prepareGen1(spark: SparkSession, gen1: String): Unit =
+      initPq(spark, gen1, m = 4, codes = 8)
+
+    /** A fresh LSH build over the scenario's as-of-2 live set — the
+      * same content as the head the cutover re-fits, on a stable
+      * session-lived path the memo can re-evaluate from. */
+    override protected def freshComparator(spark: SparkSession,
+        dir: String): Option[() => DataFrame] = Some { () =>
+      val e = NswIndex.edgesCachedFor(s"nsw_gen_fresh:$dir",
+        asOfVectors(spark, this.pristineScenario(spark, dir), 2L)
+          .select(col("vec_id"), col("embedding")), dir)
+      e.count()
+      e
+    }
+
+    /** The successor's base graph equals a fresh LSH build, set-level. */
+    protected def matchesFresh(spark: SparkSession, gen1: String, gen2: String,
+        fresh: Option[DataFrame]): Boolean =
+      fresh.exists(f => LayoutGrids.diffRows(f.select(col("src"), col("dst")),
+        spark.read.parquet(s"$gen2/edges").filter(col("batch_id") === 2L)
+          .select(col("src"), col("dst"))) == 0L)
   }
+
+  private[graft] def pristineScenario(spark: SparkSession, dir: String): String =
+    grids.pristineScenario(spark, dir)
+
+  /** `nsw_search_asof`: [[LayoutGrids.asOfGrid]]. */
+  def nswSearchAsof(spark: SparkSession, dir: String): DataFrame =
+    grids.asOfGrid(spark, dir)
 
   val nswSearchAsofSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -343,114 +372,10 @@ object NswSnapshotLayout extends VersionedLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  /** `nsw_compact`: the graph family's compaction contract as a
-    * driver-checked grid over a copy of [[pristineScenario]],
-    * `compact(upTo = 2)`. The scenario deliberately CONTAINS the
-    * append-only re-add wart (ids 0 and 7 are tombstoned at batch 2
-    * and re-added by the corrupt batch 3), so the grid pins BOTH
-    * sides of the narrowed contract (see [[compact]]):
-    *  - `serve2_identical`: the as-of-2 SERVE INPUT — live
-    *    fingerprint set + live edge set, which the deterministic beam
-    *    walk is a pure function of — is set-identical before/after
-    *    (round 11: implies the old walk-level identity and pays no
-    *    walks; [[graphStateAt]]);
-    *  - `stale_healed`: post-compaction, every surviving edge touching
-    *    a dead-at-2-then-re-added id comes from batch 3 (its re-add
-    *    links) — the batch-1 stale-position edges that pre-compaction
-    *    head reconstruction would have revived are PHYSICALLY gone;
-    *  - `heal_nonvacuous`: those stale edges existed pre-compaction
-    *    (otherwise `stale_healed` would pass on an empty check);
-    *  - `history_truncated` / `tombstones_gone` / `dirs_bounded`:
-    *    manifests == {2, 3}, no tombstone list ≤ 2, no vector/edge
-    *    directory below 2;
-    *  - `guard_refuses`: rollback to the compacted-away batch 1
-    *    throws instead of deleting the consolidated base;
-    *  - `rollback_works`: rollback to 2 serves the as-of-2 rows. */
-  /** The full SERVE INPUT at an as-of point, keys + hashes only: the
-    * (vec_id, payload-fingerprint) live set and the materialized live
-    * edge set. The beam serve is a deterministic function of exactly
-    * these two sets (+ the query frame), so set identity here IMPLIES
-    * serve identity — the round-11 floor trim: the compact grid used
-    * to prove identity by running three full beam walks; comparing
-    * the walks' inputs is strictly stronger and pays no walk. */
-  private def graphStateAt(spark: SparkSession, path: String,
-      batchId: Long): (DataFrame, DataFrame) = {
-    val fps = asOfFingerprints(spark, path, batchId, "fp").localCheckpoint(true)
-    val (live, edges) = asOfGraph(spark, path, batchId)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    graft.core.Checkpoints.free(live)
-    (fps, e)
-  }
-
-  private def stateDiff(spark: SparkSession,
-      a: (DataFrame, DataFrame), b: (DataFrame, DataFrame)): Long = {
-    def d(x: DataFrame, y: DataFrame) = SnapshotLayout
-      .rowSetDiffCount(x, y, "n").collect().head.getLong(0)
-    d(a._1, b._1) + d(a._2, b._2)
-  }
-
-  def nswCompactChecked(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/nsw_compact"
-    SnapshotLayout.copyLayout(spark, pristineScenario(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    // dead at upTo=2, re-added by batch 3: `< 10 && % 7 == 0`
-    val deadReAdded = (c: org.apache.spark.sql.Column) =>
-      c < 10 && c % 7 === 0
-    val staleBefore = spark.read.parquet(s"$path/edges")
-      .filter($"batch_id" <= 2 && (deadReAdded($"src") || deadReAdded($"dst")))
-      .count()
-    val state2Before = graphStateAt(spark, path, 2L)
-    compact(spark, path, 2L)
-    val state2After = graphStateAt(spark, path, 2L)
-    // ONE end-to-end beam serve of the COMPACTED layout (the IVF
-    // twin's discipline): input identity implies serve identity only
-    // if the walk still runs on the compacted tree
-    val served = searchAsOf(spark, path, 2L, queries).localCheckpoint(true)
-    val perProbe = served.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    val staleAfter = spark.read.parquet(s"$path/edges")
-      .filter($"batch_id" =!= 3 && (deadReAdded($"src") || deadReAdded($"dst")))
-      .count()
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def batchIdsOf(sub: String): Set[Long] = {
-      val root = new Path(s"$path/$sub")
-      if (!fs.exists(root)) Set.empty
-      else fs.listStatus(root).filter(_.isDirectory)
-        .flatMap(d => batchDirId(d.getPath.getName)).toSet
-    }
-    val manifests = manifestIds(spark, path)
-    val guardOk =
-      try { rollback(spark, path, 1L); false }
-      catch { case _: IllegalArgumentException => true }
-    rollback(spark, path, 2L)
-    val headRolled = graphStateAt(spark, path, Long.MaxValue)
-    val serve2Id = stateDiff(spark, state2Before, state2After) == 0L
-    val rolledId = stateDiff(spark, state2Before, headRolled) == 0L
-    Seq(state2Before, state2After, headRolled).foreach { case (v, e) =>
-      graft.core.Checkpoints.free(v); graft.core.Checkpoints.free(e)
-    }
-    val globals = broadcast(spark.range(1).select(
-      lit(serve2Id).as("serve2_identical"),
-      lit(staleAfter == 0L).as("stale_healed"),
-      lit(staleBefore > 0L).as("heal_nonvacuous"),
-      lit(manifests == Seq(2L, 3L)).as("history_truncated"),
-      lit(batchIdsOf("tombstones").forall(_ > 2L)).as("tombstones_gone"),
-      lit(batchIdsOf("vectors").forall(_ >= 2L) &&
-        batchIdsOf("edges").forall(_ >= 2L)).as("dirs_bounded"),
-      lit(guardOk).as("guard_refuses"),
-      lit(rolledId).as("rollback_works")))
-    perProbe.crossJoin(globals)
-      .select($"q_id", $"self_found", $"top1_exact", $"serve2_identical",
-        $"stale_healed", $"heal_nonvacuous", $"history_truncated",
-        $"tombstones_gone", $"dirs_bounded", $"guard_refuses",
-        $"rollback_works")
-      .orderBy($"q_id")
-  }
+  /** `nsw_compact`: [[LayoutGrids.compactGrid]] plus `stale_healed`
+    * and `heal_nonvacuous`. */
+  def nswCompactChecked(spark: SparkSession, dir: String): DataFrame =
+    grids.compactGrid(spark, dir)
 
   val nswCompactCheckedSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -461,28 +386,9 @@ object NswSnapshotLayout extends VersionedLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  /** `nsw_search_asof_filtered`: the graph family's filtered × time
-    * travel cell — [[searchAsOfFiltered]] over the meta-bearing
-    * scenario as of the good batch, pushed through the standard
-    * filtered invariant grid (`nsw_search_filtered`'s shape):
-    * `k_results` (pre-filter walk semantics at the compensated beam),
-    * `all_match_label` (labels re-derived from the TABLE so stale
-    * reconstruction metadata flips the hash), `self_found` /
-    * `top1_exact` (the good batch-1/2 embeddings serve even though
-    * corrupt batch 3 exists at head), `monotone`. */
-  def nswSearchAsofFiltered(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    // read-only over the scenario — serves straight from the
-    // pristine memo (the copy discipline is for destructive entries)
-    val path = pristineScenario(spark, dir)
-    val queries = emb.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
-        $"label".as("q_label"))
-    val hits = searchAsOfFiltered(spark, path, 2L, queries,
-      col("label") === col("q_label")).localCheckpoint(true)
-    ContractGrids.filteredServeGrid(spark, dir, hits)
-  }
+  /** `nsw_search_asof_filtered`: [[LayoutGrids.filteredGrid]]. */
+  def nswSearchAsofFiltered(spark: SparkSession, dir: String): DataFrame =
+    grids.filteredGrid(spark, dir)
 
   val nswSearchAsofFilteredSql: String =
     """SELECT vec_id AS q_id, true AS k_results, true AS all_match_label,
@@ -490,12 +396,10 @@ object NswSnapshotLayout extends VersionedLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  /** Session memo of the PQ-AUGMENTED graph scenario:
-    * [[pristineScenario]] copied once per session with a
-    * full-coverage sidecar ([[initPq]] back-fills every batch's rows
-    * at their own batch_id), so the versioned compressed entry pays
-    * codebook training once and each invocation copies file bytes
-    * only. */
+  /** Session memo of the scenario with a full-coverage code sidecar
+    * ([[initPq]] back-fills every batch's rows at their own batch_id),
+    * so the PQ grid trains codebooks once and each invocation copies
+    * file bytes only. */
   private val pqScenarioCache = new graft.store.VersionedMemo[String](p =>
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(p).getParentFile))
@@ -505,103 +409,15 @@ object NswSnapshotLayout extends VersionedLayout {
     pqScenarioCache.get(spark, s"nsw_asof_pq_scenario:$dir", dir) {
       val path = java.nio.file.Files
         .createTempDirectory("graft-asof-nsw-pq").toString + "/pristine"
-      SnapshotLayout.copyLayout(spark, pristineScenario(spark, dir), path)
+      LayoutGrids.copyLayout(spark, pristineScenario(spark, dir), path)
       initPq(spark, path)
       path
     }
 
-  /** `nsw_search_asof_pq`: the versioned GRAPH compressed tier —
-    * [[searchAsOfPq]] over the sidecar-bearing scenario, pushed
-    * through an invariant grid (per-invocation copy; compaction and
-    * rollback are destructive). The IVF twin's `matches_raw` identity
-    * does NOT transfer — the quantized walk legitimately visits a
-    * different node set than the raw walk — so the grid pins the
-    * identities that DO hold:
-    *  - `self_found` / `top1_exact`: the production ADC serve as of
-    *    batch 2 finds each probe's own GOOD embedding at 1.0 (batch
-    *    3's corrupt codes exist at head but must not serve — the code
-    *    rows version correctly);
-    *  - `codes_cover_live`: every live row as of 2 owns exactly one
-    *    live code row (delta coverage is complete — a row without a
-    *    code is invisible to the walk);
-    *  - `tombstone_hides`: no deleted id owns a live code row as of 2;
-    *  - `compact_identical`: the as-of-2 ADC serve is row-identical
-    *    across `compact(2)` — the walk is a deterministic function of
-    *    (live codes, live edges, LUTs), all three reconstruction-
-    *    idempotent under the fold;
-    *  - `dirs_bounded` / `rollback_prunes`: the code sidecar's batch
-    *    directories fold with compaction and die with rollback;
-    *  - `filtered_k_legal`: the FILTERED as-of ADC serve
-    *    ([[searchAsOfPqFiltered]] on the sidecar's mirrored labels,
-    *    as of 2) returns a full k rows per probe, every one
-    *    satisfying the predicate RE-DERIVED from the embeddings
-    *    table — the versioned × filtered × ADC cell, driver-checked
-    *    (a stale sidecar label or a post-filter shortfall flips it). */
-  def nswSearchAsofPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding", $"label")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/nsw_asof_pq"
-    SnapshotLayout.copyLayout(spark, pristineScenarioPq(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    // every serve/stat materializes EAGERLY before the destructive
-    // steps delete or rewrite files its lazy plan would still list
-    val prod2 = searchAsOfPq(spark, path, 2L, queries).localCheckpoint(true)
-    // the filtered composition, same as-of point: label-constrained
-    // quantized serve with the labels judged from the TABLE
-    val qf = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
-        $"label".as("q_label"))
-    val filteredHits = searchAsOfPqFiltered(spark, path, 2L, qf,
-      col("label") === col("q_label")).localCheckpoint(true)
-    val trueLabels = all.select($"vec_id".as("neighbor_id"),
-      $"label".as("true_label"))
-    val filteredOk = filteredHits
-      .join(broadcast(qf.select($"q_id", $"q_label")), Seq("q_id"))
-      .join(trueLabels, Seq("neighbor_id"))
-      .groupBy($"q_id").agg(
-        (count(lit(1)) === 10L &&
-          count(when($"true_label" =!= $"q_label", 1)) === 0L).as("ok"))
-      .agg((count(when(!$"ok", 1)) === 0L &&
-        count(lit(1)) === queries.count()).as("filtered_k_legal"))
-      .localCheckpoint(true)
-    val liveCodes2 = asOfCodes(spark, path, 2L)
-      .localCheckpoint(true)
-    val nLive2 = asOfVectors(spark, path, 2L).count()
-    val coverOk = liveCodes2.count() == nLive2 &&
-      liveCodes2.select($"vec_id").distinct().count() == nLive2
-    val tombOk = liveCodes2.filter($"vec_id" < 25 && $"vec_id" % 7 === 0)
-      .isEmpty
-    val perProbe = prod2.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    compact(spark, path, 2L)
-    val prod2After = searchAsOfPq(spark, path, 2L, queries)
-      .localCheckpoint(true)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def codeBatchDirs(): Set[Long] =
-      fs.listStatus(new Path(s"$path/pq/codes")).filter(_.isDirectory)
-        .flatMap(d => batchDirId(d.getPath.getName)).toSet
-    val boundedOk = codeBatchDirs().forall(_ >= 2L)
-    rollback(spark, path, 2L)
-    val prunedOk = codeBatchDirs().forall(_ <= 2L)
-    val globals = SnapshotLayout.serveDiffCount(prod2, prod2After, "n_diff_c")
-      .crossJoin(filteredOk)
-      .select(
-        lit(coverOk).as("codes_cover_live"),
-        lit(tombOk).as("tombstone_hides"),
-        ($"n_diff_c" === 0L).as("compact_identical"),
-        lit(boundedOk).as("dirs_bounded"),
-        lit(prunedOk).as("rollback_prunes"),
-        $"filtered_k_legal")
-    perProbe.crossJoin(broadcast(globals))
-      .select($"q_id", $"self_found", $"top1_exact", $"codes_cover_live",
-        $"tombstone_hides", $"compact_identical", $"dirs_bounded",
-        $"rollback_prunes", $"filtered_k_legal")
-      .orderBy($"q_id")
-  }
+  /** `nsw_search_asof_pq`: [[LayoutGrids.pqGrid]] plus
+    * `codes_cover_live` and `filtered_k_legal`. */
+  def nswSearchAsofPq(spark: SparkSession, dir: String): DataFrame =
+    grids.pqGrid(spark, dir)
 
   val nswSearchAsofPqSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -631,170 +447,21 @@ object NswSnapshotLayout extends VersionedLayout {
       k: Int = 10): DataFrame =
     routed(spark, root, batchId)(searchAsOfFiltered(spark, _, batchId, queries, pred, k))
 
-  /** `nsw_generation`: the graph family's cutover contract —
-    * `ivf_generation`'s grid (including `retired_refuses`: drop
-    * generation 1 last, pin the loud refusal) with the fresh-build
-    * identity on the EDGE set (the successor's base graph must equal
-    * a fresh LSH build over the head live rows, set-level) and
-    * `sidecar_carried` pinned at STORED geometry: generation 1 gets a
-    * deliberately non-default 4×8 PQ sidecar, and the cutover's carry
-    * must re-fit the successor's sidecar as 4×8 with its base codes
-    * covering the boundary live set — a carry that re-defaulted its
-    * geometry (or skipped the encode) flips the column, which the IVF
-    * twin's exists-check could not see. Cost discipline: the grid is
-    * beam-walk fixed-cost dominated, so `old_asof_served` compares the
-    * routed reconstruction STATE (fingerprints + the route resolving
-    * to generation 1) instead of running two walks whose inputs it
-    * is — the one head serve keeps the end-to-end walk proof. */
-  /** The lifecycle's captured verdicts plus the finished root — plain
-    * driver values, so the session memo stores nothing plan-bound. */
-  private[graft] case class GenLifecycle(root: String,
-      matchesFresh: Boolean, boundaryIdentical: Boolean,
-      oldAsofServed: Boolean, gaugeReset: Boolean, crossRefused: Boolean,
-      postCutoverApplies: Boolean, sidecarCarried: Boolean,
-      retiredRefuses: Boolean)
+  /** Session memo of the FULL lifecycle ([[LayoutGrids.lifecycle]]):
+    * rebuilt per invocation, its measured 54 s cold build mixed into an
+    * 18-20 s steady state, so the lifecycle is a labeled one-time build
+    * (`nsw_generation_build`) and `nsw_generation` serves over the
+    * finished root. */
+  private val genLifecycleCache = new graft.store.VersionedMemo[LayoutGrids.Lifecycle]()
 
-  /** Session memo of the FULL generational lifecycle (VERDICT r14 #3:
-    * the old rebuild-per-invocation grid mixed a measured 54 s cold
-    * build into an 18-20 s steady state and the bench floor landed
-    * anywhere in between — the persist_chunks_build precedent applies:
-    * the lifecycle is now a labeled one-time build, `nsw_generation_
-    * build`, and the serve key floors the steady-state head walk over
-    * the finished root). Every grid verdict is captured HERE, at the
-    * lifecycle step that proves it (the fingerprint diffs must read
-    * generation 1 before retirement drops it). */
-  private val genLifecycleCache = new graft.store.VersionedMemo[GenLifecycle]()
+  private[graft] def genLifecycle(spark: SparkSession, dir: String): LayoutGrids.Lifecycle =
+    genLifecycleCache.get(spark, s"nsw_gen_lifecycle:$dir", dir)(grids.lifecycle(spark, dir))
 
-  private[graft] def genLifecycle(spark: SparkSession, dir: String): GenLifecycle =
-    genLifecycleCache.get(spark, s"nsw_gen_lifecycle:$dir", dir) {
-      import spark.implicits._
-      val all = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding", $"label")
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-        s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/nsw_gen"
-      val gen1 = Generations.genPath(root, 1)
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      SnapshotLayout.copyLayout(spark, pristineScenario(spark, dir), gen1)
-      Generations.writePointer(spark, root, 1)
-      rollback(spark, gen1, 2L) // head := the good batch
-      // a PQ sidecar at NON-default geometry (m=4, codes=8): the
-      // cutover must re-fit the carried sidecar at its STORED geometry
-      // (newGeneration recovers m/codes from the predecessor's
-      // codebooks) — a carry that silently re-defaulted to 8×16 flips
-      // `sidecar_carried` below, which an exists-check would miss
-      initPq(spark, gen1, m = 4, codes = 8)
-      // pre-cutover as-of-1 state, CAPTURED (checkpoint) so the
-      // post-cutover comparison cannot silently read post-cutover files
-      val asof1Before = asOfFingerprints(spark, gen1, 1L, "fp")
-        .localCheckpoint(true)
-      // fresh-build identity on the successor's base: vectors are the
-      // head live set (the boundary fingerprint diff below) and edges a
-      // fresh LSH build. The comparator is MEMOIZED from the pristine
-      // scenario's as-of-2 reconstruction — identical content (rollback
-      // restores the byte-identical layout, and the copy preserves
-      // bytes, so both builds read the same file set) on a stable
-      // session-lived path the cached frame can safely re-evaluate from.
-      // Round 17: the comparator build depends only on the (static)
-      // pristine scenario, not on the cutover — the lifecycle's two
-      // heavy graph builds (this one and newGeneration's fresh rebuild)
-      // run CONCURRENTLY from driver threads (guide §2.6), halving the
-      // serial wall of its slowest phase; the count() inside the future
-      // forces the cached edge table so the overlap does real work
-      val freshEdgesF = {
-        import scala.concurrent.Future
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Future {
-          val e = NswIndex.edgesCachedFor(s"nsw_gen_fresh:$dir",
-            asOfVectors(spark, pristineScenario(spark, dir), 2L)
-              .select($"vec_id", $"embedding"), dir)
-          e.count()
-          e
-        }
-      }
-      val newGen = newGeneration(spark, root)
-      val gen2 = Generations.genPath(root, 2)
-      val freshEdges = scala.concurrent.Await.result(freshEdgesF,
-        scala.concurrent.duration.Duration.Inf)
-      val storedEdges = spark.read.parquet(s"$gen2/edges")
-        .filter($"batch_id" === 2L).select($"src", $"dst")
-      val matchesFresh = SnapshotLayout.rowSetDiffCount(
-        freshEdges.select($"src", $"dst"), storedEdges, "n_edges_diff")
-        .collect()(0).getLong(0) == 0L
-      val boundaryIdentical = VersionedLayout.diffFingerprints(
-          asOfFingerprints(spark, gen1, 2L, "b_fp"),
-          asOfFingerprints(spark, gen2, 2L, "a_fp"))
-        .count() == 0L
-      // old as-ofs answerable through the root: the route must resolve
-      // to generation 1 AND its batch-1 reconstruction must be intact
-      // (the walk is a deterministic function of that state, so state
-      // identity implies the old serve-level identity — two beam walks
-      // saved; the serve key's per-probe head walk still proves the
-      // machinery end-to-end through the generational route)
-      val gen1Route = Generations.route(spark, root, 1L)
-      val asof1After = asOfFingerprints(spark, gen1Route, 1L, "fp")
-      val oldAsofServed = gen1Route == gen1 &&
-        SnapshotLayout.rowSetDiffCount(asof1Before, asof1After, "n_old_diff")
-          .collect()(0).getLong(0) == 0L
-      val debts = layoutDebtGen(spark, root).collect()
-      val gen2Row = debts.find(_.getAs[Long]("generation") == 2L)
-      val gaugeReset = newGen == 2 && Generations.current(spark, root) == 2 &&
-        gen2Row.exists(r =>
-          r.getAs[Boolean]("is_current") && r.getAs[Long]("n_batches") == 1L &&
-            r.getAs[Long]("delta_since_fit") == 0L &&
-            r.getAs[Long]("fitted_n") == r.getAs[Long]("live_rows")) &&
-        debts.count(_.getAs[Boolean]("is_current")) == 1
-      val crossRefused =
-        try { rollbackGen(spark, root, 1L); false }
-        catch { case _: IllegalArgumentException => true }
-      // sidecar carried AT ITS STORED GEOMETRY: the successor's
-      // codebooks re-fit as 4 subspaces × 8 codes (not the 8×16
-      // default), and its base codes cover the boundary live set
-      // exactly — checked BEFORE batch 3 appends post-cutover codes
-      val gen2Books = IvfIndex.readCodebooks(spark, gen2, "pq")
-      val gen2BaseLive = spark.read.parquet(s"$gen2/vectors")
-        .filter($"batch_id" === 2L).count()
-      val sidecarCarried = gen2Books.length == 4 &&
-        gen2Books.forall(_.length == 8) &&
-        spark.read.parquet(s"$gen2/pq/codes")
-          .filter($"batch_id" === 2L).count() == gen2BaseLive
-      applyBatchGen(spark, root, 3L,
-        upserts = all.filter($"vec_id" === 14 || $"vec_id" === 21),
-        deletes = all.limit(0).select($"vec_id"))
-      val postCutoverApplies = asOfVectorsGen(spark, root, Long.MaxValue)
-        .filter($"vec_id" === 14 || $"vec_id" === 21).count() == 2L &&
-        manifestIds(spark, gen2) == Seq(2L, 3L)
-      // retirement (the IVF grid's contract on the graph): every
-      // generation-1-reading verdict is already collected above, so
-      // the drop is safe — then pin the loud refusal at routing
-      Generations.dropGeneration(spark, root, 1)
-      val retiredRefuses =
-        (try { Generations.route(spark, root, 1L); false }
-        catch { case _: IllegalArgumentException => true }) &&
-          Generations.list(spark, root) == Seq(2)
-      GenLifecycle(root, matchesFresh, boundaryIdentical, oldAsofServed,
-        gaugeReset, crossRefused, postCutoverApplies, sidecarCarried,
-        retiredRefuses)
-    }
-
-  /** `nsw_generation_build`: the one-time generational lifecycle
-    * surfaced as its OWN labeled entry (VERDICT r14 #3, the
-    * persist_chunks_build precedent) — forces [[genLifecycle]] and
-    * reports its verdict grid; the oracle pins all-true. */
+  /** `nsw_generation_build`: forces [[genLifecycle]] and reports its
+    * verdicts, one row per flag. */
   def nswGenerationBuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val g = genLifecycle(spark, dir)
-    Seq(
-      ("boundary_live_identical", g.boundaryIdentical),
-      ("cross_rollback_refused", g.crossRefused),
-      ("gauge_reset", g.gaugeReset),
-      ("matches_fresh", g.matchesFresh),
-      ("old_asof_served", g.oldAsofServed),
-      ("post_cutover_applies", g.postCutoverApplies),
-      ("retired_refuses", g.retiredRefuses),
-      ("sidecar_carried", g.sidecarCarried))
-      .toDF("flag", "ok").orderBy($"flag")
+    genLifecycle(spark, dir).verdicts.toDF("flag", "ok").orderBy($"flag")
   }
 
   val nswGenerationBuildSql: String =
@@ -805,38 +472,11 @@ object NswSnapshotLayout extends VersionedLayout {
       |  t(flag)
       |ORDER BY flag""".stripMargin
 
-  /** `nsw_generation`: the graph family's cutover contract —
-    * `ivf_generation`'s grid (including `retired_refuses`: drop
-    * generation 1 last, pin the loud refusal) with the fresh-build
-    * identity on the EDGE set (the successor's base graph must equal
-    * a fresh LSH build over the head live rows, set-level) and
-    * `sidecar_carried` pinned at STORED geometry. The lifecycle runs
-    * once per session under its own build label ([[genLifecycle]] /
-    * `nsw_generation_build`); THIS key is the steady-state serve — a
-    * per-probe beam walk at head through the generational route, with
-    * the captured lifecycle verdicts attached as the grid's global
-    * columns (same output contract as the pre-split key). */
-  def nswGeneration(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val g = genLifecycle(spark, dir)
-    val queries = Tables.embeddings(spark, dir)
-      .filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val head = searchAsOfGen(spark, g.root, Long.MaxValue, queries)
-    head.groupBy($"q_id").agg(
-        (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-        (max($"score_e6") === 1000000L).as("top1_exact"))
-      .select($"q_id", $"self_found", $"top1_exact",
-        lit(g.matchesFresh).as("matches_fresh"),
-        lit(g.boundaryIdentical).as("boundary_live_identical"),
-        lit(g.oldAsofServed).as("old_asof_served"),
-        lit(g.gaugeReset).as("gauge_reset"),
-        lit(g.crossRefused).as("cross_rollback_refused"),
-        lit(g.postCutoverApplies).as("post_cutover_applies"),
-        lit(g.sidecarCarried).as("sidecar_carried"),
-        lit(g.retiredRefuses).as("retired_refuses"))
-      .orderBy($"q_id")
-  }
+  /** `nsw_generation`: [[LayoutGrids.generationGrid]] over the memoized
+    * lifecycle, with `matches_fresh` on the EDGE set and
+    * `sidecar_carried` at the 4×8 stored geometry. */
+  def nswGeneration(spark: SparkSession, dir: String): DataFrame =
+    grids.generationGrid(spark, dir, genLifecycle(spark, dir))
 
   val nswGenerationSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,

@@ -321,21 +321,15 @@ object RecallEval {
     // with the next leg's stages. Values are untouched — every leg
     // still checkpoints its own 1-row result and the final union
     // reads the materialized blocks.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // every exact baseline computed ONCE and checkpointed: recallRow
     // reads its `exact` side twice (hit join + query count) and the
     // cos5 baseline grades three families — without the checkpoint
     // the brute scan re-runs per read (6× for cos5 at sf0.1); the
     // four baselines are themselves independent brute scans and
     // materialize concurrently
-    val fCos10 = Future(exactTopK(spark, dir, 10, dot = false).localCheckpoint(true))
-    val fCos5 = Future(exactTopK(spark, dir, 5, dot = false).localCheckpoint(true))
-    val fDot10 = Future(exactTopK(spark, dir, 10, dot = true).localCheckpoint(true))
-    val exactCos10 = Await.result(fCos10, Duration.Inf)
-    val exactCos5 = Await.result(fCos5, Duration.Inf)
-    val exactDot10 = Await.result(fDot10, Duration.Inf)
+    val Seq(exactCos10, exactCos5, exactDot10) = graft.core.DriverJobs.all(spark)(
+      Seq((10, false), (5, false), (10, true)).map { case (k, dot) =>
+        () => exactTopK(spark, dir, k, dot = dot).localCheckpoint(true) })
     val emb = Tables.embeddings(spark, dir)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -428,9 +422,8 @@ object RecallEval {
         exactCos10, 10, 850000L),
       () => recallRow("sq8", SqIndex.knnBruteSq(spark, dir),
         exactDot10, 10, 900000L))
-    val rows = Await.result(
-      Future.sequence(legs.map(leg => Future(leg().localCheckpoint(true)))),
-      Duration.Inf)
+    val rows = graft.core.DriverJobs.all(spark)(
+      legs.map(leg => () => leg().localCheckpoint(true)))
     rows.reduce(_ unionByName _).orderBy(col("index"))
   }
 
@@ -647,42 +640,74 @@ object RecallEval {
   // cutover lands in a NEW generation dir that never had one. A
   // layout copy ([[SnapshotLayout.copyLayout]]) legitimately carries
   // the sidecar: same bytes, same fit, same τ.
+  //
+  // One sidecar per TUNING IDENTITY: the `path:` identity
+  // ([[IvfIndex.autoTauAt]]) tunes over the raw `vectors/` rows and
+  // keeps `_graft_autotau.json`; the `asof:` identity (a versioned
+  // layout's as-of serves) tunes over the live head and owns
+  // `_graft_autotau_asof.json`. On a versioned layout with superseded
+  // or dead rows the two corpora differ, and one shared file would
+  // serve whichever τ was written first to both.
 
-  private[graft] def tauSidecarPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_autotau.json")
+  private[graft] def tauSidecarPath(path: String,
+      asOf: Boolean): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      s"$path/_graft_autotau${if (asOf) "_asof" else ""}.json")
+
+  /** The identity a layout's own zero-conf serves tune under: `asof:`
+    * on a versioned layout (it has a batch log), `path:` otherwise. */
+  private def servesAsOf(spark: SparkSession, path: String): Boolean =
+    VersionedLayout.fsOf(spark, path)
+      .exists(new org.apache.hadoop.fs.Path(s"$path/_snapshots"))
 
   private val TauSidecarPattern = """\{"tau_e2":(\d+)\}""".r
 
   /** None when absent or unreadable: the next serve retunes and rewrites. */
-  private[graft] def readTauSidecar(spark: SparkSession,
-      path: String): Option[Double] =
-    VersionedLayout.readFile(VersionedLayout.fsOf(spark, path), tauSidecarPath(path))
+  private[graft] def readTauSidecar(spark: SparkSession, path: String,
+      asOf: Boolean): Option[Double] =
+    VersionedLayout.readFile(VersionedLayout.fsOf(spark, path), tauSidecarPath(path, asOf))
       .collect { case TauSidecarPattern(e2) => e2.toLong / 100.0 }
+
+  private[graft] def readTauSidecar(spark: SparkSession, path: String): Option[Double] =
+    readTauSidecar(spark, path, servesAsOf(spark, path))
 
   /** Concurrent tuners of one layout each commit atomically under
     * their own tmp name ([[VersionedLayout.commitFile]]). */
   private[graft] def writeTauSidecar(spark: SparkSession, path: String,
-      tau: Double): Unit =
-    VersionedLayout.commitFile(spark, tauSidecarPath(path),
+      asOf: Boolean, tau: Double): Unit =
+    VersionedLayout.commitFile(spark, tauSidecarPath(path, asOf),
       s"""{"tau_e2":${math.round(tau * 100)}}""")
 
-  private[graft] def clearTauSidecar(spark: SparkSession, path: String): Unit = {
-    val p = tauSidecarPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
+  private[graft] def writeTauSidecar(spark: SparkSession, path: String,
+      tau: Double): Unit =
+    writeTauSidecar(spark, path, servesAsOf(spark, path), tau)
+
+  /** Drops both identities' sidecars: a new fit invalidates both. */
+  private[graft] def clearTauSidecar(spark: SparkSession, path: String): Unit =
+    Seq(false, true).map(tauSidecarPath(path, _)).foreach { p =>
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, false)
+    }
 
   /** [[autoTauFor]] for a Built that lives at a writable layout path:
     * the memo absorbs per-serve lookups, and on a memo miss (cold
-    * session, or any version bump) the persisted sidecar answers
-    * without a sweep — the sweep itself runs once per FIT, at the
-    * first zero-conf serve after the layout is (re)built. */
+    * session, or any version bump) the identity's persisted sidecar
+    * answers without a sweep — the sweep itself runs once per FIT, at
+    * the first zero-conf serve after the layout is (re)built. A sidecar
+    * that cannot be written (read-only storage) still serves the tuned
+    * τ; the next memo miss tunes again. */
   def autoTauPersisted(spark: SparkSession, key: String, versionDir: String,
       layoutPath: String)(corpus: => IvfIndex.Built): Double =
     autoTauCache.get(spark, s"autotau:$key", versionDir) {
-      readTauSidecar(spark, layoutPath).getOrElse {
+      val asOf = key.startsWith("asof:")
+      readTauSidecar(spark, layoutPath, asOf).getOrElse {
         val t = tuneTau(spark, corpus)
-        writeTauSidecar(spark, layoutPath, t)
+        try writeTauSidecar(spark, layoutPath, asOf, t)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn(s"tau sidecar not written under $layoutPath, serving the tuned tau: $e")
+        }
         t
       }
     }

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.core.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ object SnapshotLayout extends VersionedLayout {
 
   protected def placement: Option[String] = Some("cluster_id")
 
-  protected def payloadRoots: Seq[String] = Seq("vectors")
+  private[index] def payloadRoots: Seq[String] = Seq("vectors")
 
   protected def codeStage(sub: String): String = s"codes/$sub"
 
@@ -98,20 +98,23 @@ object SnapshotLayout extends VersionedLayout {
         Some(autoTauHead(spark, path))).map(t =>
       (math.min(1.0, t * ratio), asOfCellMasses(spark, path, batchId)))
 
+  /** The as-of posting set under the base fit's centroids, carrying the
+    * layout's tuning identity (the memo key of [[autoTauHead]]), so the
+    * inner serve's auto resolution lands on the one head-tuned τ
+    * instead of falling back to counts. */
+  private def asOfBuilt(spark: SparkSession, path: String,
+      batchId: Long): IvfIndex.Built =
+    IvfIndex.Built(asOfAssigned(spark, path, batchId),
+      spark.read.parquet(s"$path/centroids"),
+      autoKey = Some((s"asof:$path", path)), tauSidecar = Some(path))
+
   /** Probe search served from the as-of posting set (centroids are
     * the base fit — the incremental-add serving contract). The
     * coverage-adaptive conf applies with the AS-OF live masses. */
   def searchAsOf(spark: SparkSession, path: String, batchId: Long,
       queries: DataFrame, nProbe: Int = 0,
       k: Int = 10): DataFrame =
-    // the Built carries the layout's tuning identity (same memo key as
-    // [[autoTauHead]]) so the inner serve's auto resolution lands on
-    // the one head-tuned τ instead of falling back to counts
-    IvfIndex.search(
-      IvfIndex.Built(asOfAssigned(spark, path, batchId),
-        spark.read.parquet(s"$path/centroids"),
-        autoKey = Some((s"asof:$path", path)), tauSidecar = Some(path)),
-      queries, nProbe, k,
+    IvfIndex.search(asOfBuilt(spark, path, batchId), queries, nProbe, k,
       cellMasses = asOfMassOf(spark, path, batchId, nProbe).map(_._2))
 
   /** SINGLE-query probe serve from the as-of posting set — the
@@ -123,11 +126,7 @@ object SnapshotLayout extends VersionedLayout {
   def searchAsOfSingle(spark: SparkSession, path: String, batchId: Long,
       query: DataFrame, nProbe: Int = 0,
       k: Int = 10): DataFrame =
-    IvfIndex.searchSingle(
-      IvfIndex.Built(asOfAssigned(spark, path, batchId),
-        spark.read.parquet(s"$path/centroids"),
-        autoKey = Some((s"asof:$path", path)), tauSidecar = Some(path)),
-      query, nProbe, k,
+    IvfIndex.searchSingle(asOfBuilt(spark, path, batchId), query, nProbe, k,
       cellMasses = asOfMassOf(spark, path, batchId, nProbe).map(_._2))
 
   /** PRE-filter probe search served from the as-of posting set — the
@@ -140,9 +139,7 @@ object SnapshotLayout extends VersionedLayout {
   def searchAsOfFiltered(spark: SparkSession, path: String, batchId: Long,
       queries: DataFrame, pred: org.apache.spark.sql.Column,
       nProbe: Int = 0, k: Int = 10): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val built = IvfIndex.Built(asOfAssigned(spark, path, batchId), centroids,
-      autoKey = Some((s"asof:$path", path)), tauSidecar = Some(path))
+    val built = asOfBuilt(spark, path, batchId)
     val masses = asOfMassOf(spark, path, batchId, nProbe).map(_._2)
     if (masses.isDefined)
       // the sentinel flows through searchFiltered's own resolution
@@ -208,15 +205,7 @@ object SnapshotLayout extends VersionedLayout {
         Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("vec_id").asc)))
       .filter(col("arank") <= rerank)
       .select(col("q_id"), col("cluster_id"), col("vec_id"), col("batch_id"))
-    val raw = spark.read.parquet(s"$path/vectors")
-    val scored = raw
-      .join(broadcast(cand), Seq("cluster_id", "vec_id", "batch_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.core.Stab.e6(
-          graft.functions.vectors.cosineSim(col("embedding"), col("q_vec")))
-          .as("score_e6"))
-    graft.operators.KnnSearch.topK(scored, k, asc = false)
+    rerankExact(spark, path, cand, queries, k)
   }
 
   /** Compressed batch kNN join served AS OF `batchId`: the
@@ -373,131 +362,104 @@ object SnapshotLayout extends VersionedLayout {
       .select(col("q_id"), col("cluster_id"), col("vec_id"), col("batch_id"))
   }
 
-  /** Serve-identity comparator shared by every grid: the count of
-    * (q_id, rank, neighbor_id, score_e6) rows NOT present in both
-    * serves — 0 iff the two serves are row-identical. One definition
-    * so the IVF and NSW grids cannot silently diverge on what
-    * "identical" means. */
   private[graft] def serveDiffCount(a: DataFrame, b: DataFrame,
-      name: String): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("q_id"), col("rank"), col("neighbor_id"), col("score_e6"))
-      .agg(count(lit(1)).as("c"))
-      .agg(count(when(col("c") =!= 2L, 1)).as(name))
+      name: String): DataFrame = LayoutGrids.serveDiffCount(a, b, name)
 
-  /** Copy a layout directory tree (pristine scenario → per-invocation
-    * work dir). Pure filesystem traffic — no Spark job; the layouts
-    * these ops copy are the bounded accountability scenarios, never a
-    * production index. */
+  private[graft] def rowSetDiffCount(a: DataFrame, b: DataFrame,
+      name: String): DataFrame = LayoutGrids.rowSetDiffCount(a, b, name)
+
   private[graft] def copyLayout(spark: SparkSession, src: String,
-      dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new Path(src)
-    val dstP = new Path(dst)
-    val fs = srcP.getFileSystem(conf)
-    fs.delete(dstP, true)
-    fs.mkdirs(dstP.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, dstP, false, conf)
-  }
+      dst: String): Unit = LayoutGrids.copyLayout(spark, src, dst)
 
-  /** Session memo of the PRISTINE four-batch accountability scenario
-    * (base fit over `vec_id >= 50` as batch 0; upsert `< 25` as batch
-    * 1; delete its `% 7 = 0` ids + upsert `25..49` as batch 2; a
-    * CORRUPT zero-vector batch 3 over `< 10`). The scenario ops used
-    * to delete + rebuild this layout per invocation — under
-    * Verify/Bench repeats that re-paid three applyBatch calls per run;
-    * now the build happens once per (session, dir) and each invocation
-    * serves from a cheap filesystem COPY, so the destructive steps
-    * (rollback, compaction) never touch the memoized original.
-    * Store-write invalidation via [[graft.store.VersionedMemo]]: a
-    * write under `dir` rebuilds the scenario, the buildCachedFor
-    * discipline. Eviction deletes the abandoned temp tree. */
-  private val scenarioCache = new graft.store.VersionedMemo[String](p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(p).getParentFile))
+  /** The IVF hooks of the lifecycle grids ([[LayoutGrids]]). */
+  private object grids extends LayoutGrids(this, "ivf") {
 
-  private[graft] def pristineScenario(spark: SparkSession, dir: String): String =
-    scenarioCache.get(spark, s"ivf_asof_scenario:$dir", dir) {
-      import spark.implicits._
-      // meta-bearing since round 10: `label` rides the posting rows,
-      // the code sidecars, and every reconstruction, so the scenario
-      // serves the filtered as-of entries too
-      val all = Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding", $"label")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-asof-ivf").toString + "/pristine"
-      val base = all.filter($"vec_id" >= 50)
+    /** Meta-bearing: `label` rides the posting rows, the code sidecar
+      * (trained on the base, so every batch encodes its delta with the
+      * frozen codebooks) and every reconstruction. */
+    protected def initScenario(spark: SparkSession, dir: String, base: DataFrame,
+        path: String): Unit = {
       init(IvfIndex.buildCachedFor(s"ivf_asof_base_meta:$dir", spark, base, dir,
         metaCols = Seq("label")), path)
-      // the versioned compressed tier rides the same scenario: the
-      // sidecar init encodes the base, every applyBatch below encodes
-      // its delta with the frozen codebooks
       initPq(spark, path)
-      applyBatch(spark, path, 1L,
-        upserts = all.filter($"vec_id" < 25),
-        deletes = all.limit(0).select($"vec_id"))
-      applyBatch(spark, path, 2L,
-        upserts = all.filter($"vec_id" >= 25 && $"vec_id" < 50),
-        deletes = all.filter($"vec_id" < 25 && $"vec_id" % 7 === 0).select($"vec_id"))
-      applyBatch(spark, path, 3L,
-        upserts = all.filter($"vec_id" < 10)
-          .select($"vec_id", transform($"embedding", _ => lit(0.0f)).as("embedding"),
-            $"label"),
-        deletes = all.limit(0).select($"vec_id"))
-      path
     }
 
-  /** `ivf_search_asof`: the versioned layout's serve path pushed
-    * through an invariant grid over the deterministic batch history of
-    * [[pristineScenario]] (served from a per-invocation copy — the
-    * rollback below is destructive).
-    * Grid per probe (`vec_id < 5`, served AS OF batch 2):
-    *  - `self_found` / `top1_exact`: the probe finds its own batch-1/2
-    *    vector at score 1.0 — as-of-2 serves the GOOD embeddings even
-    *    though batch 3 has already overwritten them at head;
-    *  - `tombstone_hides`: as of batch 2 none of the deleted
-    *    (`% 7 = 0`, `< 25`) ids serve;
-    *  - `asof1_predates`: as of batch 1 the `25..49` slice is absent
-    *    (earlier snapshots don't see later upserts);
-    *  - `rollback_identical`: after `rollback(2)`, serving HEAD
-    *    returns row-identical results to the pre-rollback as-of-2
-    *    serve (the byte-identity contract);
-    *  - `sidecar_restored`: the drift sidecar equals batch 2's
-    *    manifest after rollback. */
-  def ivfSearchAsof(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/ivf"
-    copyLayout(spark, pristineScenario(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val asof2 = searchAsOf(spark, path, 2L, queries).localCheckpoint(true)
-    val perProbe = asof2.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    val live2 = asOfAssigned(spark, path, 2L)
-    val tombOk = live2.filter($"vec_id" < 25 && $"vec_id" % 7 === 0)
-      .agg(count(lit(1)).as("n_deleted_live"))
-    val live1 = asOfAssigned(spark, path, 1L)
-    val asof1Ok = live1.agg(
-      count(when($"vec_id" >= 25 && $"vec_id" < 50, 1)).as("n_future_live"))
-    rollback(spark, path, 2L)
-    val headAfter = searchAsOf(spark, path, Long.MaxValue, queries)
-    val identical = serveDiffCount(asof2, headAfter, "n_diff")
-    val meta = IndexMeta.read(spark, path).getOrElse(IndexMeta.Meta(-1L, -1L))
-    val manifest = readManifest(spark, path, 2L).getOrElse(IndexMeta.Meta(-2L, -2L))
-    val globals = tombOk.crossJoin(asof1Ok).crossJoin(identical)
-      .select(
-        ($"n_deleted_live" === 0L).as("tombstone_hides"),
-        ($"n_future_live" === 0L).as("asof1_predates"),
-        ($"n_diff" === 0L).as("rollback_identical"),
-        lit(meta == manifest).as("sidecar_restored"))
-    perProbe.crossJoin(broadcast(globals))
-      .select($"q_id", $"self_found", $"top1_exact", $"tombstone_hides",
-        $"asof1_predates", $"rollback_identical", $"sidecar_restored")
-      .orderBy($"q_id")
+    protected def serve(spark: SparkSession, path: String, batchId: Long,
+        queries: DataFrame): DataFrame = searchAsOf(spark, path, batchId, queries)
+
+    /** `head_identical`: the HEAD serve input is unchanged too. */
+    protected def compactExtras(spark: SparkSession,
+        path: String): () => Seq[(String, Boolean)] = {
+      val before = stateAt(spark, path, Long.MaxValue)
+      () => {
+        val ok = sameState(before, stateAt(spark, path, Long.MaxValue))
+        before.foreach(graft.core.Checkpoints.free)
+        Seq("head_identical" -> ok)
+      }
+    }
+
+    protected def pqServe(spark: SparkSession, path: String, queries: DataFrame,
+        rerank: Option[Int]): DataFrame =
+      rerank.fold(searchAsOfPq(spark, path, 2L, queries))(r =>
+        searchAsOfPq(spark, path, 2L, queries, rerank = r))
+
+    /** At exhaustive rerank the ADC cut keeps every live probed code
+      * row, so the serve is row-identical to the raw one. */
+    override protected def pqIdentityRerank: Option[Int] = Some(1000000)
+
+    /** `matches_raw`: the exhaustive ADC serve equals the raw
+      * [[searchAsOf]] — the live code set, the winner join and the
+      * direct-address rerank reconstruct exactly the raw as-of state. */
+    protected def pqExtras(spark: SparkSession, dir: String, path: String,
+        queries: DataFrame, liveCodes: DataFrame,
+        identity: DataFrame): Seq[(String, Boolean)] =
+      Seq("matches_raw" ->
+        (LayoutGrids.serveDiff(identity, searchAsOf(spark, path, 2L, queries)) == 0L))
+
+    protected def pqColumns: Seq[String] = Seq("tombstone_hides", "matches_raw",
+      "compact_identical", "dirs_bounded", "rollback_prunes")
+
+    protected def filteredServe(spark: SparkSession, path: String,
+        queries: DataFrame, pred: Column): DataFrame =
+      searchAsOfFiltered(spark, path, 2L, queries, pred)
+
+    /** `adc_matches_raw`: the filtered ADC serve at exhaustive rerank
+      * equals the raw filtered serve. */
+    override protected def filteredExtras(spark: SparkSession, path: String,
+        queries: DataFrame, pred: Column, hits: DataFrame): Seq[(String, Boolean)] =
+      Seq("adc_matches_raw" -> (LayoutGrids.serveDiff(hits,
+        searchAsOfPqFiltered(spark, path, 2L, queries, pred, rerank = 1000000)) == 0L))
+
+    /** Every stored base row of generation 2 sits in its d2-nearest
+      * centroid within a 1e-6 margin (KMeans' float accumulation order
+      * is not pinned across fits, so the grid checks the fit's own
+      * optimality instead of racing a second fit; the persisted float32
+      * centroids perturb d2 by ~1e-7), and the centroids moved off
+      * generation 1's (fit on the `>= 50` slice only). */
+    protected def matchesFresh(spark: SparkSession, gen1: String, gen2: String,
+        fresh: Option[DataFrame]): Boolean = {
+      import spark.implicits._
+      val gen2Cent = spark.read.parquet(s"$gen2/centroids")
+      val vv = graft.functions.vectors.dotProduct($"embedding", $"embedding")
+      val vc = graft.functions.vectors.dotProduct($"embedding", $"centroid")
+      val cc = graft.functions.vectors.dotProduct($"centroid", $"centroid")
+      val d2 = lit(1.0) - lit(2.0) * when(vv === 0d, lit(0.0)).otherwise(vc / sqrt(vv)) + cc
+      spark.read.parquet(s"$gen2/vectors").filter($"batch_id" === 2L)
+        .select($"vec_id", $"embedding", $"cluster_id".as("assigned"))
+        .crossJoin(broadcast(gen2Cent)).withColumn("d2", d2)
+        .groupBy($"vec_id").agg(min($"d2").as("best"),
+          min(when($"cluster_id" === $"assigned", $"d2")).as("got"))
+        .filter($"got" > $"best" + 1e-6).isEmpty &&
+        LayoutGrids.diffRows(spark.read.parquet(s"$gen1/centroids"), gen2Cent) != 0L
+    }
   }
+
+  private[graft] def pristineScenario(spark: SparkSession, dir: String): String =
+    grids.pristineScenario(spark, dir)
+
+  /** `ivf_search_asof`: [[LayoutGrids.asOfGrid]]. */
+  def ivfSearchAsof(spark: SparkSession, dir: String): DataFrame =
+    grids.asOfGrid(spark, dir)
 
   val ivfSearchAsofSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -506,102 +468,9 @@ object SnapshotLayout extends VersionedLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  /** `ivf_compact`: the compaction contract as a driver-checked grid
-    * (it was spec-only — a regression in the maintenance job the
-    * long-running versioned streams depend on would not have flipped
-    * any CORRECTNESS row). Over a copy of [[pristineScenario]],
-    * `compact(upTo = 2)` must leave, per probe:
-    *  - `serve2_identical` / `head_identical`: as-of-2 and HEAD serve
-    *    INPUTS set-identical before/after (round 11: the probe serve
-    *    is a deterministic function of the assigned rows + untouched
-    *    centroids, so input identity implies the old serve-level
-    *    identity and pays key-only scans instead of five serves —
-    *    merge-on-read folded away with zero serving effect, the
-    *    log-structured-compaction contract);
-    *  - `history_truncated`: manifests below 2 gone, 2 and 3 kept;
-    *  - `tombstones_gone`: no tombstone list ≤ 2 survives (they are
-    *    folded into the consolidated base);
-    *  - `dirs_bounded`: no `batch_id < 2` vector directory survives
-    *    (the un-compacted directory count is what a scheduled
-    *    compaction exists to bound);
-    *  - `guard_refuses`: rollback to the compacted-away batch 1 THROWS
-    *    instead of deleting the consolidated base (the rollback
-    *    manifest guard);
-    *  - `rollback_works`: rollback to the compaction point still
-    *    serves the as-of-2 results. */
-  /** The full SERVE INPUT at an as-of point, keys + hashes only: the
-    * (vec_id, fingerprint-over-EVERYTHING-including-cluster_id) live
-    * set. The probe serve is a deterministic function of the assigned
-    * rows (content + cluster placement) and the centroids (which
-    * compaction never touches), so set identity here implies serve
-    * identity — the round-11 floor trim: the compact grid used to
-    * prove identity with five probe serves; comparing their input is
-    * strictly stronger and pays one key-only scan each. */
-  private def postingStateAt(spark: SparkSession, path: String,
-      batchId: Long): DataFrame =
-    asOfFingerprints(spark, path, batchId, "fp", exclude = Set("vec_id"))
-      .localCheckpoint(true)
-
-  private def postingStateDiff(a: DataFrame, b: DataFrame): Long =
-    rowSetDiffCount(a, b, "n").collect().head.getLong(0)
-
-  def ivfCompactChecked(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/ivf_compact"
-    copyLayout(spark, pristineScenario(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val asof2Before = postingStateAt(spark, path, 2L)
-    val headBefore = postingStateAt(spark, path, Long.MaxValue)
-    compact(spark, path, 2L)
-    val asof2After = postingStateAt(spark, path, 2L)
-    val headAfter = postingStateAt(spark, path, Long.MaxValue)
-    val serve2Id = postingStateDiff(asof2Before, asof2After) == 0L
-    val headId = postingStateDiff(headBefore, headAfter) == 0L
-    // ONE end-to-end serve of the COMPACTED layout: the input-identity
-    // columns imply serve identity only if serving still works — a
-    // commit bug that breaks the partition tree in a way only the
-    // pruned read path hits must not produce an all-true grid
-    val served = searchAsOf(spark, path, 2L, queries).localCheckpoint(true)
-    val perProbe = served.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDirs = fs.listStatus(new Path(s"$path/vectors"))
-      .filter(_.isDirectory)
-      .flatMap(c => fs.listStatus(c.getPath).filter(_.isDirectory)
-        .flatMap(d => batchDirId(d.getPath.getName)))
-      .toSet
-    val tombRoot = new Path(s"$path/tombstones")
-    val tombDirs =
-      if (!fs.exists(tombRoot)) Set.empty[Long]
-      else fs.listStatus(tombRoot).filter(_.isDirectory)
-        .flatMap(d => batchDirId(d.getPath.getName)).toSet
-    val manifests = manifestIds(spark, path)
-    val guardOk =
-      try { rollback(spark, path, 1L); false }
-      catch { case _: IllegalArgumentException => true }
-    rollback(spark, path, 2L)
-    val headRolled = postingStateAt(spark, path, Long.MaxValue)
-    val rolledId = postingStateDiff(asof2Before, headRolled) == 0L
-    Seq(asof2Before, headBefore, asof2After, headAfter, headRolled)
-      .foreach(graft.core.Checkpoints.free)
-    val globals = broadcast(spark.range(1).select(
-      lit(serve2Id).as("serve2_identical"),
-      lit(headId).as("head_identical"),
-      lit(manifests == Seq(2L, 3L)).as("history_truncated"),
-      lit(tombDirs.forall(_ > 2L)).as("tombstones_gone"),
-      lit(batchDirs.forall(_ >= 2L)).as("dirs_bounded"),
-      lit(guardOk).as("guard_refuses"),
-      lit(rolledId).as("rollback_works")))
-    perProbe.crossJoin(globals)
-      .select($"q_id", $"self_found", $"top1_exact", $"serve2_identical",
-        $"head_identical", $"history_truncated", $"tombstones_gone",
-        $"dirs_bounded", $"guard_refuses", $"rollback_works")
-      .orderBy($"q_id")
-  }
+  /** `ivf_compact`: [[LayoutGrids.compactGrid]] plus `head_identical`. */
+  def ivfCompactChecked(spark: SparkSession, dir: String): DataFrame =
+    grids.compactGrid(spark, dir)
 
   val ivfCompactCheckedSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -611,78 +480,9 @@ object SnapshotLayout extends VersionedLayout {
       |FROM embeddings WHERE vec_id < 5 AND vec_id % 7 <> 0
       |ORDER BY q_id""".stripMargin
 
-  /** `ivf_search_asof_pq`: the versioned COMPRESSED tier's serve —
-    * [[searchAsOfPq]] over [[pristineScenario]]'s sidecar — pushed
-    * through an invariant grid (per-invocation copy; the compaction
-    * and rollback below are destructive):
-    *  - `self_found` / `top1_exact`: the production-rerank ADC serve
-    *    as of batch 2 finds each probe's own GOOD embedding at 1.0
-    *    (batch 3's corrupt codes exist at head but must not serve —
-    *    the code rows version correctly);
-    *  - `matches_raw`: at EXHAUSTIVE rerank the ADC cut keeps every
-    *    live probed code row, so the serve must be row-identical to
-    *    the raw [[searchAsOf]] — the end-to-end identity proof that
-    *    the live code set, the winner join, and the direct-address
-    *    rerank reconstruct exactly the raw as-of state;
-    *  - `tombstone_hides`: no deleted id owns a live code row as of 2;
-    *  - `compact_identical`: the as-of-2 ADC serve is row-identical
-    *    across `compact(2)` — the folded code sidecar serves exactly
-    *    like the batch history it replaced;
-    *  - `dirs_bounded`: post-compaction no `batch_id < 2` code
-    *    directory survives (the sidecar's history folds with the raw
-    *    rows, not just alongside them);
-    *  - `rollback_prunes`: after `rollback(2)` no `batch_id > 2` code
-    *    directory survives (a rolled-back batch's codes die with its
-    *    raw rows). */
-  def ivfSearchAsofPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/ivf_asof_pq"
-    copyLayout(spark, pristineScenario(spark, dir), path)
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    def nDiff(a: DataFrame, b: DataFrame, name: String) =
-      serveDiffCount(a, b, name)
-    // every serve/stat materializes EAGERLY before the destructive
-    // steps delete or rewrite files its lazy plan would still list
-    val prod2 = searchAsOfPq(spark, path, 2L, queries).localCheckpoint(true)
-    val exh2 = searchAsOfPq(spark, path, 2L, queries, rerank = 1000000)
-      .localCheckpoint(true)
-    val raw2 = searchAsOf(spark, path, 2L, queries).localCheckpoint(true)
-    val tombOk = asOfCodes(spark, path, 2L)
-      .filter($"vec_id" < 25 && $"vec_id" % 7 === 0)
-      .agg(count(lit(1)).as("n_deleted_live")).localCheckpoint(true)
-    val perProbe = prod2.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    compact(spark, path, 2L)
-    val exh2After = searchAsOfPq(spark, path, 2L, queries, rerank = 1000000)
-      .localCheckpoint(true)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def codeBatchDirs(): Set[Long] =
-      fs.listStatus(new Path(s"$path/pq/codes")).filter(_.isDirectory)
-        .flatMap(c => fs.listStatus(c.getPath).filter(_.isDirectory)
-          .flatMap(d => batchDirId(d.getPath.getName)))
-        .toSet
-    val boundedOk = codeBatchDirs().forall(_ >= 2L)
-    rollback(spark, path, 2L)
-    val prunedOk = codeBatchDirs().forall(_ <= 2L)
-    val globals = nDiff(exh2, raw2, "n_diff_raw")
-      .crossJoin(nDiff(exh2, exh2After, "n_diff_c"))
-      .crossJoin(tombOk)
-      .select(
-        ($"n_deleted_live" === 0L).as("tombstone_hides"),
-        ($"n_diff_raw" === 0L).as("matches_raw"),
-        ($"n_diff_c" === 0L).as("compact_identical"),
-        lit(boundedOk).as("dirs_bounded"),
-        lit(prunedOk).as("rollback_prunes"))
-    perProbe.crossJoin(broadcast(globals))
-      .select($"q_id", $"self_found", $"top1_exact", $"tombstone_hides",
-        $"matches_raw", $"compact_identical", $"dirs_bounded",
-        $"rollback_prunes")
-      .orderBy($"q_id")
-  }
+  /** `ivf_search_asof_pq`: [[LayoutGrids.pqGrid]] plus `matches_raw`. */
+  def ivfSearchAsofPq(spark: SparkSession, dir: String): DataFrame =
+    grids.pqGrid(spark, dir)
 
   val ivfSearchAsofPqSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,
@@ -693,22 +493,23 @@ object SnapshotLayout extends VersionedLayout {
       |ORDER BY q_id""".stripMargin
 
   /** `knn_join_pq_asof`: [[knnJoinPqAsOf]] over [[pristineScenario]]
-    * at the good batch (as-of 2; read-only, so no per-invocation copy
-    * is needed), pushed through the [[IvfIndex.knnJoinPqChecked]]
-    * oracle grid against the SQL-recomputable live set — every id
-    * except the batch-2 deletes (`< 25 ∧ % 7 = 0`) gets a full k:
-    *  - `neighbor_live`: each hit is a live-as-of-2 id (a tombstoned
-    *    id or a fabricated one joins to nothing and flips the hash);
-    *  - `score_exact`: each score recomputed here as the exact e6
-    *    cosine of the two embeddings from the TABLE — as of batch 2
-    *    every live id's embedding equals the table's, so a leaked
-    *    batch-3 corrupt row (zero vector, exists at head for
-    *    `vec_id < 10`) cannot score exact and flips the hash;
-    *  - `not_self`, `monotone`: the batch-join contract. */
-  def knnJoinPqAsofChecked(spark: SparkSession, dir: String): DataFrame = {
+    * at the good batch (read-only, no copy), through [[joinHitGrid]]. */
+  def knnJoinPqAsofChecked(spark: SparkSession, dir: String): DataFrame =
+    joinHitGrid(spark, dir, knnJoinPqAsOf(spark, pristineScenario(spark, dir), 2L)
+      .localCheckpoint(true))
+
+  /** The [[IvfIndex.knnJoinPqChecked]] oracle grid against the
+    * SQL-recomputable live set as of 2 — every id except the batch-2
+    * deletes gets a full k:
+    *  - `neighbor_live`: each hit is a live id (a tombstoned or
+    *    fabricated id joins to nothing and flips the hash);
+    *  - `score_exact`: each score is the exact e6 cosine of the two
+    *    TABLE embeddings — a leaked batch-3 zero vector cannot match;
+    *  - `not_self`, `monotone`: the batch-join contract;
+    *  - then `extra`. */
+  private def joinHitGrid(spark: SparkSession, dir: String, hits: DataFrame,
+      extra: Column*): DataFrame = {
     import spark.implicits._
-    val path = pristineScenario(spark, dir)
-    val hits = knnJoinPqAsOf(spark, path, 2L).localCheckpoint(true)
     val live = Tables.embeddings(spark, dir)
       .filter(!($"vec_id" < 25 && $"vec_id" % 7 === 0))
       .select($"vec_id", $"embedding")
@@ -718,13 +519,13 @@ object SnapshotLayout extends VersionedLayout {
       $"score_e6".as("next_score"))
     hits.join(qv, Seq("q_id")).join(nv, Seq("neighbor_id"), "left")
       .join(next, Seq("q_id", "rank"), "left")
-      .select($"q_id", $"rank",
+      .select(Seq($"q_id", $"rank",
         $"n_vec0".isNotNull.as("neighbor_live"),
         ($"q_id" =!= $"neighbor_id").as("not_self"),
         coalesce(graft.core.Stab.e6(graft.functions.vectors.cosineSim(
             $"n_vec0", $"q_vec0")) === $"score_e6",
           lit(false)).as("score_exact"),
-        coalesce($"next_score" <= $"score_e6", lit(true)).as("monotone"))
+        coalesce($"next_score" <= $"score_e6", lit(true)).as("monotone")) ++ extra: _*)
       .orderBy($"q_id", $"rank")
   }
 
@@ -747,56 +548,22 @@ object SnapshotLayout extends VersionedLayout {
     routed(spark, root, batchId)(knnJoinPqAsOf(spark, _, batchId, nProbe, k, rerank, sub))
 
   /** `knn_join_pq_gen`: [[knnJoinPqGen]] at HEAD over a generational
-    * wrap of [[pristineScenario]] (copied → generation 1, rolled back
-    * to the good batch 2, then cut over — the ivf_generation
-    * scenario), so the batch join must route to the SUCCESSOR and
-    * serve from its fresh fit + carried PQ sidecar. Per-hit
-    * invariants are [[knnJoinPqAsofChecked]]'s (`neighbor_live`,
-    * `score_exact` vs the TABLE, `not_self`, `monotone` — the live
-    * set at head equals the batch-2 live set, re-addressed by the
-    * cutover); globals pin the lifecycle:
-    *  - `routed_to_successor`: the head route resolves to generation
-    *    2 and the pointer agrees;
-    *  - `sidecar_carried`: the successor owns a code sidecar (the
-    *    carry, not a leftover — generation 1's files are untouched
-    *    but unused at head). */
+    * wrap of the scenario ([[LayoutGrids.genRoot]], then cut over), so
+    * the join routes to the successor's fresh fit and carried PQ
+    * sidecar; [[joinHitGrid]] per hit, plus:
+    *  - `routed_to_successor`: the head route resolves to generation 2
+    *    and the pointer agrees;
+    *  - `sidecar_carried`: the successor owns a code sidecar. */
   def knnJoinPqGenChecked(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/ivf_gen_join"
-    val gen1 = Generations.genPath(root, 1)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    copyLayout(spark, pristineScenario(spark, dir), gen1)
-    Generations.writePointer(spark, root, 1)
-    rollback(spark, gen1, 2L) // head := the good batch
+    val (root, _) = grids.genRoot(spark, dir, "ivf_gen_join")
     newGeneration(spark, root)
     val hits = knnJoinPqGen(spark, root, Long.MaxValue).localCheckpoint(true)
+    val gen2 = Generations.genPath(root, 2)
     val routedOk = Generations.current(spark, root) == 2 &&
-      Generations.route(spark, root, Long.MaxValue) ==
-        Generations.genPath(root, 2)
-    val sidecarOk = fs.exists(
-      new Path(s"${Generations.genPath(root, 2)}/pq/codes"))
-    val live = Tables.embeddings(spark, dir)
-      .filter(!($"vec_id" < 25 && $"vec_id" % 7 === 0))
-      .select($"vec_id", $"embedding")
-    val qv = live.select($"vec_id".as("q_id"), $"embedding".as("q_vec0"))
-    val nv = live.select($"vec_id".as("neighbor_id"), $"embedding".as("n_vec0"))
-    val next = hits.select($"q_id", ($"rank" - 1).as("rank"),
-      $"score_e6".as("next_score"))
-    hits.join(qv, Seq("q_id")).join(nv, Seq("neighbor_id"), "left")
-      .join(next, Seq("q_id", "rank"), "left")
-      .select($"q_id", $"rank",
-        $"n_vec0".isNotNull.as("neighbor_live"),
-        ($"q_id" =!= $"neighbor_id").as("not_self"),
-        coalesce(graft.core.Stab.e6(graft.functions.vectors.cosineSim(
-            $"n_vec0", $"q_vec0")) === $"score_e6",
-          lit(false)).as("score_exact"),
-        coalesce($"next_score" <= $"score_e6", lit(true)).as("monotone"),
-        lit(routedOk).as("routed_to_successor"),
-        lit(sidecarOk).as("sidecar_carried"))
-      .orderBy($"q_id", $"rank")
+      Generations.route(spark, root, Long.MaxValue) == gen2
+    val sidecarOk = VersionedLayout.fsOf(spark, root).exists(new Path(s"$gen2/pq/codes"))
+    joinHitGrid(spark, dir, hits, lit(routedOk).as("routed_to_successor"),
+      lit(sidecarOk).as("sidecar_carried"))
   }
 
   val knnJoinPqGenSql: String =
@@ -808,44 +575,11 @@ object SnapshotLayout extends VersionedLayout {
       |WHERE NOT (e.vec_id < 25 AND e.vec_id % 7 = 0)
       |ORDER BY q_id, rank""".stripMargin
 
-  /** `ivf_search_asof_filtered`: filtered serving composed with time
-    * travel — the last empty cell of the serving-mode matrix
-    * ({persisted, versioned} × {raw, ADC} × {unfiltered, filtered}).
-    * Over the meta-bearing scenario, as of the good batch:
-    *  - the RAW filtered as-of serve ([[searchAsOfFiltered]]) passes
-    *    the standard filtered grid — `k_results` (pre-filter
-    *    semantics), `all_match_label` (labels re-derived from the
-    *    TABLE, so stale reconstruction metadata flips the hash),
-    *    `self_found`/`top1_exact`, `monotone`;
-    *  - the ADC filtered as-of serve ([[searchAsOfPqFiltered]]) at
-    *    EXHAUSTIVE rerank is row-identical to it
-    *    (`adc_matches_raw`) — the filtered code reconstruction, the
-    *    sidecar metadata, and the direct-address rerank agree with
-    *    the raw path exactly. */
-  def ivfSearchAsofFiltered(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
-    // READ-ONLY over the scenario (serves + reconstructions, no
-    // rollback/compaction), so it serves straight from the pristine
-    // memo — the per-invocation filesystem copy is only for entries
-    // with destructive steps
-    val path = pristineScenario(spark, dir)
-    val queries = emb.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
-        $"label".as("q_label"))
-    val pred = col("label") === col("q_label")
-    val raw = searchAsOfFiltered(spark, path, 2L, queries, pred)
-      .localCheckpoint(true)
-    val adc = searchAsOfPqFiltered(spark, path, 2L, queries, pred,
-      rerank = 1000000).localCheckpoint(true)
-    val perProbe = ContractGrids.filteredServeGrid(spark, dir, raw)
-    val identical = serveDiffCount(raw, adc, "n_diff")
-      .select(($"n_diff" === 0L).as("adc_matches_raw"))
-    perProbe.crossJoin(broadcast(identical))
-      .select($"q_id", $"k_results", $"all_match_label", $"self_found",
-        $"top1_exact", $"monotone", $"adc_matches_raw")
-      .orderBy($"q_id")
-  }
+  /** `ivf_search_asof_filtered`: [[LayoutGrids.filteredGrid]] plus
+    * `adc_matches_raw` — the last cell of the serving-mode matrix
+    * ({persisted, versioned} × {raw, ADC} × {unfiltered, filtered}). */
+  def ivfSearchAsofFiltered(spark: SparkSession, dir: String): DataFrame =
+    grids.filteredGrid(spark, dir)
 
   val ivfSearchAsofFilteredSql: String =
     """SELECT vec_id AS q_id, true AS k_results, true AS all_match_label,
@@ -988,175 +722,10 @@ object SnapshotLayout extends VersionedLayout {
     routed(spark, root, batchId)(
       searchAsOfPq(spark, _, batchId, queries, nProbe, k, rerank, sub))
 
-  /** Count of full rows NOT present in both frames (0 iff the two
-    * frames are multiset-identical) — the set-level identity check
-    * the generation grids use: stronger than serve identity, since
-    * the serves are deterministic functions of these sets. */
-  private[graft] def rowSetDiffCount(a: DataFrame, b: DataFrame,
-      name: String): DataFrame = {
-    // true MULTISET diff: per-row counts compared per side (the naive
-    // union-and-count-≠2 heuristic miscounts duplicated rows — a row
-    // twice in one frame and absent from the other sums to 2 and would
-    // read "identical"). The join is NULL-SAFE on every column: GROUP
-    // BY treats null keys as equal, so the join must too, or a row
-    // with a null field present in BOTH frames would land as two
-    // unmatched rows and read as a difference.
-    val cols = a.columns.toSeq
-    val ca = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__ca"))
-      .alias("ga")
-    val cb = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__cb"))
-      .alias("gb")
-    val cond = cols.map(c => col(s"ga.$c") <=> col(s"gb.$c")).reduce(_ && _)
-    ca.join(cb, cond, "full_outer")
-      .filter(!(col("__ca") <=> col("__cb")))
-      .agg(count(lit(1)).as(name))
-  }
-
-  /** `ivf_generation`: the cutover contract as a driver-checked grid
-    * over a generational wrap of [[pristineScenario]] (copied, rolled
-    * back to the good batch 2 so the re-fit trains on good
-    * embeddings). Columns, per probe:
-    *  - `matches_fresh`: generation 2's persisted base is a genuine
-    *    fresh fit — every stored row sits in its d2-nearest gen-2
-    *    centroid (the assignment re-derived from the persisted
-    *    centroids, 1e-9 tie margin; KMeans float-accumulation order
-    *    is not pinned across independent fits, so the grid checks the
-    *    fit's own optimality condition instead of racing a second
-    *    fit) AND the centroids moved off generation 1's;
-    *  - `boundary_live_identical`: at the cutover batch both
-    *    generations reconstruct the same live set (fingerprint diff
-    *    empty) — the boundary is a re-addressing, not a data change;
-    *  - `old_asof_served`: an as-of BELOW the cutover, read through
-    *    the generational root, routes to generation 1 and serves
-    *    row-identically to the pre-cutover serve;
-    *  - `gauge_reset`: the per-generation debt gauge shows the
-    *    successor at one batch, fitted_n = its live rows,
-    *    delta_since_fit = 0, and carrying the pointer;
-    *  - `cross_rollback_refused`: rollback to a pre-cutover batch
-    *    throws instead of mangling the successor;
-    *  - `post_cutover_applies`: a batch applied AFTER the cutover
-    *    (re-adding two dead ids) lands in generation 2's log and
-    *    serves at head — the successor is a living log, not a frozen
-    *    copy;
-    *  - `sidecar_carried`: the PQ sidecar exists on the successor;
-    *  - `retired_refuses`: after `dropGeneration(1)` (run LAST, once
-    *    every generation-1 aggregate is materialized), a pre-cutover
-    *    as-of refuses at routing instead of aliasing an older head —
-    *    the retention trade made explicit;
-    *  - `self_found` / `top1_exact`: the head serve through the
-    *    generational route finds each probe's own vector at 1.0. */
-  def ivfGeneration(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val all = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding", $"label")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-snap-" +
-      s"${spark.sparkContext.applicationId}-${math.abs(dir.hashCode)}/ivf_gen"
-    val gen1 = Generations.genPath(root, 1)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(root), true)
-    copyLayout(spark, pristineScenario(spark, dir), gen1)
-    Generations.writePointer(spark, root, 1)
-    rollback(spark, gen1, 2L) // head := the good batch
-    val queries = all.filter($"vec_id" < 5 && $"vec_id" % 7 =!= 0)
-      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val asof1Before = searchAsOf(spark, gen1, 1L, queries).localCheckpoint(true)
-    val newGen = newGeneration(spark, root)
-    val gen2 = Generations.genPath(root, 2)
-    // fresh-fit identity, expressed deterministically: KMeans'
-    // float-accumulation order is not pinned across fits, so instead
-    // of racing a SECOND fit against the cutover's, the grid pins
-    // (a) every stored base row sits in its d2-nearest gen-2 centroid
-    // within a 1e-9 tie margin (the fit's own assignment re-derived
-    // from its persisted centroids — a fresh build could assign no
-    // better), and (b) the centroids genuinely moved off generation
-    // 1's (the re-fit happened; gen 1 was fit on the >= 50 slice
-    // only). Content identity with the head live set is the boundary
-    // check below.
-    val storedBase = spark.read.parquet(s"$gen2/vectors")
-      .filter($"batch_id" === 2L).drop("batch_id")
-    val gen2Cent = spark.read.parquet(s"$gen2/centroids")
-    val vv = graft.functions.vectors.dotProduct(col("embedding"), col("embedding"))
-    val vc = graft.functions.vectors.dotProduct(col("embedding"), col("centroid"))
-    val cc = graft.functions.vectors.dotProduct(col("centroid"), col("centroid"))
-    val d2 = lit(1.0) - lit(2.0) *
-      when(vv === 0d, lit(0.0)).otherwise(vc / sqrt(vv)) + cc
-    val rowsDiff = storedBase
-      .select($"vec_id", $"embedding", $"cluster_id".as("assigned"))
-      .crossJoin(broadcast(gen2Cent)).withColumn("d2", d2)
-      .groupBy($"vec_id").agg(
-        min($"d2").as("best"),
-        min(when($"cluster_id" === $"assigned", $"d2")).as("got"))
-      // 1e-6 margin: assignments were chosen against double-precision
-      // KMeans centers but the persisted centroids are float32, which
-      // perturbs d2 by ~1e-7 relative — a tighter margin would flip
-      // genuinely-tied rows nondeterministically; real inter-centroid
-      // gaps on this corpus are orders of magnitude wider
-      .agg(count(when($"got" > $"best" + 1e-6, 1)).as("n_rows_diff"))
-    val centDiff = rowSetDiffCount(spark.read.parquet(s"$gen1/centroids"),
-      gen2Cent, "n_cent_same_comp")
-      .select(($"n_cent_same_comp" === 0L).cast("long").as("n_cent_diff"))
-    val boundary = VersionedLayout.diffFingerprints(
-        asOfFingerprints(spark, gen1, 2L, "b_fp"),
-        asOfFingerprints(spark, gen2, 2L, "a_fp"))
-      .agg(count(lit(1)).as("n_boundary_diff"))
-    val asof1After = searchAsOfGen(spark, root, 1L, queries)
-    val oldServed = serveDiffCount(asof1Before, asof1After, "n_old_diff")
-    // gauge BEFORE the post-cutover batch: the reset state
-    val debts = layoutDebtGen(spark, root).collect()
-    val gen2Row = debts.find(_.getAs[Long]("generation") == 2L)
-    val gaugeReset = gen2Row.exists(r =>
-      r.getAs[Boolean]("is_current") && r.getAs[Long]("n_batches") == 1L &&
-        r.getAs[Long]("delta_since_fit") == 0L &&
-        r.getAs[Long]("fitted_n") == r.getAs[Long]("live_rows")) &&
-      debts.count(_.getAs[Boolean]("is_current")) == 1
-    val crossRefused =
-      try { rollbackGen(spark, root, 1L); false }
-      catch { case _: IllegalArgumentException => true }
-    // the successor is a living log: re-add two ids dead since batch 2
-    applyBatchGen(spark, root, 3L,
-      upserts = all.filter($"vec_id" === 14 || $"vec_id" === 21),
-      deletes = all.limit(0).select($"vec_id"))
-    val reAdded = asOfAssignedGen(spark, root, Long.MaxValue)
-      .filter($"vec_id" === 14 || $"vec_id" === 21)
-      .agg(count(lit(1)).as("n_readded"))
-    val landedGen2 = manifestIds(spark, gen2) == Seq(2L, 3L)
-    val sidecarCarried = fs.exists(new Path(s"$gen2/pq/codes"))
-    // retirement is the lifecycle's last verb: dropping generation 1
-    // must flip its as-ofs to LOUD refusal at routing, never a silent
-    // alias of an older head. Every generation-1-reading aggregate
-    // above is materialized (localCheckpoint) before the files go.
-    val centDiffM = centDiff.localCheckpoint(true)
-    val boundaryM = boundary.localCheckpoint(true)
-    val oldServedM = oldServed.localCheckpoint(true)
-    Generations.dropGeneration(spark, root, 1)
-    val retiredRefuses =
-      (try { Generations.route(spark, root, 1L); false }
-      catch { case _: IllegalArgumentException => true }) &&
-        Generations.list(spark, root) == Seq(2)
-    val head = searchAsOfGen(spark, root, Long.MaxValue, queries)
-    val perProbe = head.groupBy($"q_id").agg(
-      (max(when($"neighbor_id" === $"q_id", 1)).isNotNull).as("self_found"),
-      (max($"score_e6") === 1000000L).as("top1_exact"))
-    val globals = rowsDiff.crossJoin(centDiffM).crossJoin(boundaryM)
-      .crossJoin(oldServedM).crossJoin(reAdded)
-      .select(
-        ($"n_rows_diff" === 0L && $"n_cent_diff" === 0L).as("matches_fresh"),
-        ($"n_boundary_diff" === 0L).as("boundary_live_identical"),
-        ($"n_old_diff" === 0L).as("old_asof_served"),
-        lit(newGen == 2 && Generations.current(spark, root) == 2 &&
-          gaugeReset).as("gauge_reset"),
-        lit(crossRefused).as("cross_rollback_refused"),
-        ($"n_readded" === 2L && lit(landedGen2)).as("post_cutover_applies"),
-        lit(sidecarCarried).as("sidecar_carried"),
-        lit(retiredRefuses).as("retired_refuses"))
-    perProbe.crossJoin(broadcast(globals))
-      .select($"q_id", $"self_found", $"top1_exact", $"matches_fresh",
-        $"boundary_live_identical", $"old_asof_served", $"gauge_reset",
-        $"cross_rollback_refused", $"post_cutover_applies", $"sidecar_carried",
-        $"retired_refuses")
-      .orderBy($"q_id")
-  }
+  /** `ivf_generation`: [[LayoutGrids.lifecycle]], run per invocation,
+    * with `matches_fresh` as the KMeans optimality check. */
+  def ivfGeneration(spark: SparkSession, dir: String): DataFrame =
+    grids.generationGrid(spark, dir, grids.lifecycle(spark, dir))
 
   val ivfGenerationSql: String =
     """SELECT vec_id AS q_id, true AS self_found, true AS top1_exact,

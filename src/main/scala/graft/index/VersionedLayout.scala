@@ -80,7 +80,7 @@ abstract class VersionedLayout {
 
   /** Batch-partitioned payload roots, in plan-slot order (`vectors`
     * first); each stages under `_compact_tmp/<root>`. */
-  protected def payloadRoots: Seq[String]
+  private[index] def payloadRoots: Seq[String]
 
   /** Where a code sidecar `sub` stages during compaction. */
   protected def codeStage(sub: String): String
@@ -364,6 +364,13 @@ abstract class VersionedLayout {
     else fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .flatMap(d => batchDirId(d.getPath.getName).map(_ -> d.getPath))
 
+  /** The batch ids stored under `root`, through the placement level. */
+  private[index] def storedBatchIds(spark: SparkSession, path: String,
+      root: String): Set[Long] = {
+    val fs = fsOf(spark, path)
+    units(fs, new Path(s"$path/$root"), 0).flatMap(u => batchDirs(fs, u._2)).map(_._1).toSet
+  }
+
   private[index] def batchDirId(name: String): Option[Long] = name match {
     case BatchDirPattern(n) => Some(n.toLong)
     case _ => None
@@ -427,6 +434,20 @@ abstract class VersionedLayout {
     spark.read.parquet(s"$path/$sub/codes")
       .filter(col("batch_id") <= batchId)
       .join(asOfWinners(spark, path, batchId), Seq("vec_id", "batch_id"))
+
+  /** Exact top-k rerank of an ADC shortlist: `cand` carries each
+    * q_id's candidates by the winning raw rows' partition address
+    * (placement, vec_id, batch_id), so the fetch is a partition-pruned
+    * broadcast join — no reconstruction. */
+  protected def rerankExact(spark: SparkSession, path: String, cand: DataFrame,
+      queries: DataFrame, k: Int): DataFrame =
+    graft.operators.KnnSearch.topK(spark.read.parquet(s"$path/vectors")
+      .join(broadcast(cand), placement.toSeq ++ Seq("vec_id", "batch_id"))
+      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        graft.core.Stab.e6(graft.functions.vectors.cosineSim(
+          col("embedding"), col("q_vec"))).as("score_e6")),
+      k, asc = false)
 
   /** The live (vec_id, fingerprint) set as of `batchId`, the columns
     * outside `exclude` hashed map-side so the window moves keys + 8

@@ -488,9 +488,6 @@ object Collections {
       name: String = "graft_chunks", nBuckets: Int = 32): Unit = {
     import spark.implicits._
     import graft.index.{IvfIndex, NswIndex}
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // The build is five independent Spark jobs in two dependency
     // phases; submitting each phase's jobs CONCURRENTLY (separate
     // driver threads — the standard multi-job Spark pattern) lets the
@@ -503,14 +500,13 @@ object Collections {
     // Force the chunk-embed memo BEFORE forking so the writer threads
     // never race its construction.
     val emb = chunkEmbeddings(spark, dir)
-    val writes = Seq(
-      Future(graft.sources.Bucketed.write(
+    graft.core.DriverJobs.all(spark)(Seq(
+      () => graft.sources.Bucketed.write(
         Tables.documents(spark, dir).select($"doc_id", $"source", $"text"),
-        s"${name}_docs", s"$base/documents", "doc_id", nBuckets)),
-      Future(graft.sources.Bucketed.write(chunksRaw(spark, dir),
-        s"${name}_chunks", s"$base/chunks", "doc_id", nBuckets)),
-      Future(emb.write.mode("overwrite").parquet(s"$base/chunk_embeddings")))
-    Await.result(Future.sequence(writes), Duration.Inf)
+        s"${name}_docs", s"$base/documents", "doc_id", nBuckets),
+      () => graft.sources.Bucketed.write(chunksRaw(spark, dir),
+        s"${name}_chunks", s"$base/chunks", "doc_id", nBuckets),
+      () => emb.write.mode("overwrite").parquet(s"$base/chunk_embeddings")))
     // the /query indexes, persisted over the SAME durable corpus the
     // cosine path scans (VERDICT r4 #6): IVF in its partition-pruned
     // cluster layout, NSW in the co-bucketed graph layout — serving
@@ -519,11 +515,10 @@ object Collections {
     // index_type parameter (main.py:320-341). Built from the parquet
     // corpus, not the memo, so the layout is self-contained.
     val corpus = spark.read.parquet(s"$base/chunk_embeddings")
-    val layouts = Seq(
-      Future(IvfIndex.persist(IvfIndex.build(spark, corpus), s"$base/ivf")),
-      Future(NswIndex.persistBucketed(spark, corpus,
+    graft.core.DriverJobs.all(spark)(Seq(
+      () => IvfIndex.persist(IvfIndex.build(spark, corpus), s"$base/ivf"),
+      () => NswIndex.persistBucketed(spark, corpus,
         NswIndex.buildEdgesLsh(corpus), s"$base/nsw", s"${name}_nsw", nBuckets)))
-    Await.result(Future.sequence(layouts), Duration.Inf)
   }
 
   /** Chunk-granular /query served ENTIRELY from the [[persistChunks]]
