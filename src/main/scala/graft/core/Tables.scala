@@ -62,6 +62,8 @@ object Tables {
   */
 object Stab {
   def e6(c: Column): Column = floor(c * lit(1000000.0) + lit(0.5)).cast(LongType)
+  /** [[e6]] on a driver-side double, the same IEEE steps. */
+  def e6(d: Double): Long = math.floor(d * 1000000.0 + 0.5).toLong
   def e2(c: Column): Column = floor(c * lit(100.0) + lit(0.5)).cast(LongType)
   /** SQL fragments for the same ops (DuckDB side). */
   def sqlE6(expr: String): String = s"CAST(FLOOR(($expr) * 1000000.0 + 0.5) AS BIGINT)"

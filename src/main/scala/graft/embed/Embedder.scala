@@ -2,7 +2,7 @@ package graft.embed
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
@@ -79,4 +79,8 @@ object Embedder {
   /** Embed a text column into a unit-norm `Array[Float]` of `dim`. */
   def embedText(c: Column, dim: Int = DefaultDim): Column =
     Bridge.column(TextEmbed(Bridge.expression(c), dim))
+
+  /** [[embedText]] of one string, evaluated on the driver without a job. */
+  def embedLocal(text: String, dim: Int = DefaultDim): Array[Float] =
+    TextEmbed(Literal(text), dim).eval().asInstanceOf[ArrayData].toFloatArray()
 }

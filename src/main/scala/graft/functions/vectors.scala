@@ -144,4 +144,20 @@ object vectors {
   def cosineSim(a: Column, b: Column): Column = col(CosineSimilarity(expr(a), expr(b)))
   def dotProduct(a: Column, b: Column): Column = col(DotProduct(expr(a), expr(b)))
   def l2Distance(a: Column, b: Column): Column = col(L2Distance(expr(a), expr(b)))
+
+  /** [[CosineSimilarity]]'s arithmetic over driver arrays, bit for bit
+    * (same double accumulation order, same zero-norm guard) — what a
+    * driver-resident serve scores with to match the Spark plan. */
+  def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x(i).toDouble
+      val yi = y(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
 }

@@ -86,9 +86,12 @@ object IvfIndex {
     * read for persisted layouts. */
   private[graft] def resolveNProbe(nProbe: Int, centroids: DataFrame,
       base: Int = defaultNProbe): Int =
-    if (nProbe > 0) nProbe
-    else math.max(1, math.ceil(
-      centroids.count() * base.toDouble / defaultK).toInt)
+    if (nProbe > 0) nProbe else autoNProbe(centroids.count(), base)
+
+  /** The auto sentinel's probe count for a `cells`-cell index:
+    * `base`-of-defaultK coverage, at least one cell. */
+  private[graft] def autoNProbe(cells: Long, base: Int = defaultNProbe): Int =
+    math.max(1, math.ceil(cells * base.toDouble / defaultK).toInt)
 
   /** Memoized centroid-cell count of a PERSISTED layout: the auto
     * sentinel needs it per serve call, and without a memo every
@@ -108,9 +111,7 @@ object IvfIndex {
     * count from the per-layout memo instead of a count() job. */
   private[graft] def resolveNProbeAt(spark: SparkSession, path: String,
       nProbe: Int, base: Int = defaultNProbe): Int =
-    if (nProbe > 0) nProbe
-    else math.max(1, math.ceil(
-      cellCount(spark, path) * base.toDouble / defaultK).toInt)
+    if (nProbe > 0) nProbe else autoNProbe(cellCount(spark, path), base)
 
   /** Coverage-ADAPTIVE probing (round 15, VERDICT r14 #1): a fraction
     * in (0, 1]. When set — and the caller uses the nProbe auto
@@ -318,9 +319,22 @@ object IvfIndex {
     val train =
       if (n <= fitSampleCap) feat
       else feat.sample(withReplacement = false, fitSampleCap.toDouble / n, seed)
-    val model = new KMeans().setK(kUse).setSeed(seed).setFeaturesCol("features")
+    val kmeans = new KMeans().setK(kUse).setSeed(seed).setFeaturesCol("features")
       .setInitMode(initMode)
-      .fit(train)
+    // Random init drops duplicate vectors from its k-row sample, and
+    // Spark's block solver (the auto choice for dense features) still
+    // sizes its aggregator by k: a corpus with repeated vectors whose
+    // sample draws two copies throws ArrayIndexOutOfBounds mid-fit.
+    // Only that fit is redone, on the row solver, which serves the
+    // fewer centers it gets; every fit that succeeds stays as it was.
+    val model =
+      try kmeans.fit(train)
+      catch {
+        case e: org.apache.spark.SparkException
+            if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+              .exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]) =>
+          kmeans.setSolver("row").fit(train)
+      }
     val assigned = model.transform(feat)
       .select(Seq($"vec_id", $"embedding") ++ metaCols.map(col) :+
         $"prediction".cast("int").as("cluster_id"): _*)

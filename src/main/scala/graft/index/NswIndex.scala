@@ -835,14 +835,11 @@ object NswIndex {
     * (nsw_index.py:117-165): per hop ONE job joins the broadcast
     * frontier through the edge table and scores the expansion against
     * the query-vector literal; dedup, beam cut, and termination happen
-    * in memory. Terminates once no newly scored node beats the current
-    * k-th best (the classic best-first stop), making the fixed hop
-    * count an upper bound instead of a constant cost. Scoring uses the
-    * identical stabilized expression and (score desc, node asc) ties,
-    * so a run that does reach hop h holds the same beam the BSP loop
-    * would. In the bucketed layout the frontier side broadcasts, so a
-    * superstep is Exchange-FREE (the BSP loop's one frontier
-    * Exchange disappears too). */
+    * in memory ([[walkSingle]]). Scoring uses the identical stabilized
+    * expression and (score desc, node asc) ties, so a run that does
+    * reach hop h holds the same beam the BSP loop would. In the
+    * bucketed layout the frontier side broadcasts: a superstep is
+    * Exchange-FREE. */
   private def beamSearchSingle(emb: DataFrame, edges: DataFrame,
       queries: DataFrame, k: Int, preExpandedEdges: Boolean,
       maxHops0: Int = 0, seedSampleMod: Int = entrySeedMod,
@@ -856,83 +853,86 @@ object NswIndex {
     val qLit = typedlit(q(0).getSeq[Float](1).toArray)
     val embSel = emb.select(
       (Seq(col("vec_id").as("node"), col("embedding")) ++ metaCols.map(col)): _*)
-    // the batch walk's 0-sentinel knob resolution — for the bucketed
-    // single-query serve the count is parquet-footer metadata
+    // the batch walk's 0-sentinel knob resolution
     val nCorpus = if (beamW0 > 0 && maxHops0 > 0) -1L else embSel.count()
     val beamW = if (beamW0 > 0) beamW0
       else if (acceptPred.isDefined) filteredBeamFor(spark, nCorpus)
       else beamFor(spark, nCorpus)
     val maxHops = if (maxHops0 > 0) maxHops0 else hopsFor(spark, nCorpus)
-    // Filtered mode: the predicate may reference node metadata only
-    // (a single query's own columns fold into the predicate as
-    // literals caller-side). As in the batch walk, it constrains what
-    // is SERVED, never what is WALKED — each scoring job just carries
-    // an `ok` flag per node, and the driver keeps the accepted set
-    // separately for the k-th-best bar and the final cut.
+    // Filtered mode: the predicate may reference node metadata only (a
+    // single query's own columns fold into it as literals caller-side)
     val okCol = acceptPred.getOrElse(lit(true)).as("ok")
     val edgeSel =
       if (preExpandedEdges) edges.select(col("node"), col("dst"))
       else edges.select(col("src").as("node"), col("dst"))
         .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
     // Multi-seed entry, driver-bounded: the coarse sample (+ min-id
-    // fallback) scores DISTRIBUTED and only the top beam survives the
-    // TakeOrdered collect, so the driver transfer stays O(beamWidth)
-    // no matter the corpus (the per-hop collects' existing bound).
+    // fallback) scores DISTRIBUTED; only the top beam is collected
     val seedsDf = embSel.select(col("node"))
       .filter(pmod(col("node"), lit(seedSampleMod.toLong)) === 0L)
       .unionByName(emb.agg(min(col("vec_id")).as("node")))
       .distinct()
-    val seedScored = embSel.join(broadcast(seedsDf), Seq("node"))
-      .select(col("node"), Stab.e6(cosineSim(col("embedding"), qLit)).as("score_e6"),
-        okCol)
-      .orderBy(col("score_e6").desc, col("node").asc)
-      .limit(math.max(k, beamW))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    val visited = scala.collection.mutable.LongMap.empty[Long] // node -> score_e6
-    val accepted = scala.collection.mutable.LongMap.empty[Long] // pred-passing subset
-    if (seedScored.nonEmpty) {
-      seedScored.foreach { case (n, s, ok) =>
-        visited.update(n, s); if (ok) accepted.update(n, s)
-      }
-      var frontier = seedScored.sortBy { case (n, s, _) => (-s, n) }
-        .take(beamW).map(_._1)
-      var hop = 0
-      var converged = false
-      while (hop < maxHops && !converged && frontier.nonEmpty) {
+    def scored(nodes: DataFrame, cut: DataFrame => DataFrame = identity) =
+      cut(embSel.join(broadcast(nodes), Seq("node")).select(col("node"),
+          Stab.e6(cosineSim(col("embedding"), qLit)).as("score_e6"), okCol))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    val top = walkSingle(k, beamW, maxHops,
+      seeds = limit =>
+        scored(seedsDf, _.orderBy(col("score_e6").desc, col("node").asc).limit(limit)),
+      // frontier ∪ its one-hop expansion scored in a single job; the
+      // frontier rows score too, which is how hop 1 scores the entry
+      expand = frontier => {
         val fDf = spark.createDataFrame(frontier.toSeq.map(Tuple1(_))).toDF("node")
-        // frontier ∪ its one-hop expansion scored in a single job; the
-        // frontier rows score too, which is how hop 1 scores the entry
-        val candidates = fDf.unionByName(
-            edgeSel.join(broadcast(fDf), Seq("node")).select(col("dst").as("node")))
-          .distinct()
-        val scoredRows = embSel.join(broadcast(candidates), Seq("node"))
-          .select(col("node"), Stab.e6(cosineSim(col("embedding"), qLit)).as("score_e6"),
-            okCol)
-          .collect()
-        val fresh = scoredRows
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-          .filter { case (n, _, _) => !visited.contains(n) }
-        // the bar is the k-th best ACCEPTED node BEFORE this hop's
-        // nodes land: "this superstep added nothing that improves the
-        // answer" → stop. (Unfiltered mode: accepted == visited.)
-        val bar = {
-          val top = accepted.values.toArray.sorted(Ordering.Long.reverse)
-          if (top.length < k) Long.MinValue else top(k - 1)
-        }
-        fresh.foreach { case (n, s, ok) =>
-          visited.update(n, s); if (ok) accepted.update(n, s)
-        }
-        if (fresh.isEmpty || !fresh.exists(_._2 > bar)) converged = true
-        else frontier = fresh.sortBy { case (n, s, _) => (-s, n) }
-          .take(beamW).map(_._1)
-        hop += 1
-      }
-    }
-    val top = accepted.toArray.sortBy { case (n, s) => (-s, n) }.take(k)
+        scored(fDf.unionByName(
+          edgeSel.join(broadcast(fDf), Seq("node")).select(col("dst").as("node"))).distinct())
+      })
     spark.createDataFrame(
         top.zipWithIndex.toSeq.map { case ((n, s), i) => (qId, n, s, (i + 1).toLong) })
       .toDF("q_id", "neighbor_id", "score_e6", "rank")
       .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** The driver loop of a single-query walk, whatever executes it:
+    * [[beamSearchSingle]]'s one Spark job per hop, or the arrays of a
+    * [[ServeSnapshot]]. The executor returns `(node, score_e6, ok)`
+    * rows: `seeds(limit)` the best `limit` of the entry sample on
+    * (score desc, node asc), `expand(frontier)` the frontier ∪ its
+    * one-hop neighbors in any order. `ok` is a filtered walk's accept
+    * flag — the predicate constrains what is SERVED, never what is
+    * WALKED — so the accepted set is kept apart for the k-th-best bar
+    * and the final cut. The walk stops once a hop scores nothing that
+    * beats the k-th best accepted node held before it (best-first
+    * stop), so `maxHops` is a cap. Returns the top-k accepted
+    * `(node, score_e6)`, best first. */
+  private[graft] def walkSingle(k: Int, beamW: Int, maxHops: Int,
+      seeds: Int => Array[(Long, Long, Boolean)],
+      expand: Array[Long] => Array[(Long, Long, Boolean)]): Array[(Long, Long)] = {
+    val visited = scala.collection.mutable.LongMap.empty[Long] // node -> score_e6
+    val accepted = scala.collection.mutable.LongMap.empty[Long] // pred-passing subset
+    def land(rows: Array[(Long, Long, Boolean)]): Unit = rows.foreach { case (n, s, ok) =>
+      visited.update(n, s); if (ok) accepted.update(n, s)
+    }
+    def beam(rows: Array[(Long, Long, Boolean)]): Array[Long] =
+      rows.sortBy { case (n, s, _) => (-s, n) }.take(beamW).map(_._1)
+    val seedScored = seeds(math.max(k, beamW))
+    land(seedScored)
+    var frontier = beam(seedScored)
+    var (hop, converged) = (0, false)
+    while (hop < maxHops && !converged && frontier.nonEmpty) {
+      val fresh = expand(frontier).filter { case (n, _, _) => !visited.contains(n) }
+      // the bar is the k-th best ACCEPTED node BEFORE this hop's
+      // nodes land: "this superstep added nothing that improves the
+      // answer" → stop. (Unfiltered mode: accepted == visited.)
+      val bar = {
+        val top = accepted.values.toArray.sorted(Ordering.Long.reverse)
+        if (top.length < k) Long.MinValue else top(k - 1)
+      }
+      land(fresh)
+      if (fresh.isEmpty || !fresh.exists(_._2 > bar)) converged = true
+      else frontier = beam(fresh)
+      hop += 1
+    }
+    accepted.toArray.sortBy { case (n, s) => (-s, n) }.take(k)
   }
 
   /** `nsw_search` query: beam search for the fixed query set.

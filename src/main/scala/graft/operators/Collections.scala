@@ -268,8 +268,7 @@ object Collections {
         IvfIndex.search(IvfIndex.buildCached(spark, dir), queries, k = k)
       case "nsw" =>
         NswIndex.beamSearch(emb, NswIndex.edgesCached(spark, dir), queries, k = k)
-      case other => throw new IllegalArgumentException(
-        s"unknown index type '$other' (expected cosine|ivf|nsw)")
+      case other => throw unknownIndexType(other)
     }
     contentJoin(spark, dir, hits)
   }
@@ -414,8 +413,7 @@ object Collections {
       case "nsw" =>
         val edges = NswIndex.edgesCachedFor(s"$corpusKey:$dir", corpus, dir)
         NswIndex.beamSearch(corpus, edges, q, k = k, singleQuery = true)
-      case other => throw new IllegalArgumentException(
-        s"unknown index type '$other' (expected cosine|ivf|nsw)")
+      case other => throw unknownIndexType(other)
     }
   }
 
@@ -519,6 +517,9 @@ object Collections {
       () => IvfIndex.persist(IvfIndex.build(spark, corpus), s"$base/ivf"),
       () => NswIndex.persistBucketed(spark, corpus,
         NswIndex.buildEdgesLsh(corpus), s"$base/nsw", s"${name}_nsw", nBuckets)))
+    // the layout is whole only now: memos over it (the serve snapshot)
+    // reload from this version, whatever the index writers bumped
+    graft.store.IndexVersions.bump(base)
   }
 
   /** Chunk-granular /query served ENTIRELY from the [[persistChunks]]
@@ -530,10 +531,23 @@ object Collections {
     * (reference main.py:320-341): brute cosine scans the corpus, `ivf`
     * probes the partition-pruned cluster layout, `nsw` beam-searches
     * the co-bucketed graph. Same contract as [[queryTextChunks]] plus
-    * the parent column (parity spec: PersistedLayoutSpec). */
+    * the parent column (parity spec: PersistedLayoutSpec).
+    *
+    * A layout that fits the driver's snapshot budget is answered from
+    * its in-process [[graft.index.ServeSnapshot]] — same rows, order
+    * and schema, no Spark job; a larger one takes
+    * [[queryTextChunksPersistedSpark]]. */
   def queryTextChunksPersisted(spark: SparkSession, base: String,
       name: String = "graft_chunks", queryText: String = DemoQueryText,
-      k: Int = 10, indexType: String = "cosine"): DataFrame = {
+      k: Int = 10, indexType: String = "cosine"): DataFrame =
+    graft.index.ServeSnapshot.get(spark, base, name)
+      .map(_.query(spark, queryText, k, indexType))
+      .getOrElse(queryTextChunksPersistedSpark(spark, base, name, queryText, k, indexType))
+
+  /** [[queryTextChunksPersisted]] as Spark jobs over the layout's
+    * files — the path for layouts too big for the driver. */
+  private[graft] def queryTextChunksPersistedSpark(spark: SparkSession, base: String,
+      name: String, queryText: String, k: Int, indexType: String): DataFrame = {
     import spark.implicits._
     import graft.index.{IvfIndex, NswIndex}
     val q = spark.range(1).select(lit(0L).as("q_id"),
@@ -551,17 +565,34 @@ object Collections {
       case "nsw" =>
         NswIndex.searchPersistedBucketed(spark, s"${name}_nsw", q,
           k = k, singleQuery = true)
-      case other => throw new IllegalArgumentException(
-        s"unknown index type '$other' (expected cosine|ivf|nsw)")
+      case other => throw unknownIndexType(other)
     }
-    // chunk ⋈ document on the shared bucket key, then the broadcast
-    // k-row hit join — the corpus-sized side never shuffles
-    val withParent = spark.table(s"${name}_chunks")
+    persistedHitRows(spark, name, hits)
+  }
+
+  private[graft] def unknownIndexType(t: String): IllegalArgumentException =
+    new IllegalArgumentException(s"unknown index type '$t' (expected cosine|ivf|nsw)")
+
+  /** Per chunk of a [[persistChunks]] layout: its packed id
+    * (`neighbor_id`), `doc_id`, `chunk_idx`, 40-character `content`
+    * and parent `source` — chunk ⋈ document on the shared bucket key,
+    * so the corpus-sized side never shuffles. */
+  private[graft] def persistedChunkRows(spark: SparkSession, name: String): DataFrame = {
+    import spark.implicits._
+    spark.table(s"${name}_chunks")
       .join(spark.table(s"${name}_docs").select($"doc_id", $"source"), Seq("doc_id"))
-    withParent
       .select(packedChunkId($"doc_id", $"chunk_idx").as("neighbor_id"),
         $"doc_id", $"chunk_idx", substring($"chunk_text", 1, 40).as("content"),
         $"source")
+  }
+
+  /** The persisted /query's result: the k-row hits broadcast into
+    * [[persistedChunkRows]] (a hit without a chunk row drops out),
+    * in rank order. */
+  private[graft] def persistedHitRows(spark: SparkSession, name: String,
+      hits: DataFrame): DataFrame = {
+    import spark.implicits._
+    persistedChunkRows(spark, name)
       .join(broadcast(hits), Seq("neighbor_id"))
       .select($"doc_id", $"chunk_idx", $"content", $"source",
         $"score_e6".as("confidence_e6"), $"rank")

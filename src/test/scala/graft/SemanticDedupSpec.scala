@@ -80,6 +80,31 @@ class SemanticDedupSpec extends AnyFunSuite {
     }
   }
 
+  test("a 20-vector shard with an exact and a near copy gets a decision per vector") {
+    // the perfbench curate shape at its smallest: 18 clustered vectors,
+    // one exact copy and one near copy — fewer distinct points than
+    // the random init can draw distinct centers from
+    import org.apache.spark.sql.functions.col
+    val rng = new scala.util.Random(20L)
+    def unit(v: Array[Double]): Array[Float] = {
+      val n = math.sqrt(v.map(x => x * x).sum); v.map(x => (x / n).toFloat)
+    }
+    val centers = Array.fill(16)(Array.fill(64)(rng.nextGaussian()))
+    val base = (0 until 18).map { i =>
+      unit(centers(rng.nextInt(16)).map(_ + 2.5 / 8 * rng.nextGaussian()))
+    }
+    val vecs = (base :+ base(3) :+ unit(base(7).map(_ + 0.1 / 8 * rng.nextGaussian())))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v, i % 4) }
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-small").toString
+    import spark.implicits._
+    vecs.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
+    val dec = Dedup.semanticDedupDecisions(spark, dir).select(col("vec_id"), col("keep"))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(dec.keySet == (0L until 20L).toSet)
+    // the exact copy lands in its source's cell and one of the two goes
+    assert(!(dec(3L) && dec(18L)), "exact duplicate pair kept twice")
+  }
+
   test("sidecar reuse contract: persisted PQ codes are byte-identical to a fresh dedup encode") {
     // the opportunistic reuse path reads the session's persisted
     // sidecar codes instead of re-encoding; that is sound ONLY
