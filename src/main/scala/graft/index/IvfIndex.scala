@@ -1431,23 +1431,16 @@ object IvfIndex {
       sub: String = "pq"): DataFrame =
     searchPersistedPqImpl(spark, path, queries, Some(pred), nProbe, k, rerank, sub)
 
-  /** Per-query ADC state for a layout's `sub` sidecar: the broadcast
-    * LUT array (queries collected once — the bounded interactive
-    * side — rotated into the sidecar's space when it has a basis) and
-    * the probe frame (nProbe centroid-ranked (q_id, cluster_id) rows
-    * + the LUT index + any non-vector query columns, so a filtered
-    * predicate can compare them against code-row metadata). Shared by
-    * the persisted and versioned compressed-tier serves. */
-  /** `probeMass = Some((tau, masses))` switches the probe cut to the
-    * coverage-adaptive running-mass prefix over the given per-cell
-    * masses (head: [[cellMassesAt]]; versioned: the as-of masses). */
-  private[index] def pqQueryState(spark: SparkSession, path: String,
-      queries: DataFrame, nProbe: Int, sub: String,
-      probeMass: Option[(Double, Map[Int, Long])] = None)
+  /** Per-query ADC state for a layout's `sub` sidecar, shared by
+    * every compressed-tier serve of both index families: the
+    * broadcast LUT array (queries collected once — the bounded
+    * interactive side — rotated into the sidecar's space when it has
+    * a basis) and the (q_id, q_idx) frame that indexes it. */
+  private[index] def pqLuts(spark: SparkSession, path: String,
+      queries: DataFrame, sub: String)
       : (org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
         DataFrame) = {
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$path/centroids")
     val books = readCodebooks(spark, path, sub)
     val rotation = readRotation(spark, path, sub)
     val qRows = queries.select(col("q_id"), col("q_vec")).collect()
@@ -1460,6 +1453,25 @@ object IvfIndex {
     val lutBc = spark.sparkContext.broadcast(luts)
     val qIdx = qRows.zipWithIndex
       .map { case (r, i) => (r.getLong(0), i) }.toSeq.toDF("q_id", "q_idx")
+    (lutBc, qIdx)
+  }
+
+  /** The IVF compressed serve's query state: [[pqLuts]] plus the probe
+    * frame — nProbe centroid-ranked (q_id, cluster_id) rows + the LUT
+    * index + any non-vector query columns, so a filtered predicate
+    * can compare them against code-row metadata. Shared by the
+    * persisted and versioned IVF-PQ serves. `probeMass =
+    * Some((tau, masses))` switches the probe cut to the
+    * coverage-adaptive running-mass prefix over the given per-cell
+    * masses (head: [[cellMassesAt]]; versioned: the as-of masses). */
+  private[index] def pqQueryState(spark: SparkSession, path: String,
+      queries: DataFrame, nProbe: Int, sub: String,
+      probeMass: Option[(Double, Map[Int, Long])] = None)
+      : (org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
+        DataFrame) = {
+    import spark.implicits._
+    val centroids = spark.read.parquet(s"$path/centroids")
+    val (lutBc, qIdx) = pqLuts(spark, path, queries, sub)
     val qMetaCols = queries.columns.toSeq.filterNot(Set("q_id", "q_vec"))
     val ranked = queries.crossJoin(broadcast(centroids))
       .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
@@ -1511,10 +1523,22 @@ object IvfIndex {
         Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("vec_id").asc)))
       .filter(col("arank") <= rerank)
       .select(col("q_id"), col("cluster_id"), col("vec_id"))
-    // exact rerank of rerank×queries rows: broadcast the candidate ids
-    // into the raw layout (cluster_id keeps the scan partition-pruned)
-    val raw = spark.read.parquet(s"$path/vectors")
-    val scored = raw.join(broadcast(cand), Seq("cluster_id", "vec_id"))
+    // cluster_id keeps the rerank's raw scan partition-pruned
+    rerankExact(spark, path, cand, Seq("cluster_id", "vec_id"), queries, k)
+  }
+
+  /** Exact top-k rerank of an ADC shortlist, shared by every
+    * compressed-tier serve of both index families: `cand` is
+    * (q_id, keys...) — `keys` address each candidate's raw row in
+    * `path/vectors` (at least `vec_id`; a partition column in it keeps
+    * the scan partition-pruned). The |q|·rerank candidate rows ride a
+    * broadcast into the vectors scan — never a corpus shuffle — and
+    * rescore exact. */
+  private[index] def rerankExact(spark: SparkSession, path: String,
+      cand: DataFrame, keys: Seq[String], queries: DataFrame,
+      k: Int): DataFrame = {
+    val scored = spark.read.parquet(s"$path/vectors")
+      .join(broadcast(cand), keys)
       .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))

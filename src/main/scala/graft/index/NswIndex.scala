@@ -670,10 +670,45 @@ object NswIndex {
     graft.sources.Bucketed.write(
       emb.select(col("vec_id"), col("embedding")),
       s"${name}_vectors", s"$path/vectors", "vec_id", nBuckets)
-    val und = edges.select(col("src").as("node"), col("dst"))
-      .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
-    graft.sources.Bucketed.write(und,
+    graft.sources.Bucketed.write(undirected(edges),
       s"${name}_edges", s"$path/edges", "node", nBuckets)
+  }
+
+  /** The UNDIRECTED (node, dst) expansion of a directed (src, dst)
+    * edge table — every walk traverses it: the reference inserts
+    * bidirectional links (nsw_index.py:36-52), so a node is reachable
+    * through its own out-edges reversed even when no other node ranks
+    * it in ITS top-k — with directed-only expansion a newly inserted
+    * vector can be unreachable from the entry point. */
+  private[index] def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"), col("dst"))
+      .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
+
+  /** The multi-seed entry (the flattened two-layer idea) over a
+    * node-keyed frame: a deterministic coarse SAMPLE of nodes
+    * (node ≡ 0 mod `mod`) is scored per query and the best seeds start
+    * the beam — descending from a near neighborhood instead of walking
+    * across the graph from one fixed node. The min-id entry is unioned
+    * in so corpora smaller than the modulus keep an entry; at cluster
+    * scale the sample IS the persisted coarse layer and the modulus is
+    * sized to keep it broadcastable (n/mod rows ride one broadcast per
+    * search call). */
+  private def entrySeeds(nodes: DataFrame, mod: Int): DataFrame =
+    nodes.select(col("node"))
+      .filter(pmod(col("node"), lit(mod.toLong)) === 0L)
+      .unionByName(nodes.agg(min(col("node")).as("node")))
+      .distinct()
+
+  /** The raw walks' widths with the 0 sentinels (round 15): an
+    * explicit beam or hop cap wins, a 0 resolves from the corpus size
+    * `n` — evaluated only then, so explicit widths skip the count. */
+  private def walkWidths(spark: SparkSession, beamW: Int, maxHops: Int,
+      filtered: Boolean, n: => Long): (Int, Int) = {
+    val nCorpus = if (beamW > 0 && maxHops > 0) -1L else n
+    (if (beamW > 0) beamW
+      else if (filtered) filteredBeamFor(spark, nCorpus)
+      else beamFor(spark, nCorpus),
+      if (maxHops > 0) maxHops else hopsFor(spark, nCorpus))
   }
 
   /** Beam search served from the bucketed layout written by
@@ -699,7 +734,13 @@ object NswIndex {
     * (node, dst) expansion served from a materialized layout
     * ([[persistBucketed]]): the union and the per-invocation caches
     * are skipped — supersteps scan the bucketed files in place, and
-    * the frontier ⋈ edges join needs no Exchange on the edge side. */
+    * the frontier ⋈ edges join needs no Exchange on the edge side.
+    *
+    * Filtered mode (`acceptPred`): [[bspWalk]]'s pre-filter semantics;
+    * node metadata (`metaCols`) and the query frame's own columns ride
+    * the scored rows so the predicate evaluates per (query, node).
+    * Callers compensate the thinner accepted pool with a wider beam
+    * ([[filteredBeamFor]]), the nProbe=13 discipline. */
   def beamSearch(emb: DataFrame, edges: DataFrame, queries: DataFrame,
       k: Int = 5, singleQuery: Boolean = false,
       preExpandedEdges: Boolean = false, maxHops: Int = 0,
@@ -716,63 +757,82 @@ object NswIndex {
     // caching them here would just trade bucket-aligned scans for an
     // InMemoryRelation that loses the co-location, so the bucketed
     // path scans the files in place.)
-    // Filtered mode (`acceptPred`): the predicate constrains which
-    // visited nodes may be SERVED, never which nodes may be WALKED —
-    // filtering the traversal itself would disconnect the graph
-    // exactly when the filter is tight (the filtered-ANN correctness
-    // trap ivf's searchFiltered documents from the probe side). The
-    // walk navigates the full graph; node metadata (`metaCols`) and
-    // the query frame's own columns ride the scored rows so the
-    // predicate evaluates per (query, node); the top-k cut runs over
-    // the ACCEPTED visited set — pre-filter semantics, all k rows
-    // satisfy the predicate. Callers compensate the thinner accepted
-    // pool with a wider beam (filteredBeamWidth), the nProbe=13
-    // discipline.
     val embSel0 = emb.select(
       (Seq(col("vec_id").as("node"), col("embedding")) ++ metaCols.map(col)): _*)
     val embSel = if (preExpandedEdges) embSel0 else embSel0.cache()
-    // 0 sentinels (round 15) resolve the beam/hop knobs from the
-    // corpus size: one count on the frame the walk scans anyway —
-    // footer-only for bucketed layouts, a cache warm-up (work the
-    // first superstep needed regardless) for in-memory walks,
-    // block-cheap for checkpointed reconstructions. Explicit widths
-    // skip the count entirely.
-    val nCorpus = if (beamW > 0 && maxHops > 0) -1L else embSel.count()
-    val sparkR = emb.sparkSession
-    val bw = if (beamW > 0) beamW
-      else if (acceptPred.isDefined) filteredBeamFor(sparkR, nCorpus)
-      else beamFor(sparkR, nCorpus)
-    val hopCap = if (maxHops > 0) maxHops else hopsFor(sparkR, nCorpus)
-    // query-side columns beyond (q_id, q_vec) — e.g. q_label — that
-    // the accept predicate may reference; carried through every hop
-    val qExtra = queries.columns.toSeq.filterNot(Seq("q_id", "q_vec").contains)
-    // Traverse the UNDIRECTED graph: the reference inserts
-    // bidirectional links (nsw_index.py:36-52), so a node is reachable
-    // through its own out-edges reversed even when no other node ranks
-    // it in ITS top-k — with directed-only expansion a newly inserted
-    // vector can be unreachable from the entry point.
+    // the count is on the frame the walk scans anyway — footer-only for
+    // bucketed layouts, a cache warm-up (work the first superstep
+    // needed regardless) for in-memory walks
+    val (bw, hopCap) = walkWidths(emb.sparkSession, beamW, maxHops,
+      acceptPred.isDefined, embSel.count())
     val edgeSel =
       if (preExpandedEdges) edges.select(col("node"), col("dst"))
-      else edges.select(col("src").as("node"), col("dst"))
-        .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
-        .cache()
-    val scoreAgainst = (nodes: DataFrame) =>
-      nodes.join(embSel, Seq("node"))
-        .select((Seq(col("q_id"), col("node"),
-          Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"),
-          col("q_vec")) ++ metaCols.map(col) ++ qExtra.map(col)): _*)
-    // Multi-seed entry (the flattened two-layer idea): a deterministic
-    // coarse SAMPLE of nodes (vec_id ≡ 0 mod seedSampleMod) is scored
-    // per query and the best seeds start the beam — descending from a
-    // near neighborhood instead of walking across the graph from one
-    // fixed node. The min-id entry is unioned in so corpora smaller
-    // than the modulus keep an entry; at cluster scale the sample IS
-    // the persisted coarse layer and the modulus is sized to keep it
-    // broadcastable (n/mod rows ride one broadcast per search call).
-    val seeds = embSel.select(col("node"))
-      .filter(pmod(col("node"), lit(seedSampleMod.toLong)) === 0L)
-      .unionByName(emb.agg(min(col("vec_id")).as("node")))
-      .distinct()
+      else undirected(edges).cache()
+    val top = bspWalk(embSel, edgeSel, queries, metaCols, cosineScorer,
+      bw, hopCap, seedSampleMod, acceptPred, k)
+    // the final ranking reads only the checkpointed visited parts —
+    // the loop-scratch caches must not pile up across beam invocations
+    if (!preExpandedEdges) { embSel.unpersist(); edgeSel.unpersist() }
+    top.select(col("q_id"), col("node").as("neighbor_id"), col("score_e6"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** What a [[bspWalk]] ranks by: the score column `name` it writes,
+    * the expression over a joined (query, node) row, and the beam
+    * order `best` (node asc breaks ties in every walk). */
+  private case class WalkScorer(name: String, expr: org.apache.spark.sql.Column,
+      best: org.apache.spark.sql.Column)
+
+  /** Raw cosine over the full-width vectors: higher is better. */
+  private val cosineScorer = WalkScorer("score_e6",
+    Stab.e6(cosineSim(col("embedding"), col("q_vec"))), col("score_e6").desc)
+
+  /** PQ ADC against the per-query broadcast LUT: ADC is a distance,
+    * so the beam keeps the SMALLEST. */
+  private def adcScorer(
+      lutBc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]]) =
+    WalkScorer("adc", graft.functions.pq.pqAdc(col("code"), col("q_idx"), lutBc),
+      col("adc").asc)
+
+  /** The BSP beam walk (the SEARCH of this object's header) — the
+    * graph family's one batch search loop, whatever it scores: per
+    * superstep, expand the frontier through `edgeSel` (the
+    * [[undirected]] expansion), score the nodes not yet visited, keep
+    * a beam of `beamW` per query.
+    *
+    * `nodes` is (node, <scorer payload>, carryCols...); `queries` is
+    * (q_id, <scorer query column>, extras...). Every query column and
+    * the carry columns ride every scored row, so an accept predicate
+    * may reference both. The entry is [[entrySeeds]]; a superstep
+    * that scores NOTHING new stops the walk (every later one would be
+    * a no-op too), so `maxHops` is a cap, not a constant cost.
+    *
+    * `acceptPred` constrains which visited nodes may be SERVED, never
+    * which may be WALKED — filtering the traversal itself would
+    * disconnect the graph exactly when the filter is tight (the
+    * filtered-ANN trap ivf's searchFiltered documents from the probe
+    * side). The cut applies to the visited set before the limit:
+    * pre-filter semantics, every returned row satisfies it.
+    *
+    * Returns the accepted visited rows ranked by the scorer's order
+    * (node asc ties) with `rank` ≤ `limit`: (q_id, node, query
+    * columns, carryCols, score, rank). The hops run eagerly; the
+    * result reads only their checkpoints. */
+  private def bspWalk(nodes: DataFrame, edgeSel: DataFrame, queries: DataFrame,
+      carryCols: Seq[String], scorer: WalkScorer, beamW: Int, maxHops: Int,
+      seedMod: Int, acceptPred: Option[org.apache.spark.sql.Column],
+      limit: Int): DataFrame = {
+    val qCols = queries.columns.toSeq.filterNot(_ == "q_id").map(col)
+    val byScore = Window.partitionBy(col("q_id"))
+      .orderBy(scorer.best, col("node").asc)
+    val score = (pairs: DataFrame) =>
+      pairs.join(nodes, Seq("node"))
+        .select(Seq(col("q_id"), col("node")) ++ qCols ++ carryCols.map(col) :+
+          scorer.expr.as(scorer.name): _*)
+    def beam(scored: DataFrame): DataFrame =
+      scored.withColumn("brank", row_number().over(byScore))
+        .filter(col("brank") <= beamW)
+        .drop("brank")
     // localCheckpoint: each superstep's result is tiny (queries × beam)
     // — materializing it stops the plan DAG doubling per hop. Visited
     // is kept as the lazy UNION of the per-hop checkpointed parts
@@ -781,50 +841,32 @@ object NswIndex {
     // rewrote the whole ever-growing visited set — at the raised hop
     // cap that was ~half the loop's wall clock for zero information.
     var visitedParts = List(
-      scoreAgainst(queries.crossJoin(broadcast(seeds))).localCheckpoint(true))
+      score(queries.crossJoin(broadcast(entrySeeds(nodes, seedMod)))).localCheckpoint(true))
     def visited: DataFrame = visitedParts.reduceLeft(_ unionByName _)
-    var frontier = visitedParts.head
-      .withColumn("brank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score_e6").desc, col("node").asc)))
-      .filter(col("brank") <= bw)
-      .drop("brank")
+    var frontier = beam(visitedParts.head)
     var hop = 1
     var exhausted = false
-    while (hop <= hopCap && !exhausted) {
+    while (hop <= maxHops && !exhausted) {
       val expanded = frontier
         .join(edgeSel, Seq("node"))
-        .select((Seq(col("q_id"), col("dst").as("node"), col("q_vec")) ++
-          qExtra.map(col)): _*)
+        .select(col("q_id") +: col("dst").as("node") +: qCols: _*)
         .distinct()
         .join(visited.select(col("q_id"), col("node")), Seq("q_id", "node"), "left_anti")
       // the exhaustion probe rides the checkpoint action (one job, as
-      // everywhere Observation is used) — a superstep that scores
-      // NOTHING new means every later superstep is a no-op too, so the
-      // fixed hop count becomes an upper bound, not a constant cost
+      // everywhere Observation is used)
       val obs = org.apache.spark.sql.Observation()
-      val scored = scoreAgainst(expanded)
+      val scored = score(expanded)
         .observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
       if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
       else {
         visitedParts ::= scored
-        frontier = scored.withColumn("brank", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("score_e6").desc, col("node").asc)))
-          .filter(col("brank") <= bw)
-          .drop("brank")
+        frontier = beam(scored)
       }
       hop += 1
     }
-    // filtered mode: the accepted-set cut — predicate BEFORE the
-    // top-k, so all k served rows satisfy it (pre-filter semantics)
-    val visitedAll = acceptPred.map(visited.filter).getOrElse(visited)
-    // the final ranking reads only the checkpointed visited parts —
-    // the loop-scratch caches must not pile up across beam invocations
-    if (!preExpandedEdges) { embSel.unpersist(); edgeSel.unpersist() }
-    visitedAll.withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("score_e6").desc, col("node").asc)).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("node").as("neighbor_id"), col("score_e6"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    acceptPred.map(visited.filter).getOrElse(visited)
+      .withColumn("rank", row_number().over(byScore).cast("long"))
+      .filter(col("rank") <= limit)
   }
 
   /** Driver-resident greedy beam for ONE query — the interactive
@@ -853,25 +895,16 @@ object NswIndex {
     val qLit = typedlit(q(0).getSeq[Float](1).toArray)
     val embSel = emb.select(
       (Seq(col("vec_id").as("node"), col("embedding")) ++ metaCols.map(col)): _*)
-    // the batch walk's 0-sentinel knob resolution
-    val nCorpus = if (beamW0 > 0 && maxHops0 > 0) -1L else embSel.count()
-    val beamW = if (beamW0 > 0) beamW0
-      else if (acceptPred.isDefined) filteredBeamFor(spark, nCorpus)
-      else beamFor(spark, nCorpus)
-    val maxHops = if (maxHops0 > 0) maxHops0 else hopsFor(spark, nCorpus)
+    val (beamW, maxHops) = walkWidths(spark, beamW0, maxHops0,
+      acceptPred.isDefined, embSel.count())
     // Filtered mode: the predicate may reference node metadata only (a
     // single query's own columns fold into it as literals caller-side)
     val okCol = acceptPred.getOrElse(lit(true)).as("ok")
     val edgeSel =
       if (preExpandedEdges) edges.select(col("node"), col("dst"))
-      else edges.select(col("src").as("node"), col("dst"))
-        .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
-    // Multi-seed entry, driver-bounded: the coarse sample (+ min-id
-    // fallback) scores DISTRIBUTED; only the top beam is collected
-    val seedsDf = embSel.select(col("node"))
-      .filter(pmod(col("node"), lit(seedSampleMod.toLong)) === 0L)
-      .unionByName(emb.agg(min(col("vec_id")).as("node")))
-      .distinct()
+      else undirected(edges)
+    // the entry sample scores DISTRIBUTED; only the top beam is collected
+    val seedsDf = entrySeeds(embSel, seedSampleMod)
     def scored(nodes: DataFrame, cut: DataFrame => DataFrame = identity) =
       cut(embSel.join(broadcast(nodes), Seq("node")).select(col("node"),
           Stab.e6(cosineSim(col("embedding"), qLit)).as("score_e6"), okCol))
@@ -1004,7 +1037,7 @@ object NswIndex {
     * geometry and determinism contracts are [[PqCodebooks]]'.
     * `rotate = true` fits the OPQ-style basis and encodes in the
     * rotated space ([[IvfIndex.persistPq]]'s discipline) — the walk's
-    * per-query LUTs rotate automatically ([[pqWalkState]] reads the
+    * per-query LUTs rotate automatically ([[IvfIndex.pqLuts]] reads the
     * persisted basis), so rotation's effect on the QUANTIZED
     * NAVIGATION is measurable head-to-head (the `nsw_pq_opq` row of
     * `index_recall_eval`, the IVF tier's `pq_opq` precedent). */
@@ -1041,133 +1074,13 @@ object NswIndex {
     * with [[graft.functions.PqAdc]] against the per-query broadcast
     * LUT (m byte-indexed adds a row, ~32× less scan width at m=8 over
     * 64-d floats), and only the final accepted shortlist fetches raw
-    * vectors for the exact rerank. Same walk contract as
-    * [[beamSearch]]: undirected expansion, multi-seed entry,
-    * zero-new-scores early exit, deterministic (adc asc, node asc)
-    * ties — ADC is a distance, so the beam keeps the SMALLEST. */
-  /** Per-query ADC state for a graph layout's `sub` sidecar: the
-    * broadcast LUT array (queries collected once — the bounded
-    * interactive side, the pqQueryState discipline) and the
-    * (q_id, q_idx) map frame. Shared by the persisted and versioned
-    * ADC walks. */
-  private[index] def pqWalkState(spark: SparkSession, path: String,
-      queries: DataFrame, sub: String)
-      : (org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
-        DataFrame) = {
-    import spark.implicits._
-    val books = IvfIndex.readCodebooks(spark, path, sub)
-    val rotation = IvfIndex.readRotation(spark, path, sub)
-    val qRows = queries.select(col("q_id"), col("q_vec")).collect()
-      .sortBy(_.getLong(0))
-    val luts = qRows.map { r =>
-      val qv = r.getSeq[Float](1).toArray
-      val rq = rotation.map(PqCodebooks.rotateVec(qv, _)).getOrElse(qv)
-      PqCodebooks.lut(rq, books)
-    }
-    val lutBc = spark.sparkContext.broadcast(luts)
-    val qIdx = qRows.zipWithIndex
-      .map { case (r, i) => (r.getLong(0), i) }.toSeq.toDF("q_id", "q_idx")
-    (lutBc, qIdx)
-  }
-
-  /** The ADC beam walk over arbitrary (codes, edges) frames — shared
-    * by the persisted serve and the versioned as-of serve, filtered
-    * or not. `codes` is (node, code [, carryCols...]); carry columns
-    * ride every scored row and the returned shortlist (the versioned
-    * serve threads the winning `batch_id` through so its rerank can
-    * direct-address raw rows; the filtered serves thread node
-    * metadata). `qFrame` is (q_id, q_idx [, qExtraCols...]) — query-
-    * side columns an accept predicate may reference ride every hop.
-    * `acceptPred` has [[beamSearch]]'s pre-filter semantics: it
-    * constrains what may be SHORTLISTED, never what may be walked —
-    * the cut applies before the rerank quota so the whole quota goes
-    * to legal candidates. Walk contract as [[beamSearch]]: multi-seed
-    * entry, zero-new-scores early exit, deterministic (adc asc, node
-    * asc) ties — ADC is a distance, the beam keeps the smallest.
-    * Returns the per-query adc-best `rerank` accepted rows:
-    * (q_id, node [, carryCols...]). */
-  private[index] def adcWalk(codes: DataFrame, edgeSel: DataFrame,
-      lutBc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
-      qFrame: DataFrame, rerank: Int, beamW: Int, maxHops: Int,
-      seedSampleMod: Int, carryCols: Seq[String] = Nil,
-      qExtraCols: Seq[String] = Nil,
-      acceptPred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val scoreAgainst = (nodes: DataFrame) =>
-      nodes.join(codes, Seq("node"))
-        .select(Seq(col("q_id"), col("node"), col("q_idx")) ++
-          qExtraCols.map(col) ++ carryCols.map(col) :+
-          graft.functions.pq.pqAdc(col("code"), col("q_idx"), lutBc).as("adc"): _*)
-    val seeds = codes.select(col("node"))
-      .filter(pmod(col("node"), lit(seedSampleMod.toLong)) === 0L)
-      .unionByName(codes.agg(min(col("node")).as("node")))
-      .distinct()
-    def beamCut(df: DataFrame): DataFrame =
-      df.withColumn("brank", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("node").asc)))
-        .filter(col("brank") <= beamW)
-        .drop("brank")
-    var visitedParts = List(
-      scoreAgainst(qFrame.crossJoin(broadcast(seeds))).localCheckpoint(true))
-    def visited: DataFrame = visitedParts.reduceLeft(_ unionByName _)
-    var frontier = beamCut(visitedParts.head)
-    var hop = 1
-    var exhausted = false
-    while (hop <= maxHops && !exhausted) {
-      val expanded = frontier
-        .join(edgeSel, Seq("node"))
-        .select(Seq(col("q_id"), col("dst").as("node"), col("q_idx")) ++
-          qExtraCols.map(col): _*)
-        .distinct()
-        .join(visited.select(col("q_id"), col("node")),
-          Seq("q_id", "node"), "left_anti")
-      val obs = org.apache.spark.sql.Observation()
-      val scored = scoreAgainst(expanded)
-        .observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
-      else {
-        visitedParts ::= scored
-        frontier = beamCut(scored)
-      }
-      hop += 1
-    }
-    val accepted = acceptPred.map(visited.filter).getOrElse(visited)
-    accepted.withColumn("arank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("node").asc)))
-      .filter(col("arank") <= rerank)
-      .select(col("q_id") +: col("node") +: carryCols.map(col): _*)
-  }
-
+    * vectors for the exact rerank. Same walk as [[beamSearch]]
+    * ([[bspWalk]] with the ADC scorer); beam and hop cap resolve
+    * through [[pqBeamFor]] / [[hopsFor]]. */
   def searchPersistedPq(spark: SparkSession, path: String,
       queries: DataFrame, k: Int = 5, rerank: Int = pqRerank,
-      beamW: Int = 0, maxHops: Int = 0,
-      seedSampleMod: Int = entrySeedMod, sub: String = "pq"): DataFrame = {
-    val (lutBc, qIdx) = pqWalkState(spark, path, queries, sub)
-    val codes = spark.read.parquet(s"$path/$sub/codes")
-      .select(col("vec_id").as("node"), col("code")).cache()
-    // 0 sentinels: the codes table mirrors the corpus 1:1, so its
-    // footer count is the layout's n (the resolveNProbeAt discipline)
-    val nCorpus = if (beamW > 0 && maxHops > 0) -1L else codes.count()
-    val bw = if (beamW > 0) beamW else pqBeamFor(spark, nCorpus)
-    val hopCap = if (maxHops > 0) maxHops else hopsFor(spark, nCorpus)
-    val edgeSel = spark.read.parquet(s"$path/edges")
-      .select(col("src").as("node"), col("dst"))
-      .unionByName(spark.read.parquet(s"$path/edges")
-        .select(col("dst").as("node"), col("src").as("dst")))
-      .cache()
-    val cand = adcWalk(codes, edgeSel, lutBc, qIdx, rerank, bw,
-      hopCap, seedSampleMod)
-    codes.unpersist(); edgeSel.unpersist()
-    // exact rerank: the adc-best `rerank` visited candidates per query
-    // fetch their raw vectors (a broadcast of |q|·rerank keys into the
-    // vectors scan — never a corpus shuffle) and rescore exact
-    val raw = spark.read.parquet(s"$path/vectors")
-    val scored = raw
-      .join(broadcast(cand.withColumnRenamed("node", "vec_id")), Seq("vec_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    graft.operators.KnnSearch.topK(scored, k, asc = false)
-  }
+      sub: String = "pq"): DataFrame =
+    searchPersistedPqImpl(spark, path, queries, None, k, rerank, sub)
 
   /** PRE-filter ADC beam walk over a persisted graph layout with a
     * meta-bearing PQ sidecar — the graph twin of
@@ -1182,38 +1095,56 @@ object NswIndex {
     * the codes). */
   def searchPersistedPqFiltered(spark: SparkSession, path: String,
       queries: DataFrame, pred: org.apache.spark.sql.Column, k: Int = 10,
-      rerank: Int = pqRerank, beamW: Int = 0,
-      maxHops: Int = 0, seedSampleMod: Int = entrySeedMod,
-      sub: String = "pq"): DataFrame = {
-    val (lutBc, qIdx) = pqWalkState(spark, path, queries, sub)
+      rerank: Int = pqRerank, sub: String = "pq"): DataFrame =
+    searchPersistedPqImpl(spark, path, queries, Some(pred), k, rerank, sub)
+
+  private def searchPersistedPqImpl(spark: SparkSession, path: String,
+      queries: DataFrame, pred: Option[org.apache.spark.sql.Column], k: Int,
+      rerank: Int, sub: String): DataFrame = {
     val codesRaw = spark.read.parquet(s"$path/$sub/codes")
-    val metaCols = codesRaw.columns.toSeq
-      .filterNot(Set("vec_id", "code"))
+    // a filtered walk's predicate reads the code rows' mirrored metadata
+    val metaCols =
+      if (pred.isEmpty) Nil
+      else codesRaw.columns.toSeq.filterNot(Set("vec_id", "code"))
     val codes = codesRaw
       .select(col("vec_id").as("node") +: col("code") +: metaCols.map(col): _*)
       .cache()
-    val nCorpus = if (beamW > 0 && maxHops > 0) -1L else codes.count()
-    val bw = if (beamW > 0) beamW else pqBeamFor(spark, nCorpus)
-    val hopCap = if (maxHops > 0) maxHops else hopsFor(spark, nCorpus)
-    val edgeSel = spark.read.parquet(s"$path/edges")
-      .select(col("src").as("node"), col("dst"))
-      .unionByName(spark.read.parquet(s"$path/edges")
-        .select(col("dst").as("node"), col("src").as("dst")))
-      .cache()
-    val qExtra = queries.columns.toSeq.filterNot(Set("q_id", "q_vec"))
-    val qFrame = qIdx.join(broadcast(queries.drop("q_vec")), Seq("q_id"))
-    val cand = adcWalk(codes, edgeSel, lutBc, qFrame, rerank, bw,
-      hopCap, seedSampleMod, carryCols = metaCols, qExtraCols = qExtra,
-      acceptPred = Some(pred))
-      .select(col("q_id"), col("node"))
+    // the codes table mirrors the corpus 1:1, so its footer count is
+    // the layout's n (the resolveNProbeAt discipline)
+    val n = codes.count()
+    val edgeSel = undirected(spark.read.parquet(s"$path/edges")).cache()
+    val out = adcSearch(spark, path, sub, queries, codes, edgeSel, pred,
+      pqBeamFor(spark, n), hopsFor(spark, n), rerank, k, Seq("vec_id"))
     codes.unpersist(); edgeSel.unpersist()
-    val raw = spark.read.parquet(s"$path/vectors")
-    val scored = raw
-      .join(broadcast(cand.withColumnRenamed("node", "vec_id")), Seq("vec_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    graft.operators.KnnSearch.topK(scored, k, asc = false)
+    out
+  }
+
+  /** The compressed serve's tail, shared by the persisted and the
+    * versioned ([[NswSnapshotLayout]]) layouts: the per-query LUT
+    * state ([[IvfIndex.pqLuts]]), the query frame, the ADC
+    * [[bspWalk]] over `codes` (node, code, carry...) and `edgeSel`, and
+    * the exact rerank ([[IvfIndex.rerankExact]]) of the adc-best
+    * `rerank` accepted rows per query, fetched by `rerankKeys` — the
+    * candidate's node as `vec_id`, plus any carry column that
+    * addresses its raw row. A filtered walk's non-vector query columns
+    * ride every hop for the predicate. The walk runs eagerly and the
+    * result reads only its hop checkpoints, so the caller may free
+    * `codes` and `edgeSel` on return. */
+  private[index] def adcSearch(spark: SparkSession, path: String, sub: String,
+      queries: DataFrame, codes: DataFrame, edgeSel: DataFrame,
+      pred: Option[org.apache.spark.sql.Column], beamW: Int, maxHops: Int,
+      rerank: Int, k: Int, rerankKeys: Seq[String]): DataFrame = {
+    val (lutBc, qIdx) = IvfIndex.pqLuts(spark, path, queries, sub)
+    val qExtra = queries.columns.toSeq.filterNot(Set("q_id", "q_vec"))
+    val qFrame =
+      if (pred.isEmpty || qExtra.isEmpty) qIdx
+      else qIdx.join(broadcast(queries.drop("q_vec")), Seq("q_id"))
+    val cand = bspWalk(codes, edgeSel, qFrame,
+      codes.columns.toSeq.filterNot(Set("node", "code")), adcScorer(lutBc),
+      beamW, maxHops, entrySeedMod, pred, rerank)
+      .withColumnRenamed("node", "vec_id")
+      .select(("q_id" +: rerankKeys).map(col): _*)
+    IvfIndex.rerankExact(spark, path, cand, rerankKeys, queries, k)
   }
 
   /** Session memo of the persisted graph layout + PQ sidecar for a

@@ -157,28 +157,17 @@ object NswSnapshotLayout extends VersionedLayout {
       .select(col("vec_id").as("node") +: col("code") +: col("batch_id") +:
         metaCols.map(col): _*)
       .localCheckpoint(true)
-    val edges = edgesAmong(spark, path, batchId, winners)
-    val edgeSel = edges.select(col("src").as("node"), col("dst"))
-      .unionByName(edges.select(col("dst").as("node"), col("src").as("dst")))
+    val edgeSel = NswIndex.undirected(edgesAmong(spark, path, batchId, winners))
       .localCheckpoint(true)
-    val (lutBc, qIdx) = NswIndex.pqWalkState(spark, path, queries, sub)
-    val qExtra = queries.columns.toSeq.filterNot(Set("q_id", "q_vec"))
-    val qFrame =
-      if (qExtra.isEmpty) qIdx
-      else qIdx.join(broadcast(queries.drop("q_vec")), Seq("q_id"))
-    // the walk runs eagerly (its hops checkpoint as they go); the
-    // returned shortlist reads only those hop checkpoints, so the
-    // reconstruction checkpoints free on return — carrying `batch_id`
-    // through so the rerank can direct-address the winning raw rows
-    val cand = NswIndex.adcWalk(codes, edgeSel, lutBc, qFrame, rerank, beamW,
-      NswIndex.hops, NswIndex.entrySeedMod,
-      carryCols = "batch_id" +: metaCols, qExtraCols = qExtra,
-      acceptPred = pred)
-      .select(col("q_id"), col("node"), col("batch_id"))
+    // the walk carries `batch_id` through so the rerank can
+    // direct-address the winning raw rows; the result reads only the
+    // walk's hop checkpoints, so the reconstruction checkpoints free
+    val out = NswIndex.adcSearch(spark, path, sub, queries, codes, edgeSel,
+      pred, beamW, NswIndex.hops, rerank, k, Seq("vec_id", "batch_id"))
     graft.core.Checkpoints.free(winners)
     graft.core.Checkpoints.free(codes)
     graft.core.Checkpoints.free(edgeSel)
-    rerankExact(spark, path, cand.withColumnRenamed("node", "vec_id"), queries, k)
+    out
   }
 
   /** PRE-filter ADC beam walk at an as-of point — the graph twin of

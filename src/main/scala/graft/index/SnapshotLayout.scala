@@ -205,7 +205,8 @@ object SnapshotLayout extends VersionedLayout {
         Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("vec_id").asc)))
       .filter(col("arank") <= rerank)
       .select(col("q_id"), col("cluster_id"), col("vec_id"), col("batch_id"))
-    rerankExact(spark, path, cand, queries, k)
+    IvfIndex.rerankExact(spark, path, cand,
+      Seq("cluster_id", "vec_id", "batch_id"), queries, k)
   }
 
   /** Compressed batch kNN join served AS OF `batchId`: the

@@ -435,20 +435,6 @@ abstract class VersionedLayout {
       .filter(col("batch_id") <= batchId)
       .join(asOfWinners(spark, path, batchId), Seq("vec_id", "batch_id"))
 
-  /** Exact top-k rerank of an ADC shortlist: `cand` carries each
-    * q_id's candidates by the winning raw rows' partition address
-    * (placement, vec_id, batch_id), so the fetch is a partition-pruned
-    * broadcast join — no reconstruction. */
-  protected def rerankExact(spark: SparkSession, path: String, cand: DataFrame,
-      queries: DataFrame, k: Int): DataFrame =
-    graft.operators.KnnSearch.topK(spark.read.parquet(s"$path/vectors")
-      .join(broadcast(cand), placement.toSeq ++ Seq("vec_id", "batch_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_vec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        graft.core.Stab.e6(graft.functions.vectors.cosineSim(
-          col("embedding"), col("q_vec"))).as("score_e6")),
-      k, asc = false)
-
   /** The live (vec_id, fingerprint) set as of `batchId`, the columns
     * outside `exclude` hashed map-side so the window moves keys + 8
     * bytes a row. Runs no crash repair; its callers do. */
