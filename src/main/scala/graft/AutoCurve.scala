@@ -93,8 +93,7 @@ object AutoCurve {
       val qMod = math.max(1L, n / 20L)
       val qIds = emb.filter(pmod($"vec_id", lit(qMod)) === 0L)
         .select($"vec_id").collect().map(_.getLong(0)).take(20)
-      val masses = IvfIndex.cellMassesDf(built).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val masses = IvfIndex.cellMassesOf(built.assigned)
       def brute(qId: Long): Set[Long] = {
         val q = emb.filter($"vec_id" === qId)
           .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))

@@ -38,8 +38,8 @@ object MassCurve {
     val n = emb.count()
     val built = IvfIndex.buildCached(spark, dir)
     val k = built.centroids.count().toInt
-    val massesDf = IvfIndex.cellMassesDf(built).cache()
-    val masses = massesDf.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val masses = IvfIndex.cellMassesOf(built.assigned)
+    val massesDf = masses.toSeq.toDF("cluster_id", "cmass")
     val qMod = math.max(1L, n / 100L)
     val queries = emb.filter(pmod($"vec_id", lit(qMod)) === 0L)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec")).cache()
@@ -71,28 +71,11 @@ object MassCurve {
         .agg(avg($"vol")).first().getDouble(0)
       v
     }
-    def probesCount(np: Int): DataFrame =
-      queries.crossJoin(broadcast(built.centroids))
-        .withColumn("csim", graft.functions.vectors.cosineSim($"q_vec", $"centroid"))
-        .withColumn("crank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"q_id")
-            .orderBy($"csim".desc, $"cluster_id".asc)))
-        .filter($"crank" <= np).select($"q_id", $"cluster_id")
-    def probesMass(tau: Double): DataFrame = {
-      val target = math.max(1L, math.ceil(tau * n).toLong)
-      queries.crossJoin(broadcast(built.centroids))
-        .withColumn("csim", graft.functions.vectors.cosineSim($"q_vec", $"centroid"))
-        .withColumn("crank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"q_id")
-            .orderBy($"csim".desc, $"cluster_id".asc)))
-        .join(broadcast(massesDf), Seq("cluster_id"))
-        .withColumn("prior", coalesce(sum($"cmass").over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"q_id")
-            .orderBy($"crank")
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .filter($"prior" < target).select($"q_id", $"cluster_id")
-    }
+    // the serves' own probe frames (IvfIndex.probeFrame), cut per policy
+    def probesCount(np: Int): DataFrame = IvfIndex.probeFrame(queries, built.centroids,
+      IvfIndex.ProbeCount(np), Nil, single = false)
+    def probesMass(tau: Double): DataFrame = IvfIndex.probeFrame(queries, built.centroids,
+      IvfIndex.ProbeMass(tau, masses), Nil, single = false)
 
     for (np <- Seq(2, 4, 8, 12, 16, 24, IvfIndex.nProbeFor(k), k).distinct.sorted) {
       val r = recall(neighborSets(

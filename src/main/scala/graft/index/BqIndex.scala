@@ -171,13 +171,8 @@ object BqIndex {
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
     val qsig = queries.crossJoin(broadcast(thr))
       .select($"q_id", $"q_vec", packSignBits($"q_vec", $"thrs").as("q_sig"))
-    val wP = Window.partitionBy($"q_id")
-      .orderBy($"csim".desc, $"cluster_id".asc)
-    val probes = qsig.crossJoin(broadcast(built.centroids))
-      .withColumn("csim", cosineSim($"q_vec", $"centroid"))
-      .withColumn("crank", row_number().over(wP))
-      .filter($"crank" <= nProbe)
-      .select($"q_id", $"q_sig", $"cluster_id")
+    val probes = IvfIndex.probeFrame(qsig, built.centroids,
+      IvfIndex.ProbeCount(nProbe), Seq("q_sig"), single = false)
     // signatures materialize map-side in the posting scan; at rest
     // they would persist as a 2-long sidecar column of the layout
     val sigAssigned = built.assigned.crossJoin(broadcast(thr))

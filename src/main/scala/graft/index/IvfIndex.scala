@@ -6,7 +6,7 @@ import graft.operators.KnnSearch
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.Normalizer
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,15 +79,6 @@ object IvfIndex {
     * recall bar needs more coverage than the unfiltered one. */
   val filteredNProbeBase = 13
 
-  /** Resolve an nProbe parameter: 0 (the auto sentinel) scales
-    * `base`-of-defaultK coverage to the built index's actual cell
-    * count — one tiny count() on the centroids table, which is a
-    * local DataFrame for in-memory builds and a one-footer parquet
-    * read for persisted layouts. */
-  private[graft] def resolveNProbe(nProbe: Int, centroids: DataFrame,
-      base: Int = defaultNProbe): Int =
-    if (nProbe > 0) nProbe else autoNProbe(centroids.count(), base)
-
   /** The auto sentinel's probe count for a `cells`-cell index:
     * `base`-of-defaultK coverage, at least one cell. */
   private[graft] def autoNProbe(cells: Long, base: Int = defaultNProbe): Int =
@@ -107,8 +98,9 @@ object IvfIndex {
       spark.read.parquet(s"$path/centroids").count()
     }
 
-  /** [[resolveNProbe]] for persisted layouts — same arithmetic, cell
-    * count from the per-layout memo instead of a count() job. */
+  /** Resolve an nProbe parameter for a persisted layout: 0 (the auto
+    * sentinel) scales `base`-of-defaultK coverage to the layout's
+    * memoized cell count. */
   private[graft] def resolveNProbeAt(spark: SparkSession, path: String,
       nProbe: Int, base: Int = defaultNProbe): Int =
     if (nProbe > 0) nProbe else autoNProbe(cellCount(spark, path), base)
@@ -183,6 +175,64 @@ object IvfIndex {
     }
   }
 
+  /** A serve's resolved probe policy: which of a query's ranked cells
+    * it probes ([[probePlan]]). */
+  private[graft] sealed trait ProbePlan
+
+  /** The first `n` cells of the ranking. */
+  private[graft] final case class ProbeCount(n: Int) extends ProbePlan
+
+  /** The ranked cells while the posting mass ranked BEFORE them is
+    * still under [[target]]: the crossing cell is included and the
+    * nearest cell (prior mass 0) always probes, so self-top-1 stays
+    * structural under any τ. Cells without postings (absent from
+    * `masses`) are never probed. */
+  private[graft] final case class ProbeMass(tau: Double, masses: Map[Int, Long])
+      extends ProbePlan {
+    def target: Long = math.max(1L, math.ceil(tau * masses.values.sum).toLong)
+
+    /** The in-process cut: how many leading cells of a ranking, given
+      * their masses in rank order, the prefix keeps. */
+    def kept(rankedMasses: Seq[Long]): Int =
+      math.min(rankedMasses.length,
+        rankedMasses.scanLeft(0L)(_ + _).takeWhile(_ < target).length)
+  }
+
+  /** THE probe-policy resolution of every IVF serve and join:
+    * [[probeMassOf]]'s precedence picks the count or the mass policy,
+    * and a filtered serve probes at the 13/11 compensation — a
+    * selective predicate thins each probed cell, so the count policy
+    * probes [[filteredNProbeBase]]-of-defaultK cells and the mass
+    * policy τ·13/11 of the mass. `cells` and `masses` are forced only
+    * by the policy that needs them: callers pass the per-layout memos
+    * when a path backs the serve, the in-memory build's otherwise. */
+  private[index] def probePlan(spark: SparkSession, nProbe: Int,
+      explicit: Option[Double], auto: => Option[Double], filtered: Boolean,
+      cells: => Long, masses: => Map[Int, Long]): ProbePlan =
+    probeMassOf(spark, nProbe, explicit, auto) match {
+      case Some(t) => ProbeMass(
+        if (filtered) math.min(1.0, t * filteredNProbeBase.toDouble / defaultNProbe)
+        else t, masses)
+      case None => ProbeCount(if (nProbe > 0) nProbe
+        else autoNProbe(cells, if (filtered) filteredNProbeBase else defaultNProbe))
+    }
+
+  /** [[probePlan]] for an in-memory build: its tuning identity's τ, its
+    * centroid count, and its posting masses unless memoized ones are
+    * given. */
+  private def builtPlan(built: Built, nProbe: Int, explicit: Option[Double],
+      filtered: Boolean, cellMasses: Option[Map[Int, Long]]): ProbePlan =
+    probePlan(built.assigned.sparkSession, nProbe, explicit, autoTauOf(built),
+      filtered, built.centroids.count(),
+      cellMasses.getOrElse(cellMassesOf(built.assigned)))
+
+  /** [[probePlan]] for a persisted layout: the tuned τ, the cell count
+    * and the cell masses all from the per-layout memos. */
+  private def layoutPlan(spark: SparkSession, path: String, nProbe: Int,
+      explicit: Option[Double], filtered: Boolean): ProbePlan =
+    probePlan(spark, nProbe, explicit, Some(autoTauAt(spark, path)), filtered,
+      cellCount(spark, path), cellMassesAt(spark, path))
+
   /** The auto policy's τ for a Built that carries a tuning identity
     * ([[Built.autoKey]]); None for ad-hoc builds — those fall back to
     * the constant-coverage counts rather than paying an unmemoizable
@@ -212,21 +262,20 @@ object IvfIndex {
           .select(col("vec_id"), col("embedding"), col("cluster_id")),
         spark.read.parquet(s"$path/centroids")))
 
-  /** Per-cell posting-row masses of an in-memory build — one k-row
-    * aggregation over the (cached) assigned table. */
-  private[graft] def cellMassesDf(built: Built): DataFrame =
-    built.assigned.groupBy(col("cluster_id")).agg(count(lit(1)).as("cmass"))
+  /** Per-cell posting-row masses of a posting set — one k-row
+    * aggregation, collected (k ≤ maxAutoK rows, driver-resident). */
+  private[graft] def cellMassesOf(assigned: DataFrame): Map[Int, Long] =
+    assigned.groupBy(col("cluster_id")).agg(count(lit(1)).as("cmass")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  /** Memoized per-cell masses of a PERSISTED layout (k ≤ maxAutoK
-    * rows, driver-resident; the cellCount memo's discipline — every
-    * layout mutation bumps and the next serve recounts). */
+  /** Memoized per-cell masses of a PERSISTED layout (the cellCount
+    * memo's discipline — every layout mutation bumps and the next
+    * serve recounts). */
   private val cellMassCache = new graft.store.VersionedMemo[Map[Int, Long]]()
 
   private[graft] def cellMassesAt(spark: SparkSession, path: String): Map[Int, Long] =
     cellMassCache.get(spark, s"cellmass:$path", path) {
-      spark.read.parquet(s"$path/vectors").groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cmass")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      cellMassesOf(spark.read.parquet(s"$path/vectors"))
     }
 
   /** `autoKey = Some((memoKey, versionDir))` is the build's TUNING
@@ -345,34 +394,70 @@ object IvfIndex {
     Built(assigned, centroids)
   }
 
-  /** The coverage-adaptive probe frame over a per-query centroid
-    * ranking: keep a ranked cell while the mass BEFORE it is still
-    * under the target, so the crossing cell is included and the
-    * nearest cell (prior mass 0) always probes — self-top-1 stays
-    * structural under any tau. */
-  private def massProbes(built: Built, ranked: DataFrame,
-      tau: Double, cellMasses: Option[Map[Int, Long]]): DataFrame = {
-    val spark = built.assigned.sparkSession
+  /** Each query's centroid ranking, `crank` 1-based on (cosine desc,
+    * cluster_id asc). Probe ranking uses the SAME metric as the
+    * within-cluster scoring: ranking centroids by L2 while scoring by
+    * cosine loses recall on unnormalized data — the L2-nearest centroid
+    * need not contain the cosine-nearest vectors. */
+  private[index] def rankedCells(queries: DataFrame, centroids: DataFrame): DataFrame =
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster_id").asc)))
+
+  /** A cell-mass map as a (cluster_id, cmass) frame. */
+  private def massesFrame(spark: SparkSession, masses: Map[Int, Long]): DataFrame = {
     import spark.implicits._
-    // a precomputed mass map (the memoized per-layout / per-as-of
-    // masses) skips the per-serve aggregation over the posting set
-    val masses = cellMasses match {
-      case Some(m) => m.toSeq.toDF("cluster_id", "cmass")
-      case None => cellMassesDf(built)
+    masses.toSeq.toDF("cluster_id", "cmass")
+  }
+
+  /** The probe frame: (q_id, cluster_id, keep…) for the cells `plan`
+    * probes per query. Two cut shapes:
+    *  - a single query under the count policy is an orderBy+limit (a
+    *    TakeOrdered over k centroids) — a window partitioned by a
+    *    constant q_id constant-folds to an EMPTY partition spec;
+    *  - every other cut is the [[rankedCells]] window: `crank` ≤ n, or
+    *    the running-mass prefix of [[ProbeMass]] over the ≤ k ranked
+    *    cells of each query (k centroid rows per query in one task, not
+    *    the candidate-row window the single cuts exist to avoid). */
+  private[graft] def probeFrame(queries: DataFrame, centroids: DataFrame,
+      plan: ProbePlan, keep: Seq[String], single: Boolean): DataFrame = {
+    val cut = plan match {
+      case ProbeCount(n) if single =>
+        queries.crossJoin(broadcast(centroids))
+          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
+          .orderBy(col("csim").desc, col("cluster_id").asc)
+          .limit(n)
+      case ProbeCount(n) => rankedCells(queries, centroids).filter(col("crank") <= n)
+      case m: ProbeMass =>
+        rankedCells(queries, centroids)
+          .join(broadcast(massesFrame(queries.sparkSession, m.masses)), Seq("cluster_id"))
+          .withColumn("prior_mass", coalesce(sum(col("cmass")).over(
+            Window.partitionBy(col("q_id")).orderBy(col("crank"))
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          .filter(col("prior_mass") < m.target)
     }
-    val total = cellMasses.map(_.values.sum).getOrElse(
-      masses.agg(sum(col("cmass"))).first().getLong(0))
-    val target = math.max(1L, math.ceil(tau * total).toLong)
-    // keep EVERY query-side column of `ranked` (q_vec, label/meta
-    // columns a filtered serve's predicate references — ADVICE r15
-    // high), dropping only the probe-internal ranking/mass columns;
-    // callers project down exactly like their count branches do
-    ranked.join(broadcast(masses), Seq("cluster_id"))
-      .withColumn("prior_mass", coalesce(sum(col("cmass")).over(
-        Window.partitionBy(col("q_id")).orderBy(col("crank"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("prior_mass") < target)
-      .drop("csim", "crank", "centroid", "cmass", "prior_mass")
+    cut.select(col("q_id") +: col("cluster_id") +: keep.map(col): _*)
+  }
+
+  /** The raw probe serve behind every search shape: the [[probeFrame]]
+    * broadcast into the posting rows on `cluster_id` (partition-pruned
+    * on a persisted layout), `pred` in-scan, exact cosine, top-k.
+    * `single` cuts the top-k with [[KnnSearch.topKSingle]] for the same
+    * constant-q_id reason as the probe frame. A filtered serve carries
+    * every query column into the scan, since its predicate may
+    * reference them. */
+  private[index] def probeSearch(built: Built, queries: DataFrame,
+      pred: Option[Column], plan: ProbePlan, k: Int, single: Boolean): DataFrame = {
+    val keep =
+      if (pred.isDefined) queries.columns.toSeq.filterNot(_ == "q_id") else Seq("q_vec")
+    val joined = built.assigned.join(
+      broadcast(probeFrame(queries, built.centroids, plan, keep, single)), Seq("cluster_id"))
+    val scored = pred.fold(joined)(joined.filter)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
+    if (single) KnnSearch.topKSingle(scored, k, asc = false)
+    else KnnSearch.topK(scored, k, asc = false)
   }
 
   /** Probe search: rank centroids per query, keep nProbe, semi-join
@@ -380,32 +465,9 @@ object IvfIndex {
     * cosine within the probed clusters, top-k. */
   def search(built: Built, queries: DataFrame, nProbe: Int = 0,
       k: Int = 10, probeMass: Option[Double] = None,
-      cellMasses: Option[Map[Int, Long]] = None): DataFrame = {
-    val spark = built.assigned.sparkSession
-    // Probe ranking uses the SAME metric as the within-cluster scoring
-    // (cosine). Ranking centroids by L2 while scoring by cosine loses
-    // recall on unnormalized data: the L2-nearest centroid need not
-    // contain the cosine-nearest vectors.
-    val ranked = queries.crossJoin(broadcast(built.centroids))
-      .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster_id").asc)))
-    val probes = probeMassOf(spark, nProbe, probeMass, autoTauOf(built)) match {
-      case Some(tau) =>
-        massProbes(built, ranked, tau, cellMasses)
-          .select(col("q_id"), col("q_vec"), col("cluster_id"))
-      case None =>
-        // nProbe = 0 (the default) scales coverage to the index's
-        // actual cell count — [[resolveNProbe]]; defaultNProbe at k=16
-        val np = resolveNProbe(nProbe, built.centroids)
-        ranked.filter(col("crank") <= np)
-          .select(col("q_id"), col("q_vec"), col("cluster_id"))
-    }
-    val scored = built.assigned.join(broadcast(probes), Seq("cluster_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    KnnSearch.topK(scored, k, asc = false)
-  }
+      cellMasses: Option[Map[Int, Long]] = None): DataFrame =
+    probeSearch(built, queries, None,
+      builtPlan(built, nProbe, probeMass, filtered = false, cellMasses), k, single = false)
 
   /** PRE-filter probe search: the metadata predicate applies inside
     * the probed-cluster scan, BEFORE the top-k cut — so all k results
@@ -419,138 +481,41 @@ object IvfIndex {
     * recall bar under filters should raise nProbe — the candidate
     * pool is |matches|·(nProbe/k-clusters), not |cluster|·nProbe. */
   def searchFiltered(built: Built, queries: DataFrame,
-      pred: org.apache.spark.sql.Column, nProbe: Int = 0,
+      pred: Column, nProbe: Int = 0,
       k: Int = 10, probeMass: Option[Double] = None,
-      cellMasses: Option[Map[Int, Long]] = None): DataFrame = {
-    val ranked = queries.crossJoin(broadcast(built.centroids))
-      .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster_id").asc)))
-    val probes = probeMassOf(built.assigned.sparkSession, nProbe, probeMass,
-        autoTauOf(built)) match {
-      case Some(tau) =>
-        // the filtered compensation at RATIO: the count policy probes
-        // 13/11 of the unfiltered coverage, so the mass policy does too
-        // massProbes already dropped only the probe internals, so the
-        // query meta columns the predicate references — and q_vec,
-        // which the scoring stage needs — survive (ADVICE r15 high)
-        massProbes(built, ranked,
-          math.min(1.0, tau * filteredNProbeBase.toDouble / defaultNProbe),
-          cellMasses)
-      case None =>
-        ranked.filter(col("crank") <=
-            resolveNProbe(nProbe, built.centroids, filteredNProbeBase))
-          .drop("csim", "crank", "centroid")
-    }
-    val scored = built.assigned.join(broadcast(probes), Seq("cluster_id"))
-      .filter(pred)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    KnnSearch.topK(scored, k, asc = false)
-  }
+      cellMasses: Option[Map[Int, Long]] = None): DataFrame =
+    probeSearch(built, queries, Some(pred),
+      builtPlan(built, nProbe, probeMass, filtered = true, cellMasses), k, single = false)
 
   /** Single-query probe search: same probe + score plan as [[search]]
-    * but both top-k cuts are orderBy+limit — a window partitioned by a
-    * constant q_id constant-folds to an EMPTY partition spec and pulls
-    * every scored vector in the probed clusters into one task. Here
-    * the centroid ranking is a TakeOrdered over k centroids and the
-    * final cut is [[KnnSearch.topKSingle]].
-    *
-    * Round 16: the coverage-adaptive policy applies to single serves
-    * too (the r15 "count-by-choice" stance was argued from the uniform
-    * corpus; the clustered measurement — bench_runs/r17_autocurve_clustered.txt —
-    * says the candidate VOLUME follows the policy exactly as in batch).
-    * The mass prefix here is a window over the ≤k RANKED CELLS of one
-    * query — k centroid rows in one task, not the candidate-row window
-    * the single cuts exist to avoid. */
+    * with the single cuts of [[probeFrame]] and [[probeSearch]]. The
+    * coverage-adaptive policy applies to single serves too: the
+    * clustered measurement (bench_runs/r17_autocurve_clustered.txt)
+    * says the candidate VOLUME follows the policy exactly as in batch. */
   def searchSingle(built: Built, query: DataFrame,
       nProbe: Int = 0, k: Int = 10,
-      cellMasses: Option[Map[Int, Long]] = None): DataFrame = {
-    val spark = built.assigned.sparkSession
-    val probes = probeMassOf(spark, nProbe, None, autoTauOf(built)) match {
-      case Some(tau) =>
-        val ranked = query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .withColumn("crank", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("csim").desc, col("cluster_id").asc)))
-        massProbes(built, ranked, tau, cellMasses)
-          .select(col("q_id"), col("q_vec"), col("cluster_id"))
-      case None =>
-        val np = resolveNProbe(nProbe, built.centroids)
-        query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .orderBy(col("csim").desc, col("cluster_id").asc)
-          .limit(np)
-          .select(col("q_id"), col("q_vec"), col("cluster_id"))
-    }
-    val scored = built.assigned.join(broadcast(probes), Seq("cluster_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    KnnSearch.topKSingle(scored, k, asc = false)
-  }
+      cellMasses: Option[Map[Int, Long]] = None): DataFrame =
+    probeSearch(built, query, None,
+      builtPlan(built, nProbe, None, filtered = false, cellMasses), k, single = true)
 
   /** The cluster ids a [[searchSingle]] serve probes under the
     * session's resolved policy — volume-accounting observability for
     * the dev instruments (graft.AutoCurve); not a serve path. */
   private[graft] def searchSingleProbedCells(built: Built,
-      query: DataFrame, nProbe: Int = 0): Seq[Int] = {
-    val spark = built.assigned.sparkSession
-    val probes = probeMassOf(spark, nProbe, None, autoTauOf(built)) match {
-      case Some(tau) =>
-        val ranked = query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .withColumn("crank", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("csim").desc, col("cluster_id").asc)))
-        massProbes(built, ranked, tau, None)
-      case None =>
-        query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .orderBy(col("csim").desc, col("cluster_id").asc)
-          .limit(resolveNProbe(nProbe, built.centroids))
-    }
-    probes.select(col("cluster_id")).collect().map(_.getInt(0)).toSeq
-  }
+      query: DataFrame, nProbe: Int = 0): Seq[Int] =
+    probeFrame(query, built.centroids,
+        builtPlan(built, nProbe, None, filtered = false, None), Nil, single = true)
+      .select(col("cluster_id")).collect().map(_.getInt(0)).toSeq
 
   /** Single-query PRE-filter probe search: [[searchFiltered]]'s
     * semantics with [[searchSingle]]'s cuts — the /query-shaped
-    * filtered serve must not fold its top-k window to one task. The
-    * mass policy applies at [[searchFiltered]]'s 13/11 compensation
-    * ratio (round 16). */
+    * filtered serve must not fold its top-k window to one task. */
   def searchFilteredSingle(built: Built, query: DataFrame,
-      pred: org.apache.spark.sql.Column, nProbe: Int = 0,
+      pred: Column, nProbe: Int = 0,
       k: Int = 10,
-      cellMasses: Option[Map[Int, Long]] = None): DataFrame = {
-    val spark = built.assigned.sparkSession
-    val qMetaCols = query.columns.toSeq.filterNot(Set("q_id", "q_vec"))
-    val keep = Seq(col("q_id"), col("q_vec"), col("cluster_id")) ++
-      qMetaCols.map(col)
-    val probes = probeMassOf(spark, nProbe, None, autoTauOf(built)) match {
-      case Some(tau) =>
-        val ranked = query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .withColumn("crank", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("csim").desc, col("cluster_id").asc)))
-        massProbes(built, ranked,
-          math.min(1.0, tau * filteredNProbeBase.toDouble / defaultNProbe),
-          cellMasses)
-          .select(keep: _*)
-      case None =>
-        val np = resolveNProbe(nProbe, built.centroids, filteredNProbeBase)
-        query.crossJoin(broadcast(built.centroids))
-          .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-          .orderBy(col("csim").desc, col("cluster_id").asc)
-          .limit(np)
-          .select(keep: _*)
-    }
-    val scored = built.assigned.join(broadcast(probes), Seq("cluster_id"))
-      .filter(pred)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
-    KnnSearch.topKSingle(scored, k, asc = false)
-  }
+      cellMasses: Option[Map[Int, Long]] = None): DataFrame =
+    probeSearch(built, query, Some(pred),
+      builtPlan(built, nProbe, None, filtered = true, cellMasses), k, single = true)
 
   /** Approximate all-pairs kNN JOIN: every vector in the index gets
     * its top-k cosine neighbors (self excluded) via IVF probing — the
@@ -581,50 +546,11 @@ object IvfIndex {
       k: Int = 5, probeMass: Option[Double] = None): DataFrame = {
     val spark = built.assigned.sparkSession
     val s = coSaltBuckets(spark)
-    val tau = probeMassOf(spark, nProbe, probeMass, autoTauOf(built))
-    // under the mass policy each centroid struct carries its cell's
-    // row count, and the probe cut is a running-mass prefix instead
-    // of a fixed slice — same codegen stage, still zero shuffle
-    val centArr = tau match {
-      case Some(_) =>
-        built.centroids.join(cellMassesDf(built), Seq("cluster_id"))
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"),
-            col("cmass"))).as("cents"))
-      case None =>
-        built.centroids
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"))).as("cents"))
-    }
-    // struct sort order = (neg_sim asc, cluster_id asc) — identical
-    // ranking (cosine desc, cluster_id asc tie-break) to search()'s
-    // window, so the two paths probe the same cells for a vector
-    val probeList: org.apache.spark.sql.Column = tau match {
-      case Some(t) =>
-        val target = lit(math.max(1L, math.ceil(t * cellMassesDf(built)
-          .agg(sum(col("cmass"))).first().getLong(0)).toLong))
-        val sorted = array_sort(transform(col("cents"), c =>
-          struct((-cosineSim(col("q_vec"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id"),
-            c.getField("cmass").as("cmass"))))
-        // prefix length = cells until the running mass crosses the
-        // target (the crossing cell included): one O(k) fold per
-        // query, inside the same whole-stage-codegen'd projection
-        val taken = aggregate(sorted,
-          struct(lit(0L).as("m"), lit(0).as("t")),
-          (acc, x) => when(acc.getField("m") >= target, acc)
-            .otherwise(struct((acc.getField("m") + x.getField("cmass")).as("m"),
-              (acc.getField("t") + lit(1)).as("t"))),
-          acc => acc.getField("t"))
-        slice(sorted, lit(1), greatest(lit(1), taken))
-      case None =>
-        val np = resolveNProbe(nProbe, built.centroids)
-        slice(array_sort(transform(col("cents"), c =>
-          struct((-cosineSim(col("q_vec"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id")))), 1, np)
-    }
+    val plan = builtPlan(built, nProbe, probeMass, filtered = false, None)
     val probes = built.assigned
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      .crossJoin(broadcast(centArr))
-      .select(col("q_id"), col("q_vec"), explode(probeList).as("p"))
+      .crossJoin(broadcast(centArr(built.centroids, plan)))
+      .select(col("q_id"), col("q_vec"), explode(probeList(col("q_vec"), plan)).as("p"))
       .select(col("q_id"), col("q_vec"), col("p.cluster_id").as("cluster_id"),
         explode(coSaltValues(s)).as("cosalt"))
     // shuffle_hash: the probes side is corpus-sized (n·nProbe·S keyed
@@ -646,6 +572,44 @@ object IvfIndex {
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         Stab.e6(cosineSim(col("embedding"), col("q_vec"))).as("score_e6"))
     KnnSearch.topK(scored, k, asc = false)
+  }
+
+  /** The centroid table as ONE broadcastable row, `cents`: an array of
+    * (cluster_id, centroid) structs, each also carrying its cell's
+    * posting mass under a [[ProbeMass]] plan. */
+  private[index] def centArr(centroids: DataFrame, plan: ProbePlan): DataFrame =
+    plan match {
+      case ProbeMass(_, masses) =>
+        centroids.join(massesFrame(centroids.sparkSession, masses), Seq("cluster_id"))
+          .agg(collect_list(struct(col("cluster_id"), col("centroid"),
+            col("cmass"))).as("cents"))
+      case ProbeCount(_) =>
+        centroids.agg(collect_list(struct(col("cluster_id"), col("centroid"))).as("cents"))
+    }
+
+  /** A row's probe list over [[centArr]]'s `cents`, ranked against
+    * `vec`: the structs sort on (neg_sim asc, cluster_id asc) — the
+    * [[rankedCells]] order, so a join and a serve probe the same cells
+    * for a vector — cut to the plan's count, or to the cells until the
+    * running mass crosses the target (the crossing cell included). One
+    * O(k) fold per row inside the scan's codegen'd projection: no
+    * window, no shuffle. */
+  private[index] def probeList(vec: Column, plan: ProbePlan): Column = {
+    def sorted(fields: String*) = array_sort(transform(col("cents"), c =>
+      struct((-cosineSim(vec, c.getField("centroid"))).as("neg_sim") +:
+        fields.map(f => c.getField(f).as(f)): _*)))
+    plan match {
+      case m: ProbeMass =>
+        val cells = sorted("cluster_id", "cmass")
+        val taken = aggregate(cells,
+          struct(lit(0L).as("m"), lit(0).as("t")),
+          (acc, x) => when(acc.getField("m") >= lit(m.target), acc)
+            .otherwise(struct((acc.getField("m") + x.getField("cmass")).as("m"),
+              (acc.getField("t") + lit(1)).as("t"))),
+          acc => acc.getField("t"))
+        slice(cells, lit(1), greatest(lit(1), taken))
+      case ProbeCount(n) => slice(sorted("cluster_id"), 1, n)
+    }
   }
 
   /** Explicit salt-width override; unset means [[coSaltBuckets]]
@@ -1123,27 +1087,24 @@ object IvfIndex {
     * dynamic partition pruning restricts the scan to the probed
     * `cluster_id=` directories instead of the whole index. */
   def searchPersisted(spark: SparkSession, path: String, queries: DataFrame,
-      nProbe: Int = 0, k: Int = 10): DataFrame = {
-    // the tuning identity matches [[autoTauAt]]'s memo key so every
-    // serve shape over this layout shares the one tuned τ
-    val built = Built(
-      assigned = spark.read.parquet(s"$path/vectors"),
-      centroids = spark.read.parquet(s"$path/centroids"),
-      autoKey = Some((s"path:$path", path)), tauSidecar = Some(path))
-    search(built, queries, nProbe, k)
-  }
+      nProbe: Int = 0, k: Int = 10): DataFrame =
+    persistedSearch(spark, path, queries, nProbe, k, single = false)
 
   /** Single-query probe search against a persisted layout — the
     * [[searchSingle]] plan (orderBy+limit cuts, no constant-q_id
     * window) over the same partition-pruned files. */
   def searchPersistedSingle(spark: SparkSession, path: String, query: DataFrame,
       nProbe: Int = 0, k: Int = 10): DataFrame =
-    searchSingle(Built(
-      assigned = spark.read.parquet(s"$path/vectors"),
-      centroids = spark.read.parquet(s"$path/centroids"),
-      autoKey = Some((s"path:$path", path)), tauSidecar = Some(path)),
-      query, nProbe, k,
-      cellMasses = Some(cellMassesAt(spark, path)))
+    persistedSearch(spark, path, query, nProbe, k, single = true)
+
+  /** The persisted raw serve, batch or single: the layout's files as
+    * the Built, probed under [[layoutPlan]] — the memoized τ, cell
+    * count and cell masses, so no call re-aggregates the posting set. */
+  private def persistedSearch(spark: SparkSession, path: String, queries: DataFrame,
+      nProbe: Int, k: Int, single: Boolean): DataFrame =
+    probeSearch(
+      Built(spark.read.parquet(s"$path/vectors"), spark.read.parquet(s"$path/centroids")),
+      queries, None, layoutPlan(spark, path, nProbe, None, filtered = false), k, single)
 
   /** `ivf_build` query: cluster histogram (k rows). Rows-only check —
     * DuckDB has no KMeans; the ScalaTest spec asserts recall against
@@ -1456,58 +1417,28 @@ object IvfIndex {
     (lutBc, qIdx)
   }
 
-  /** The IVF compressed serve's query state: [[pqLuts]] plus the probe
-    * frame — nProbe centroid-ranked (q_id, cluster_id) rows + the LUT
-    * index + any non-vector query columns, so a filtered predicate
+  /** The IVF compressed serve's query state: [[pqLuts]] plus the
+    * batch [[probeFrame]] under `plan` — (q_id, cluster_id) rows + the
+    * LUT index + any non-vector query columns, so a filtered predicate
     * can compare them against code-row metadata. Shared by the
-    * persisted and versioned IVF-PQ serves. `probeMass =
-    * Some((tau, masses))` switches the probe cut to the
-    * coverage-adaptive running-mass prefix over the given per-cell
-    * masses (head: [[cellMassesAt]]; versioned: the as-of masses). */
+    * persisted and versioned IVF-PQ serves. */
   private[index] def pqQueryState(spark: SparkSession, path: String,
-      queries: DataFrame, nProbe: Int, sub: String,
-      probeMass: Option[(Double, Map[Int, Long])] = None)
+      queries: DataFrame, plan: ProbePlan, sub: String)
       : (org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]],
         DataFrame) = {
-    import spark.implicits._
     val centroids = spark.read.parquet(s"$path/centroids")
     val (lutBc, qIdx) = pqLuts(spark, path, queries, sub)
-    val qMetaCols = queries.columns.toSeq.filterNot(Set("q_id", "q_vec"))
-    val ranked = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster_id").asc)))
-    val cut = probeMass match {
-      case Some((tau, m)) =>
-        val massesDf = m.toSeq.toDF("cluster_id", "cmass")
-        val target = math.max(1L, math.ceil(tau * m.values.sum).toLong)
-        ranked.join(broadcast(massesDf), Seq("cluster_id"))
-          .withColumn("prior_mass", coalesce(sum(col("cmass")).over(
-            Window.partitionBy(col("q_id")).orderBy(col("crank"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .filter(col("prior_mass") < target)
-      case None => ranked.filter(col("crank") <= nProbe)
-    }
-    val probes = cut
-      .select(col("q_id") +: col("cluster_id") +: qMetaCols.map(col): _*)
+    val probes = probeFrame(queries, centroids, plan,
+        queries.columns.toSeq.filterNot(Set("q_id", "q_vec")), single = false)
       .join(broadcast(qIdx), Seq("q_id"))
     (lutBc, probes)
   }
 
   private def searchPersistedPqImpl(spark: SparkSession, path: String,
-      queries: DataFrame, pred: Option[org.apache.spark.sql.Column],
+      queries: DataFrame, pred: Option[Column],
       nProbe: Int, k: Int, rerank: Int, sub: String): DataFrame = {
-    // the coverage-adaptive conf applies to the ADC serve exactly as
-    // to the raw probe (filtered serves at the 13/11 ratio); the
-    // count path keeps the memoized cell-count resolution
-    val tau = probeMassOf(spark, nProbe, None,
-        Some(autoTauAt(spark, path))).map(t =>
-      (if (pred.isDefined)
-        math.min(1.0, t * filteredNProbeBase.toDouble / defaultNProbe)
-      else t, cellMassesAt(spark, path)))
-    val np = if (tau.isDefined) 0 else resolveNProbeAt(spark, path, nProbe,
-      if (pred.isDefined) filteredNProbeBase else defaultNProbe)
-    val (lutBc, probes) = pqQueryState(spark, path, queries, np, sub, tau)
+    val (lutBc, probes) = pqQueryState(spark, path, queries,
+      layoutPlan(spark, path, nProbe, None, filtered = pred.isDefined), sub)
     val codes = spark.read.parquet(s"$path/$sub/codes")
     // ADC pass over the probed partitions: m byte-indexed adds per
     // row; a filtered serve's predicate prunes the scan FIRST, so the
@@ -1592,10 +1523,7 @@ object IvfIndex {
   def knnJoinPq(spark: SparkSession, path: String,
       nProbe: Int = 0, k: Int = 5, rerank: Int = 200,
       sub: String = "pq", probeMass: Option[Double] = None): DataFrame = {
-    val tau = probeMassOf(spark, nProbe, probeMass,
-      Some(autoTauAt(spark, path)))
-    val np = if (tau.isDefined) 0 else resolveNProbeAt(spark, path, nProbe)
-    val cand = knnJoinPqCand(spark, path, np, rerank, sub, tau)
+    val cand = knnJoinPqCand(spark, path, nProbe, rerank, sub, probeMass)
     val vecs = spark.read.parquet(s"$path/vectors")
     // exact rerank of the n×rerank shortlist: attach both raw vectors
     // by narrow-key joins (the only stages where full-width rows move)
@@ -1627,10 +1555,12 @@ object IvfIndex {
     * including) the per-query `rerank` cut, before any raw vector is
     * touched. Factored out so Round13PlanSpec can pin its scale shape
     * in isolation: NO float-array column on ANY exchange in this
-    * stage (the co-location shuffle carries m-byte codes only). */
+    * stage (the co-location shuffle carries m-byte codes only).
+    * `nProbe` and `probeMass` resolve through [[layoutPlan]]. */
   private[graft] def knnJoinPqCand(spark: SparkSession, path: String,
       nProbe: Int, rerank: Int, sub: String,
       probeMass: Option[Double] = None): DataFrame = {
+    val plan = layoutPlan(spark, path, nProbe, probeMass, filtered = false)
     val saltS = coSaltBuckets(spark)
     val books = readCodebooks(spark, path, sub)
     val rotation = readRotation(spark, path, sub)
@@ -1650,51 +1580,16 @@ object IvfIndex {
     val booksBc = spark.sparkContext.broadcast(fineBooks)
     val sdcBc = spark.sparkContext.broadcast(
       PqCodebooks.crossTable(fineBooks, books))
-    // mass policy (probeMass set): centroid structs carry their cell
-    // masses (the memoized per-layout map) and the probe cut is the
-    // knnJoinIvf running-mass prefix — a tau that equalizes per-query
-    // candidate volume on clustered corpora
-    val massMap = probeMass.map(_ => cellMassesAt(spark, path))
-    val centBase = spark.read.parquet(s"$path/centroids")
-    val centArr = massMap match {
-      case Some(m) =>
-        val mdf = spark.createDataFrame(m.toSeq).toDF("cluster_id", "cmass")
-        centBase.join(mdf, Seq("cluster_id"))
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"),
-            col("cmass"))).as("cents"))
-      case None =>
-        centBase
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"))).as("cents"))
-    }
-    val probeList: org.apache.spark.sql.Column = (probeMass, massMap) match {
-      case (Some(t), Some(m)) =>
-        val target = lit(math.max(1L, math.ceil(t * m.values.sum).toLong))
-        val sorted = array_sort(transform(col("cents"), c =>
-          struct((-cosineSim(col("embedding"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id"),
-            c.getField("cmass").as("cmass"))))
-        val taken = aggregate(sorted,
-          struct(lit(0L).as("m"), lit(0).as("t")),
-          (acc, x) => when(acc.getField("m") >= target, acc)
-            .otherwise(struct((acc.getField("m") + x.getField("cmass")).as("m"),
-              (acc.getField("t") + lit(1)).as("t"))),
-          acc => acc.getField("t"))
-        slice(sorted, lit(1), greatest(lit(1), taken))
-      case _ =>
-        slice(array_sort(transform(col("cents"), c =>
-          struct((-cosineSim(col("embedding"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id")))), 1, nProbe)
-    }
     val vecs = spark.read.parquet(s"$path/vectors")
     val encodeInput = rotation.map(r =>
       PqCodebooks.rotateCol(col("embedding"), r)).getOrElse(col("embedding"))
     // map-side probe fan-out + encode; `embedding` does not survive
     // this projection — the exchange below carries m-byte codes only
     val probes = vecs
-      .crossJoin(broadcast(centArr))
+      .crossJoin(broadcast(centArr(spark.read.parquet(s"$path/centroids"), plan)))
       .select(col("vec_id").as("q_id"),
         graft.functions.pq.pqEncode(encodeInput, booksBc).as("q_code"),
-        explode(probeList).as("p"))
+        explode(probeList(col("embedding"), plan)).as("p"))
       .select(col("q_id"), col("q_code"), col("p.cluster_id").as("cluster_id"),
         explode(coSaltValues(saltS)).as("cosalt"))
     val codes = spark.read.parquet(s"$path/$sub/codes")

@@ -518,9 +518,7 @@ object RecallEval {
     try {
     // the per-cell masses once (identical to what each serve would
     // re-aggregate); their sum replaces the old count() job
-    val masses = base.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cmass")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val masses = IvfIndex.cellMassesOf(base)
     val total = masses.values.sum
     // a ~100-query deterministic sample (mod-spaced, not the lowest
     // ids): a tuner's sample must SPAN the corpus — the 5 low-id
@@ -529,14 +527,9 @@ object RecallEval {
     val qMod = math.max(1L, total / 100L)
     val queries = base.filter(pmod(col("vec_id"), lit(qMod)) === 0L)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      // the serve's own centroid ranking (search: csim desc, cluster
-      // asc), kept per (query, cell) so the driver can replay any
-      // mass prefix
-      val ranked = queries.crossJoin(broadcast(built.centroids))
-        .withColumn("csim", cosineSim(col("q_vec"), col("centroid")))
-        .withColumn("crank", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-            .orderBy(col("csim").desc, col("cluster_id").asc)))
+      // the serves' own centroid ranking, kept per (query, cell) so
+      // the driver can replay any mass prefix
+      val ranked = IvfIndex.rankedCells(queries, built.centroids)
         .select(col("q_id"), col("q_vec"), col("cluster_id"), col("crank"))
       val perCell = base
         .join(broadcast(ranked), Seq("cluster_id"))
@@ -552,10 +545,9 @@ object RecallEval {
           col("neighbor_id"), col("score_e6"))
         .collect()
       // driver-side prefix replay: per query, cells in crank order
-      // carry their masses; a tau's serve pool is the prefix with
-      // prior mass < max(1, ceil(tau·total)) — massProbes' exact rule
-      // (empty cells never join the serve's mass window either: the
-      // masses frame has no row for them)
+      // carry their masses; a tau's serve pool is the ProbeMass prefix
+      // the serves cut (empty cells never join the serve's mass window
+      // either: the masses frame has no row for them)
       val byQ = perCell.groupBy(_.getAs[Long]("q_id"))
       case class Cell(crank: Int, cmass: Long,
           cands: Array[(Long, Long)]) // (score_e6, neighbor_id)
@@ -576,12 +568,9 @@ object RecallEval {
       val exact = cellsByQ.map { case (q, cells) => q -> topSet(cells) }
       val den = exact.values.map(_.size).sum
       taus.map { tau =>
-        val target = math.max(1L, math.ceil(tau * total).toLong)
+        val plan = IvfIndex.ProbeMass(tau, masses)
         val num = cellsByQ.map { case (q, cells) =>
-          val priors = cells.scanLeft(0L)(_ + _.cmass) // exclusive prefix mass
-          val prefix = cells.zip(priors).collect {
-            case (c, prior) if prior < target => c }
-          topSet(prefix).intersect(exact(q)).size
+          topSet(cells.take(plan.kept(cells.map(_.cmass)))).intersect(exact(q)).size
         }.sum
         val recallE6 = math.floorDiv(num.toLong * 1000000L, math.max(1L, den.toLong))
         (math.round(tau * 100).toInt, recallE6)

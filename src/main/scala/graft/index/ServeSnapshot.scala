@@ -35,9 +35,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * A query embeds its text through `TextEmbed` on the driver, scores
   * with `CosineSimilarity`'s arithmetic and `Stab.e6`, breaks ties on
   * (score desc, id asc), and resolves the zero-conf knobs per call
-  * exactly like the Spark path: IVF τ from [[IvfIndex.autoTauAt]] under
-  * [[IvfIndex.probeMassOf]]'s precedence (its count policy at
-  * [[IvfIndex.autoNProbe]] cells), NSW beam and hops from the
+  * exactly like the Spark path: the IVF probe policy through the
+  * shared [[IvfIndex.probePlan]] resolution (τ from
+  * [[IvfIndex.autoTauAt]]), NSW beam and hops from the
   * snapshot's n through [[NswIndex.walkSingle]]. The answer is a local
   * DataFrame: `collect()` runs no job.
   *
@@ -59,7 +59,6 @@ final class ServeSnapshot private (
   import ServeSnapshot._
 
   private val masses: Map[Int, Long] = postings.map { case (c, v) => c -> v.ids.length.toLong }
-  private val totalMass = masses.values.sum
 
   /** The /query answer: `(doc_id, chunk_idx, content, source,
     * confidence_e6, rank)` rows in rank order. */
@@ -82,24 +81,20 @@ final class ServeSnapshot private (
   }
 
   /** The cells an IVF serve probes: centroids ranked on (cosine desc,
-    * cluster_id asc); under a τ the cells with postings are kept while
-    * the mass ranked before them is under ⌈τ · total⌉ (the crossing
-    * cell included), under the count policy the first
-    * [[IvfIndex.autoNProbe]] of all cells. */
+    * cluster_id asc), cut in-process under the policy the Spark serves
+    * resolve — [[IvfIndex.probePlan]] over the snapshot's cell count
+    * and posting masses: the [[IvfIndex.ProbeMass]] prefix of the cells
+    * with postings, or the first [[IvfIndex.ProbeCount]] cells. */
   private def probedCells(spark: SparkSession, q: Array[Float]): Array[Int] = {
     val ranked = centroids.map { case (c, v) => (c, cosine(q, v)) }
       .sortWith { case ((c1, s1), (c2, s2)) => s1 > s2 || (s1 == s2 && c1 < c2) }
       .map(_._1)
-    IvfIndex.probeMassOf(spark, 0, None, Some(IvfIndex.autoTauAt(spark, ivfPath))) match {
-      case Some(tau) =>
-        val target = math.max(1L, math.ceil(tau * totalMass).toLong)
-        var prior = 0L
-        ranked.filter(masses.contains).takeWhile { c =>
-          val keep = prior < target
-          prior += masses(c)
-          keep
-        }
-      case None => ranked.take(IvfIndex.autoNProbe(centroids.length))
+    IvfIndex.probePlan(spark, 0, None, Some(IvfIndex.autoTauAt(spark, ivfPath)),
+        filtered = false, centroids.length, masses) match {
+      case plan: IvfIndex.ProbeMass =>
+        val cells = ranked.filter(masses.contains)
+        cells.take(plan.kept(cells.toSeq.map(masses)))
+      case IvfIndex.ProbeCount(n) => ranked.take(n)
     }
   }
 

@@ -65,9 +65,7 @@ object SnapshotLayout extends VersionedLayout {
   private[graft] def asOfCellMasses(spark: SparkSession, path: String,
       batchId: Long): Map[Int, Long] =
     asOfMassCache.get(spark, s"cellmass-asof:$path@$batchId", path) {
-      asOfAssigned(spark, path, batchId).groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cmass")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      IvfIndex.cellMassesOf(asOfAssigned(spark, path, batchId))
     }
 
   /** The AUTO policy's τ for a versioned layout (round 16): the tuner
@@ -89,33 +87,29 @@ object SnapshotLayout extends VersionedLayout {
           .select(col("vec_id"), col("embedding"), col("cluster_id")),
         spark.read.parquet(s"$path/centroids")))
 
-  /** The session's mass threshold for an as-of serve: the conf (an
-    * explicit nProbe wins; unset resolves to [[autoTauHead]]'s tuned
-    * τ), paired with the memoized as-of masses. */
-  private def asOfMassOf(spark: SparkSession, path: String, batchId: Long,
-      nProbe: Int, ratio: Double = 1.0): Option[(Double, Map[Int, Long])] =
-    IvfIndex.probeMassOf(spark, nProbe, None,
-        Some(autoTauHead(spark, path))).map(t =>
-      (math.min(1.0, t * ratio), asOfCellMasses(spark, path, batchId)))
+  /** [[IvfIndex.probePlan]] for an as-of serve: the head-tuned τ
+    * ([[autoTauHead]]), the layout's memoized cell count and the AS-OF
+    * live masses (dead rows must not count toward the coverage target). */
+  private def asOfPlan(spark: SparkSession, path: String, batchId: Long,
+      nProbe: Int, explicit: Option[Double], filtered: Boolean): IvfIndex.ProbePlan =
+    IvfIndex.probePlan(spark, nProbe, explicit, Some(autoTauHead(spark, path)), filtered,
+      IvfIndex.cellCount(spark, path), asOfCellMasses(spark, path, batchId))
 
-  /** The as-of posting set under the base fit's centroids, carrying the
-    * layout's tuning identity (the memo key of [[autoTauHead]]), so the
-    * inner serve's auto resolution lands on the one head-tuned τ
-    * instead of falling back to counts. */
-  private def asOfBuilt(spark: SparkSession, path: String,
-      batchId: Long): IvfIndex.Built =
-    IvfIndex.Built(asOfAssigned(spark, path, batchId),
-      spark.read.parquet(s"$path/centroids"),
-      autoKey = Some((s"asof:$path", path)), tauSidecar = Some(path))
+  /** The as-of raw serve, batch or single, filtered or not: the as-of
+    * posting set under the base fit's centroids (the incremental-add
+    * serving contract), probed under [[asOfPlan]]. */
+  private def asOfSearch(spark: SparkSession, path: String, batchId: Long,
+      queries: DataFrame, pred: Option[Column], nProbe: Int, k: Int,
+      single: Boolean): DataFrame =
+    IvfIndex.probeSearch(
+      IvfIndex.Built(asOfAssigned(spark, path, batchId), spark.read.parquet(s"$path/centroids")),
+      queries, pred, asOfPlan(spark, path, batchId, nProbe, None, pred.isDefined), k, single)
 
-  /** Probe search served from the as-of posting set (centroids are
-    * the base fit — the incremental-add serving contract). The
-    * coverage-adaptive conf applies with the AS-OF live masses. */
+  /** Probe search served from the as-of posting set. */
   def searchAsOf(spark: SparkSession, path: String, batchId: Long,
       queries: DataFrame, nProbe: Int = 0,
       k: Int = 10): DataFrame =
-    IvfIndex.search(asOfBuilt(spark, path, batchId), queries, nProbe, k,
-      cellMasses = asOfMassOf(spark, path, batchId, nProbe).map(_._2))
+    asOfSearch(spark, path, batchId, queries, None, nProbe, k, single = false)
 
   /** SINGLE-query probe serve from the as-of posting set — the
     * [[IvfIndex.searchSingle]] discipline composed with time travel:
@@ -126,8 +120,7 @@ object SnapshotLayout extends VersionedLayout {
   def searchAsOfSingle(spark: SparkSession, path: String, batchId: Long,
       query: DataFrame, nProbe: Int = 0,
       k: Int = 10): DataFrame =
-    IvfIndex.searchSingle(asOfBuilt(spark, path, batchId), query, nProbe, k,
-      cellMasses = asOfMassOf(spark, path, batchId, nProbe).map(_._2))
+    asOfSearch(spark, path, batchId, query, None, nProbe, k, single = true)
 
   /** PRE-filter probe search served from the as-of posting set — the
     * filtered serving mode composed with time travel: the metadata a
@@ -137,19 +130,9 @@ object SnapshotLayout extends VersionedLayout {
     * results satisfy it) at any as-of point. Same compensated-probe
     * stance as the persisted filtered path. */
   def searchAsOfFiltered(spark: SparkSession, path: String, batchId: Long,
-      queries: DataFrame, pred: org.apache.spark.sql.Column,
-      nProbe: Int = 0, k: Int = 10): DataFrame = {
-    val built = asOfBuilt(spark, path, batchId)
-    val masses = asOfMassOf(spark, path, batchId, nProbe).map(_._2)
-    if (masses.isDefined)
-      // the sentinel flows through searchFiltered's own resolution
-      // (mass at the 13/11 ratio) over the memoized as-of masses
-      IvfIndex.searchFiltered(built, queries, pred, nProbe, k,
-        cellMasses = masses)
-    else IvfIndex.searchFiltered(built, queries, pred,
-      IvfIndex.resolveNProbeAt(spark, path, nProbe,
-        IvfIndex.filteredNProbeBase), k)
-  }
+      queries: DataFrame, pred: Column,
+      nProbe: Int = 0, k: Int = 10): DataFrame =
+    asOfSearch(spark, path, batchId, queries, Some(pred), nProbe, k, single = false)
 
   // ---- versioned compressed tier (PQ sidecar over the batch log) ------
 
@@ -176,26 +159,18 @@ object SnapshotLayout extends VersionedLayout {
     * the rerank cut, so all k results satisfy it at any as-of point.
     * Compensated probe, same stance as every filtered path. */
   def searchAsOfPqFiltered(spark: SparkSession, path: String, batchId: Long,
-      queries: DataFrame, pred: org.apache.spark.sql.Column,
+      queries: DataFrame, pred: Column,
       nProbe: Int = 0, k: Int = 10, rerank: Int = 200,
       sub: String = "pq"): DataFrame =
     searchAsOfPqImpl(spark, path, batchId, queries, Some(pred), nProbe, k,
       rerank, sub)
 
   private def searchAsOfPqImpl(spark: SparkSession, path: String, batchId: Long,
-      queries: DataFrame, pred: Option[org.apache.spark.sql.Column],
+      queries: DataFrame, pred: Option[Column],
       nProbe: Int, k: Int, rerank: Int, sub: String): DataFrame = {
     repairCompaction(spark, path)
-    val tau = asOfMassOf(spark, path, batchId, nProbe,
-      if (pred.isDefined)
-        IvfIndex.filteredNProbeBase.toDouble / IvfIndex.defaultNProbe
-      else 1.0)
-    val np = if (tau.isDefined) 0
-      else IvfIndex.resolveNProbeAt(spark, path, nProbe,
-        if (pred.isDefined) IvfIndex.filteredNProbeBase
-        else IvfIndex.defaultNProbe)
-    val (lutBc, probes) =
-      IvfIndex.pqQueryState(spark, path, queries, np, sub, tau)
+    val (lutBc, probes) = IvfIndex.pqQueryState(spark, path, queries,
+      asOfPlan(spark, path, batchId, nProbe, None, filtered = pred.isDefined), sub)
     val joined = asOfCodes(spark, path, batchId, sub)
       .join(broadcast(probes), Seq("cluster_id"))
     val adc = pred.map(joined.filter).getOrElse(joined)
@@ -235,11 +210,7 @@ object SnapshotLayout extends VersionedLayout {
   def knnJoinPqAsOf(spark: SparkSession, path: String, batchId: Long,
       nProbe: Int = 0, k: Int = 5, rerank: Int = 200,
       sub: String = "pq", probeMass: Option[Double] = None): DataFrame = {
-    val tau = IvfIndex.probeMassOf(spark, nProbe, probeMass,
-        Some(autoTauHead(spark, path)))
-      .map(t => (t, asOfCellMasses(spark, path, batchId)))
-    val np = if (tau.isDefined) 0 else IvfIndex.resolveNProbeAt(spark, path, nProbe)
-    val cand = knnJoinPqAsOfCand(spark, path, batchId, np, rerank, sub, tau)
+    val cand = knnJoinPqAsOfCand(spark, path, batchId, nProbe, rerank, sub, probeMass)
     val raw = spark.read.parquet(s"$path/vectors")
     val nv = raw.join(cand, Seq("cluster_id", "vec_id", "batch_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
@@ -260,10 +231,11 @@ object SnapshotLayout extends VersionedLayout {
   /** Candidate stage of [[knnJoinPqAsOf]] — everything through the
     * per-query rerank cut, before any raw vector is touched; factored
     * out so the plan spec can pin that no float-array column rides
-    * any of its exchanges. */
+    * any of its exchanges. `nProbe` and `probeMass` resolve through
+    * [[asOfPlan]]. */
   private[graft] def knnJoinPqAsOfCand(spark: SparkSession, path: String,
       batchId: Long, nProbe: Int, rerank: Int, sub: String,
-      probeMass: Option[(Double, Map[Int, Long])] = None): DataFrame = {
+      probeMass: Option[Double] = None): DataFrame = {
     val saltS = IvfIndex.coSaltBuckets(spark)
     repairCompaction(spark, path)
     // a batch join is an expensive corpus job: an as-of the truncated
@@ -271,6 +243,7 @@ object SnapshotLayout extends VersionedLayout {
     // guard), not silently serve the compaction-floor state under the
     // requested label
     requireAnswerable(spark, path, batchId)
+    val plan = asOfPlan(spark, path, batchId, nProbe, probeMass, filtered = false)
     val books = IvfIndex.readCodebooks(spark, path, sub)
     val rotation = IvfIndex.readRotation(spark, path, sub)
     val raw = spark.read.parquet(s"$path/vectors")
@@ -294,52 +267,16 @@ object SnapshotLayout extends VersionedLayout {
     val booksBc = spark.sparkContext.broadcast(fineBooks)
     val sdcBc = spark.sparkContext.broadcast(
       PqCodebooks.crossTable(fineBooks, books))
-    // probeMass set: the centroid structs carry the AS-OF live cell
-    // masses (dead rows must not count toward the coverage target)
-    // and the cut is the knnJoinIvf running-mass prefix
-    val centBase = spark.read.parquet(s"$path/centroids")
-    val centArr = probeMass match {
-      case Some((_, m)) =>
-        import spark.implicits._
-        val mdf = m.toSeq.toDF("cluster_id", "cmass")
-        centBase.join(mdf, Seq("cluster_id"))
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"),
-            col("cmass"))).as("cents"))
-      case None =>
-        centBase
-          .agg(collect_list(struct(col("cluster_id"), col("centroid"))).as("cents"))
-    }
     val encodeInput = rotation.map(r =>
       PqCodebooks.rotateCol(col("embedding"), r)).getOrElse(col("embedding"))
-    val probeList: org.apache.spark.sql.Column = probeMass match {
-      case Some((t, m)) =>
-        val target = lit(math.max(1L, math.ceil(t * m.values.sum).toLong))
-        val sorted = array_sort(transform(col("cents"), c =>
-          struct((-graft.functions.vectors.cosineSim(
-              col("embedding"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id"),
-            c.getField("cmass").as("cmass"))))
-        val taken = aggregate(sorted,
-          struct(lit(0L).as("m"), lit(0).as("t")),
-          (acc, x) => when(acc.getField("m") >= target, acc)
-            .otherwise(struct((acc.getField("m") + x.getField("cmass")).as("m"),
-              (acc.getField("t") + lit(1)).as("t"))),
-          acc => acc.getField("t"))
-        slice(sorted, lit(1), greatest(lit(1), taken))
-      case None =>
-        slice(array_sort(transform(col("cents"), c =>
-          struct((-graft.functions.vectors.cosineSim(
-              col("embedding"), c.getField("centroid"))).as("neg_sim"),
-            c.getField("cluster_id").as("cluster_id")))), 1, nProbe)
-    }
     // map-side probe fan-out + encode over EVERY stored row ≤ B; the
     // embedding dies in this projection, and the winners join below
     // keeps only live versions
     val probes = raw
-      .crossJoin(broadcast(centArr))
+      .crossJoin(broadcast(IvfIndex.centArr(spark.read.parquet(s"$path/centroids"), plan)))
       .select(col("vec_id").as("q_id"), col("batch_id"),
         graft.functions.pq.pqEncode(encodeInput, booksBc).as("q_code"),
-        explode(probeList).as("p"))
+        explode(IvfIndex.probeList(col("embedding"), plan)).as("p"))
       .select(col("q_id"), col("batch_id"), col("q_code"),
         col("p.cluster_id").as("cluster_id"))
       .join(winners.withColumnRenamed("vec_id", "q_id"),
@@ -699,19 +636,14 @@ object SnapshotLayout extends VersionedLayout {
 
   /** The /query-shaped filtered serve over a generational root. */
   def searchAsOfFilteredSingleGen(spark: SparkSession, root: String,
-      batchId: Long, query: DataFrame, pred: org.apache.spark.sql.Column,
+      batchId: Long, query: DataFrame, pred: Column,
       nProbe: Int = 0, k: Int = 10): DataFrame =
-    routed(spark, root, batchId) { path =>
-      IvfIndex.searchFilteredSingle(
-        IvfIndex.Built(asOfAssigned(spark, path, batchId),
-          spark.read.parquet(s"$path/centroids")),
-        query, pred,
-        IvfIndex.resolveNProbeAt(spark, path, nProbe, IvfIndex.filteredNProbeBase), k)
-    }
+    routed(spark, root, batchId)(
+      asOfSearch(spark, _, batchId, query, Some(pred), nProbe, k, single = true))
 
   /** Metadata rides the cutover's re-fit, so the filtered mode survives it. */
   def searchAsOfFilteredGen(spark: SparkSession, root: String, batchId: Long,
-      queries: DataFrame, pred: org.apache.spark.sql.Column,
+      queries: DataFrame, pred: Column,
       nProbe: Int = 0, k: Int = 10): DataFrame =
     routed(spark, root, batchId)(
       searchAsOfFiltered(spark, _, batchId, queries, pred, nProbe, k))

@@ -160,6 +160,57 @@ class GenerationSpec extends AnyFunSuite {
       new java.io.File(root).getParentFile)
   }
 
+  test("single serves return the batch serve's rows under every probe policy") {
+    // one-row query frames through each single/batch serve pair, with
+    // the pair's policy resolved inside the conf window it is built in:
+    // count (explicit nProbe), a conf tau, and the tuned auto tau
+    val dir = java.nio.file.Files.createTempDirectory("graft-gen-single").toString
+    // a tuning identity (so the auto policy tunes) under a dir the
+    // layout writes below do not invalidate
+    val built = IvfIndex.buildCachedFor(s"gen-single:$dir", spark,
+      emb.filter($"vec_id" >= 50), s"$dir/corpus", metaCols = Seq("label"))
+    val path = s"$dir/ivf"
+    val root = s"$dir/root"
+    IvfIndex.persist(built, path)
+    SnapshotLayout.initGen(built, root)
+    SnapshotLayout.applyBatchGen(spark, root, 1L,
+      upserts = emb.filter($"vec_id" < 50),
+      deletes = emb.filter($"vec_id" === 7).select($"vec_id"))
+    val pred = col("label") === col("q_label")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.select($"q_id", $"neighbor_id", $"score_e6", $"rank").collect()
+        .map(_.toSeq).toSeq.sortBy(_(3).asInstanceOf[Long])
+    def withConf[A](v: Option[String])(body: => A): A = {
+      val key = IvfIndex.probeMassConfKey
+      val saved = spark.conf.getOption(key)
+      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val q = emb.filter($"vec_id" === 12L)
+      .select($"vec_id".as("q_id"), $"embedding".as("q_vec"), $"label".as("q_label"))
+    val qv = q.drop("q_label")
+    val head = Long.MaxValue
+    for ((policy, conf, np) <- Seq(("count", None, 5), ("conf tau", Some("0.05"), 0),
+        ("auto", None, 0))) withConf(conf) {
+      val pairs = Seq(
+        "in-memory" -> (IvfIndex.search(built, qv, np), IvfIndex.searchSingle(built, qv, np)),
+        "in-memory filtered" -> (IvfIndex.searchFiltered(built, q, pred, np),
+          IvfIndex.searchFilteredSingle(built, q, pred, np)),
+        "persisted" -> (IvfIndex.searchPersisted(spark, path, qv, np),
+          IvfIndex.searchPersistedSingle(spark, path, qv, np)),
+        "as-of" -> (SnapshotLayout.searchAsOfGen(spark, root, head, qv, np),
+          SnapshotLayout.searchAsOfSingleGen(spark, root, head, qv, np)),
+        "as-of filtered" -> (SnapshotLayout.searchAsOfFilteredGen(spark, root, head, q, pred, np),
+          SnapshotLayout.searchAsOfFilteredSingleGen(spark, root, head, q, pred, np)))
+      for ((serve, (batch, single)) <- pairs) {
+        val want = rows(batch)
+        assert(want.nonEmpty, s"$policy / $serve: batch served no rows")
+        assert(rows(single) == want, s"$policy / $serve: single serve differs from batch")
+      }
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("retiring a generation: drops refuse current/missing targets; retired coverage refuses at routing") {
     val root = java.nio.file.Files.createTempDirectory("graft-gen-retire")
       .toString + "/root"

@@ -210,4 +210,55 @@ class IncrementalSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("IVF degenerate corpora: n = 1, n below the cell count, identical rows") {
+    val spark0 = spark
+    import spark0.implicits._
+    val rng = new scala.util.Random(7)
+    def randVec() = Array.fill(16)(rng.nextFloat() - 0.5f)
+    val same = randVec()
+    val cases = Seq(
+      "n = 1" -> Seq(randVec()),
+      "n below the cell count" -> Seq.fill(3)(randVec()),
+      "identical rows" -> Seq.fill(6)(same.clone()))
+    for ((name, vecs) <- cases) {
+      val n = vecs.length
+      val k = n + 5
+      val emb = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 2) }
+        .toDF("vec_id", "embedding", "label")
+      val queries = emb.select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
+      val metaQueries = emb.select($"vec_id".as("q_id"), $"embedding".as("q_vec"),
+        $"label".as("q_label"))
+      // a predicate every row passes: the filtered serves' compensated
+      // probe policy runs, and the whole corpus still qualifies
+      val pred = col("label") >= col("q_label") - 1
+      // k > n: every query is served the whole corpus, once each
+      def assertServesAll(what: String, df: DataFrame, qs: Seq[Long] = 0L until n): Unit = {
+        val got = df.select($"q_id", $"neighbor_id").as[(Long, Long)].collect().toSeq
+          .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).sorted }
+        assert(got.keySet == qs.toSet && got.values.forall(_ == (0L until n)),
+          s"$name / $what: $got")
+      }
+      val built = IvfIndex.build(spark, emb, metaCols = Seq("label"))
+      for ((policy, mass) <- Seq("count" -> None, "mass" -> Some(1.0))) {
+        assertServesAll(s"$policy batch", IvfIndex.search(built, queries, k = k, probeMass = mass))
+        assertServesAll(s"$policy filtered batch",
+          IvfIndex.searchFiltered(built, metaQueries, pred, k = k, probeMass = mass))
+      }
+      for (i <- 0L until n) {
+        assertServesAll("single", IvfIndex.searchSingle(built,
+          queries.filter($"q_id" === i), k = k), Seq(i))
+        assertServesAll("filtered single", IvfIndex.searchFilteredSingle(built,
+          metaQueries.filter($"q_id" === i), pred, k = k), Seq(i))
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_degenerate").toString
+      try {
+        IvfIndex.persist(built, dir)
+        IvfIndex.persistPq(spark, dir)
+        IvfIndex.addDeltaPersisted(spark, dir, emb.limit(0))
+        assertServesAll("persisted", IvfIndex.searchPersisted(spark, dir, queries, k = k))
+        assertServesAll("ADC", IvfIndex.searchPersistedPq(spark, dir, queries, k = k))
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
 }
