@@ -18,6 +18,12 @@ import org.apache.spark.sql.SparkSession
   *  - a `warm` block re-times the index-backed text queries after
   *    their memoized index builds, separating serve cost from build
   *    cost (the build is a batch job at scale, not a per-query tax).
+  *  - a `profile` block gives each timed key's Spark cost, from one
+  *    [[graft.core.Profiler]] span per run: jobs (action and AQE
+  *    apart), stages, tasks, executor time, shuffle, spill, result and
+  *    written bytes, and the call sites the executor time went to —
+  *    `queries` sums a key's main-loop runs, `warm` its warm re-run,
+  *    and `unattributed` counts the jobs submitted outside every span.
   */
 object Bench {
 
@@ -115,14 +121,15 @@ object Bench {
     // not inside the first measured query.
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    val profiler = graft.core.Profiler.install(spark.sparkContext)
+    def timeOnce(key: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
       // A failed query must not silently contribute ~0s and make the
       // bench LOOK faster: record the error and report it in the JSON.
-      val err = try { fn(spark, sfDir).count(); None } catch {
+      val err = try { profiler.span(key)(fn(spark, sfDir).count()); None } catch {
         case t: Throwable =>
-          System.err.println(s"BENCH FAILURE $name: $t")
+          System.err.println(s"BENCH FAILURE $key: $t")
           Some(t.getClass.getSimpleName)
       }
       ((System.nanoTime() - t0) / 1e9, err)
@@ -159,7 +166,7 @@ object Bench {
       .filter(name => only.forall(_.contains(name)))
       .flatMap { name =>
         SparkEntry.queries.get(name).map { fn =>
-          val (t, err) = timeOnce(name, fn)
+          val (t, err) = timeOnce(s"warm:$name", fn)
           (name, err.fold(t.toString)(e => "\"failed:" + e + "\""))
         }
       }
@@ -172,6 +179,14 @@ object Bench {
     val warmJson = warm.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
+    profiler.drain()
+    val rows = profiler.rows.toMap
+    def profileOf(names: Seq[String], prefix: String): String = names
+      .flatMap(k => rows.get(prefix + k).map(r => "\"" + k + "\":" + r.json))
+      .mkString("{", ",", "}")
+    val profile = s"""{"unattributed":${profiler.unattributed},""" +
+      s""""queries":${profileOf(results.map(_._1), "")},""" +
+      s""""warm":${profileOf(warm.map(_._1), "warm:")}}"""
     // gate on START load only: the bench's own 32 threads legitimately
     // raise the end load — pre-existing load is the contamination
     // signal. Steal is gated over the WHOLE run: it measures the
@@ -199,7 +214,7 @@ object Bench {
         f""""iowait_pct_run":$iowaitPct%.2f,""" +
         s""""cpus":$cpus,"repeat":$repeat,"max_load_gate":$maxLoad,""" +
         s""""build_queries_first_run":true,"build_first_order":true}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","contaminated":$contaminated,"queries":$qs,"errors":$errs,"warm":$warmJson,"preflight":$preflight,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","contaminated":$contaminated,"queries":$qs,"errors":$errs,"warm":$warmJson,"profile":$profile,"preflight":$preflight,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -27,9 +27,9 @@ object ScaleCurve {
     val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_CURVE_REPEAT", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // SPARK_GRAFT_CONF="k=v;k=v" (the Regress convention): lets a
-    // curve A/B one knob — e.g. pin spark.graft.ivf.k to separate an
-    // auto-k effect from a plan-shape effect on the same replica
+    // SPARK_GRAFT_CONF="k=v;k=v" lets a curve A/B one knob — e.g. pin
+    // spark.graft.ivf.k to separate an auto-k effect from a plan-shape
+    // effect on the same replica
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap

@@ -12,7 +12,10 @@ import org.apache.spark.sql.DataFrame
   * checkpointed RDD sits behind the frame's `LogicalRDD` plan node
   * (`private[sql]`, hence the reflective accessor); releasing is
   * best-effort — on any mismatch the blocks are simply left to the
-  * ContextCleaner as before.
+  * ContextCleaner as before. The blocks go through
+  * `SparkContext.unpersistRDD` (`private[spark]`, reached the same
+  * way), not `RDD.unpersist`, which logs a WARN for every locally
+  * checkpointed RDD that every intentional release here would hit.
   *
   * CONTRACT for memo users: checkpoint lineage is truncated, so a
   * freed frame cannot recompute — a plan derived from a memoized
@@ -28,7 +31,10 @@ object Checkpoints {
       val plan = df.queryExecution.logical
       if (plan.getClass.getSimpleName == "LogicalRDD")
         plan.getClass.getMethod("rdd").invoke(plan) match {
-          case r: org.apache.spark.rdd.RDD[_] => r.unpersist(blocking = false)
+          case r: org.apache.spark.rdd.RDD[_] =>
+            classOf[org.apache.spark.SparkContext]
+              .getMethod("unpersistRDD", classOf[Int], classOf[Boolean])
+              .invoke(r.sparkContext, Int.box(r.id), Boolean.box(false))
           case _ => ()
         }
     } catch { case _: Throwable => () }

@@ -29,7 +29,7 @@ object IvfIndex {
   // The reference probes 3 of 100 clusters (ivf_index.py:158). The
   // synthetic embeddings are near-uniform on the sphere, so cosine
   // neighborhoods barely concentrate in KMeans cells — measured
-  // (graft.Tune, n=500): recall@10 = 0.90 at nProbe=10, 0.98 at 12.
+  // (n=500): recall@10 = 0.90 at nProbe=10, 0.98 at 12.
   // 11 probes holds the promised >= 0.9 with margin while still
   // pruning 5/16 of the data; real clustered corpora prune far more.
   val defaultNProbe = 11
@@ -97,13 +97,6 @@ object IvfIndex {
     cellCountCache.get(spark, s"cells:$path", path) {
       spark.read.parquet(s"$path/centroids").count()
     }
-
-  /** Resolve an nProbe parameter for a persisted layout: 0 (the auto
-    * sentinel) scales `base`-of-defaultK coverage to the layout's
-    * memoized cell count. */
-  private[graft] def resolveNProbeAt(spark: SparkSession, path: String,
-      nProbe: Int, base: Int = defaultNProbe): Int =
-    if (nProbe > 0) nProbe else autoNProbe(cellCount(spark, path), base)
 
   /** Coverage-ADAPTIVE probing (round 15, VERDICT r14 #1): a fraction
     * in (0, 1]. When set — and the caller uses the nProbe auto
@@ -177,17 +170,17 @@ object IvfIndex {
 
   /** A serve's resolved probe policy: which of a query's ranked cells
     * it probes ([[probePlan]]). */
-  private[graft] sealed trait ProbePlan
+  private[index] sealed trait ProbePlan
 
   /** The first `n` cells of the ranking. */
-  private[graft] final case class ProbeCount(n: Int) extends ProbePlan
+  private[index] final case class ProbeCount(n: Int) extends ProbePlan
 
   /** The ranked cells while the posting mass ranked BEFORE them is
     * still under [[target]]: the crossing cell is included and the
     * nearest cell (prior mass 0) always probes, so self-top-1 stays
     * structural under any τ. Cells without postings (absent from
     * `masses`) are never probed. */
-  private[graft] final case class ProbeMass(tau: Double, masses: Map[Int, Long])
+  private[index] final case class ProbeMass(tau: Double, masses: Map[Int, Long])
       extends ProbePlan {
     def target: Long = math.max(1L, math.ceil(tau * masses.values.sum).toLong)
 
@@ -234,20 +227,14 @@ object IvfIndex {
       cellCount(spark, path), cellMassesAt(spark, path))
 
   /** The auto policy's τ for a Built that carries a tuning identity
-    * ([[Built.autoKey]]); None for ad-hoc builds — those fall back to
-    * the constant-coverage counts rather than paying an unmemoizable
-    * sweep per serve. A Built backed by a writable layout path
-    * ([[Built.tauSidecar]]) reads/writes the persisted tuning sidecar
-    * — the sweep runs once per fit, not once per session or bump
-    * (round 17, VERDICT r16 #1). */
+    * ([[Built.autoKey]]), tuned once per session under that identity;
+    * None for ad-hoc builds — those fall back to the constant-coverage
+    * counts rather than paying an unmemoizable sweep per serve. A
+    * persisted layout's τ comes from its tuning sidecar instead
+    * ([[autoTauAt]]). */
   private[graft] def autoTauOf(built: Built): Option[Double] =
     built.autoKey.map { case (key, vd) =>
-      built.tauSidecar match {
-        case Some(p) => RecallEval.autoTauPersisted(
-          built.assigned.sparkSession, key, vd, p)(built)
-        case None =>
-          RecallEval.autoTauFor(built.assigned.sparkSession, key, vd)(built)
-      }
+      RecallEval.autoTauFor(built.assigned.sparkSession, key, vd)(built)
     }
 
   /** The auto policy's τ for a PERSISTED plain layout: the persisted
@@ -264,7 +251,7 @@ object IvfIndex {
 
   /** Per-cell posting-row masses of a posting set — one k-row
     * aggregation, collected (k ≤ maxAutoK rows, driver-resident). */
-  private[graft] def cellMassesOf(assigned: DataFrame): Map[Int, Long] =
+  private[index] def cellMassesOf(assigned: DataFrame): Map[Int, Long] =
     assigned.groupBy(col("cluster_id")).agg(count(lit(1)).as("cmass")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
 
@@ -284,14 +271,9 @@ object IvfIndex {
     * `versionDir` — exactly the [[buildCached]] discipline. An ad-hoc
     * Built (tests, internal one-offs) has none and the auto policy
     * falls back to the constant-coverage counts rather than paying an
-    * unmemoizable sweep per serve. `tauSidecar = Some(layoutPath)`
-    * additionally binds the identity to a WRITABLE layout dir whose
-    * persisted tuning sidecar survives sessions and version bumps
-    * (round 17) — in-memory builds over a read-only corpus dir leave
-    * it None and tune once per session via the memo alone. */
+    * unmemoizable sweep per serve. */
   case class Built(assigned: DataFrame, centroids: DataFrame,
-      autoKey: Option[(String, String)] = None,
-      tauSidecar: Option[String] = None)
+      autoKey: Option[(String, String)] = None)
 
   /** Session-scoped index memo: the reference builds each index once
     * and serves all queries from it (main.py:35-40 add_index);
@@ -346,7 +328,7 @@ object IvfIndex {
     * within-cluster scoring use. The stored `embedding` stays raw. */
   // init=random, not k-means||: the parallel init costs ~5 extra
   // passes over the training sample and measured recall is identical
-  // (graft.Tune: 0.94@nProbe=11 both ways) — on a bounded sample the
+  // (0.94@nProbe=11 both ways) — on a bounded sample the
   // smarter seeding buys nothing here.
   /** `metaCols`: extra columns of `emb` carried INTO the posting rows
     * (attribute storage) — filtered search reads them in-scan instead
@@ -420,7 +402,7 @@ object IvfIndex {
     *    the running-mass prefix of [[ProbeMass]] over the ≤ k ranked
     *    cells of each query (k centroid rows per query in one task, not
     *    the candidate-row window the single cuts exist to avoid). */
-  private[graft] def probeFrame(queries: DataFrame, centroids: DataFrame,
+  private[index] def probeFrame(queries: DataFrame, centroids: DataFrame,
       plan: ProbePlan, keep: Seq[String], single: Boolean): DataFrame = {
     val cut = plan match {
       case ProbeCount(n) if single =>
@@ -499,8 +481,8 @@ object IvfIndex {
       builtPlan(built, nProbe, None, filtered = false, cellMasses), k, single = true)
 
   /** The cluster ids a [[searchSingle]] serve probes under the
-    * session's resolved policy — volume-accounting observability for
-    * the dev instruments (graft.AutoCurve); not a serve path. */
+    * session's resolved policy — volume-accounting observability
+    * (bench_runs/r17_autocurve_clustered.txt); not a serve path. */
   private[graft] def searchSingleProbedCells(built: Built,
       query: DataFrame, nProbe: Int = 0): Seq[Int] =
     probeFrame(query, built.centroids,

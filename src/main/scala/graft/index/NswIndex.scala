@@ -34,14 +34,14 @@ object NswIndex {
     * nsw_index.py:126-127). n/mod seed rows are scored per search
     * call — size the modulus so that stays broadcast-cheap; at
     * cluster scale the sample is the persisted coarse layer of a
-    * two-level graph. Measured at sf0.1 (Tune NSWHOPS): lifts
+    * two-level graph. Measured at sf0.1: lifts
     * recall@5 at every hop cap and lets the convergence cut fire
     * sooner (see SURVEY §5). */
   val entrySeedMod = 64
   // Hop CAP, not a constant cost: both beam loops stop early — the
   // batch BSP via the zero-new-scores Observation, the single-query
   // walk via the kth-best cut — so the cap only binds while the walk
-  // is still improving. Measured (graft.Tune NSWHOPS, sf0.1 n=2000,
+  // is still improving. Measured (sf0.1 n=2000,
   // degree 5): single-entry recall@5 was 0.36 @ 6 hops → 0.64 @ 8 →
   // 0.80 @ 10; with the multi-seed entry (entrySeedMod sample) the
   // same sweep reads 0.76 @ 4 → 0.88 @ 6 → 0.92 @ 8 and 10 → 1.00 @
@@ -136,7 +136,7 @@ object NswIndex {
   // bucket bit depth adapts to n (LshIndex.adaptiveBits, target ~64
   // rows/bucket) so within-bucket pair counts stay linear; multiple
   // independent tables + NN-descent refinement recover neighbors a
-  // single bucketing splits apart. Measured (graft.Tune, sf0.001 and
+  // single bucketing splits apart. Measured (sf0.001 and
   // sf0.01): 10 tables × 2 refine rounds → 0.94 edge agreement with
   // the exact build; 8 tables → 0.91 (clears the ≥0.9 bar with <1%
   // margin — the ~20% build saving is not worth the thin margin);
@@ -1110,7 +1110,7 @@ object NswIndex {
       .select(col("vec_id").as("node") +: col("code") +: metaCols.map(col): _*)
       .cache()
     // the codes table mirrors the corpus 1:1, so its footer count is
-    // the layout's n (the resolveNProbeAt discipline)
+    // the layout's n (the discipline of IvfIndex.cellCount)
     val n = codes.count()
     val edgeSel = undirected(spark.read.parquet(s"$path/edges")).cache()
     val out = adcSearch(spark, path, sub, queries, codes, edgeSel, pred,

@@ -294,8 +294,9 @@ class Round15Spec extends AnyFunSuite {
     IvfIndex.persist(IvfIndex.build(spark, all), path)
     val k0 = IvfIndex.cellCount(spark, path)
     assert(k0 == IvfIndex.defaultK.toLong)
-    assert(IvfIndex.resolveNProbeAt(spark, path, 0) == IvfIndex.defaultNProbe)
-    assert(IvfIndex.resolveNProbeAt(spark, path, 9) == 9)
+    // the auto sentinel's probe count resolves over the memoized count
+    def autoProbes = IvfIndex.autoNProbe(IvfIndex.cellCount(spark, path), IvfIndex.defaultNProbe)
+    assert(autoProbes == IvfIndex.defaultNProbe)
     // a re-persist under a different k must be observed (persist bumps)
     val old = spark.conf.getOption(IvfIndex.kConfKey)
     spark.conf.set(IvfIndex.kConfKey, "5")
@@ -306,5 +307,6 @@ class Round15Spec extends AnyFunSuite {
     }
     assert(IvfIndex.cellCount(spark, path) == 5L,
       "layout mutation must invalidate the memoized cell count")
+    assert(autoProbes == 4) // ⌈5 · 11/16⌉
   }
 }

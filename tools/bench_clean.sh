@@ -6,6 +6,10 @@
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_REPEAT=2 \
 #     bash tools/bench_clean.sh graft.Bench > bench_official1.json
 #
+# The graft.Bench line carries each key's layer profile (the `profile`
+# block: jobs, stages, executor time, shuffle, spill and call sites per
+# key), so the artifact explains its own walls.
+#
 # Any main (graft.Bench, graft.ScaleCurve) can be passed; args after
 # the main name are forwarded.
 set -euo pipefail
